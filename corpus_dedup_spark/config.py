@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -51,12 +51,6 @@ class DedupConfig:
     max_bucket_size: int = 2000     # LSH buckets above this are sampled + logged (skew cap)
     jaccard_threshold: float = 0.8  # exact-verify acceptance
 
-    # partitioning
-    shuffle_partitions: int = 32
-    salt_buckets: int = 8           # salting factor for hot-key repartitions
-
-    extra: dict = field(default_factory=dict, compare=False)
-
     def __post_init__(self):
         if self.mode not in ("sentence", "line", "paragraph", "document"):
             raise ValueError(f"bad mode {self.mode!r}")
@@ -66,9 +60,7 @@ class DedupConfig:
             raise ValueError(f"bad minhash_scheme {self.minhash_scheme!r}")
 
     def config_hash(self) -> str:
-        d = asdict(self)
-        d.pop("extra", None)
-        blob = json.dumps(d, sort_keys=True).encode()
+        blob = json.dumps(asdict(self), sort_keys=True).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
 
 

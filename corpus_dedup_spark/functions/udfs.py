@@ -51,31 +51,6 @@ def make_extract_units_udf(mode: str = "sentence", max_length: int = 0):
 
 
 # ---------------------------------------------------------------------------
-# H1 — FNV-1a unit hashes (parity counters / shingle base hashes)
-# ---------------------------------------------------------------------------
-
-@pandas_udf(LongType())
-def fnv1a_udf(units: pd.Series) -> pd.Series:
-    """binary → int64 (bit-reinterpreted uint64 FNV-1a, ref src/hash_utils.c:3-10)."""
-    vals = kernel.fnv1a_many([_as_bytes(u) for u in units])
-    return pd.Series(vals.view(np.int64))
-
-
-@pandas_udf(ArrayType(LongType()))
-def unit_hashes_udf(unit_lists: pd.Series) -> pd.Series:
-    """array<binary> → array<int64> of per-unit FNV-1a hashes (one flat vectorized pass)."""
-    lists = [v if v is not None else [] for v in unit_lists]
-    counts = [len(v) for v in lists]
-    flat = [_as_bytes(u) for v in lists for u in v]
-    hashes = kernel.fnv1a_many(flat).view(np.int64)
-    out, pos = [], 0
-    for c in counts:
-        out.append(hashes[pos:pos + c])
-        pos += c
-    return pd.Series(out)
-
-
-# ---------------------------------------------------------------------------
 # H5 — shingling + batched MinHash signatures (north-rule extension)
 # ---------------------------------------------------------------------------
 
@@ -293,37 +268,6 @@ def _shingle_sets_from_texts(raw: list[bytes], cfg: DedupConfig) -> list[np.ndar
         out.append(_doc_shingles(units, uh_all[pos:pos + c], cfg))
         pos += c
     return out
-
-
-def make_minhash_udf(cfg: DedupConfig):
-    """array<binary> units → array<int64> MinHash signature (num_perm values).
-
-    Identical unit lists ⇒ identical shingle sets ⇒ identical signatures, so exact
-    duplicates are caught with probability 1 (the reference's exact-dup semantics are a
-    floor under the LSH near-dup extension). Batched: one (S_total × P) numpy pass per
-    Arrow batch, multiply-shift permutations in native-wrapping uint64.
-    """
-    a_params, b_params = _perm_params(cfg)
-    num_perm = cfg.num_perm
-
-    @pandas_udf(ArrayType(LongType()))
-    def minhash_signature(unit_lists: pd.Series) -> pd.Series:
-        lists = [[_as_bytes(u) for u in (v if v is not None else [])]
-                 for v in unit_lists]
-        counts = [len(v) for v in lists]
-        flat = [u for v in lists for u in v]
-        uh = kernel.fnv1a_many(flat)
-        shingle_sets: list[np.ndarray] = []
-        pos = 0
-        # route through _doc_shingles so cfg.shingle_level is honored — signatures
-        # stay consistent with make_features_udf/make_shingle_set_udf shingle sets
-        for units, c in zip(lists, counts):
-            shingle_sets.append(_doc_shingles(units, uh[pos:pos + c], cfg))
-            pos += c
-        sig = _signatures(shingle_sets, a_params, b_params, cfg)
-        return pd.Series(list(sig))
-
-    return minhash_signature
 
 
 def make_features_udf(cfg: DedupConfig):

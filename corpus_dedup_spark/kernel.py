@@ -1572,62 +1572,3 @@ def extract_units_batch_flat_arrow(
     if not parts:
         return empty
     return _concat_flat_parts(parts)
-
-
-def combine_keepers_flat(
-    values: np.ndarray, offsets: np.ndarray, url_rank: np.ndarray,
-    unit_idx: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized partition-local keeper combine over flat unit buffers.
-
-    Groups units by exact content and returns, per group, the row index of its
-    first occurrence under the first-wins order ``(url_rank, unit_idx)`` plus
-    the occurrence count and the group's FNV-1a hash:
-    ``(sel, n_occ, fnv)`` where ``sel`` indexes the input rows.
-
-    This is the scale analog of the reference's per-file local set before the
-    global set (src/dedup.c:312-332, quirk Q2): everything a partition can
-    collapse is collapsed BEFORE the shuffle, fully in numpy (the earlier
-    per-row Python-dict variant was measured and rejected; this one is one
-    lexsort + one ragged adjacent-bytes compare per batch of equal lengths).
-
-    Soundness of the adjacent-equal grouping: rows are sorted by
-    ``(fnv, length, url_rank, unit_idx)``; a group boundary is declared
-    wherever (fnv, length) changes OR the adjacent rows' bytes differ. If two
-    DISTINCT contents collide on (fnv64, length) within one partition their
-    interleaved run fragments into several partial groups — that is
-    semantically safe because the downstream global ``groupBy(norm_unit)``
-    re-merges partials (min keeper, sum counts); fragmentation only costs a
-    little combining, never correctness. Within each fragment the first row in
-    sort order IS that fragment's (url_rank, unit_idx) minimum.
-    """
-    n = len(offsets) - 1
-    if n == 0:
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy(), np.empty(0, dtype=np.uint64)
-    lengths = np.asarray(offsets[1:], dtype=np.int64) - np.asarray(
-        offsets[:-1], dtype=np.int64)
-    h = fnv1a_flat(values, offsets)
-    order = np.lexsort((unit_idx, url_rank, lengths, h))
-    h_s = h[order]
-    len_s = lengths[order]
-    start_s = np.asarray(offsets[:-1], dtype=np.int64)[order]
-    same_key = np.zeros(n, dtype=bool)
-    same_key[1:] = (h_s[1:] == h_s[:-1]) & (len_s[1:] == len_s[:-1])
-    bytes_eq = same_key.copy()
-    cand = np.flatnonzero(same_key)
-    if cand.size:
-        vals = np.asarray(values, dtype=np.uint8)
-        for L in np.unique(len_s[cand]):
-            rows = cand[len_s[cand] == int(L)]
-            if L == 0:
-                continue  # zero-length units are filtered upstream (P1/P2)
-            span = np.arange(int(L), dtype=np.int64)
-            a = vals[start_s[rows][:, None] + span]
-            b = vals[start_s[rows - 1][:, None] + span]
-            bytes_eq[rows] = (a == b).all(axis=1)
-    new_group = ~bytes_eq
-    firsts = np.flatnonzero(new_group)
-    sel = order[firsts]
-    n_occ = np.diff(np.append(firsts, n)).astype(np.int64)
-    return sel, n_occ, h[sel]

@@ -9,11 +9,12 @@ over the corpus keys:
 1. **build** — one pass over the corpus keys: hash JVM-side
    (``F.xxhash64``), set k bits per key in a per-partition numpy bitmap
    inside ``mapInArrow`` (no per-row Python) over a stream coalesced to a
-   BOUNDED partition count, then OR the ≤32 partial bitmaps incrementally on
-   the driver (``toLocalIterator`` — O(bitmap) driver residency). The bitmap
-   is ~1.2 GB per 10⁹ keys at 1% fpp — small enough to broadcast, persist
-   beside the state table, and UPDATE INCREMENTALLY (OR in each batch's
-   bitmap) so steady-state runs never rescan the corpus to rebuild it.
+   BOUNDED partition count, then OR the ≤32 partial bitmaps executor-side
+   (``RDD.treeReduce``), so the driver receives ONE bitmap — O(bitmap)
+   driver residency. The bitmap is ~1.2 GB per 10⁹ keys at 1% fpp — small
+   enough to broadcast, persist beside the state table, and UPDATE
+   INCREMENTALLY (OR in each batch's bitmap) so steady-state runs never
+   rescan the corpus to rebuild it.
 2. **probe** — broadcast the bitmap; an Arrow-vectorized ``mapInPandas``
    flags each batch unit maybe-in-corpus / definitely-new. Definitely-new
    units (no false negatives, ever) BYPASS the anti-join entirely; only the

@@ -103,7 +103,9 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     """edges(src, dst) → labels(node, cluster_id) for every node appearing in edges.
 
     cluster_id = minimum node id in the component. Singleton nodes (no edges) are the
-    caller's concern (left-join labels back and coalesce to self).
+    caller's concern (left-join labels back and coalesce to self). Raises
+    ``RuntimeError`` if the star loop has not reached its fixpoint (two equal
+    round signatures) after ``max_iter`` rounds.
     """
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -120,12 +122,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         # label path already shed in r5 (00588d4). toArrow() ships the edge
         # list as two columnar buffers; the union-find needs plain Python
         # values either way, so to_pylist() is the only per-edge Python cost.
-        try:
-            tbl = e.toArrow()
-            pairs = list(zip(tbl.column(0).to_pylist(),
-                             tbl.column(1).to_pylist()))
-        except AttributeError:  # pre-4.0 Spark: fall back to Row collect
-            pairs = [(r[0], r[1]) for r in e.collect()]
+        tbl = e.toArrow()
+        pairs = list(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()))
         return _driver_union_find(pairs, e.sparkSession,
                                   e.schema["src"].dataType)
 
@@ -144,6 +142,12 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        # the star rounds' labels are only correct at the fixpoint; partial
+        # labels would silently split components
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            f"({n_edges} edges); raise max_iter")
 
     # converged edge set is a star forest: src points at its root (dst)
     roots = e.select(F.col("dst").alias("node")).distinct().withColumn(

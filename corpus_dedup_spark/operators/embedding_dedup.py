@@ -38,16 +38,16 @@ def brute_force_topk(vectors: DataFrame, probes: DataFrame, k: int = 10,
     use :func:`lsh_ann_topk`.
 
     r6 shape: ONE ``mapInArrow`` pass scores a whole Arrow batch against every
-    probe with batched numpy and emits only each task's LOCAL top-k per probe;
-    a window over the surviving ≤ k·n_tasks·n_probes rows picks the global
-    top-k. The r5 shape — BroadcastNestedLoopJoin feeding three interpreted
+    probe with batched numpy and emits only each Arrow batch's LOCAL top-k
+    per probe; a window over the surviving ≤ k·n_batches·n_probes rows picks
+    the global top-k. The r5 shape — BroadcastNestedLoopJoin feeding three interpreted
     higher-order ``aggregate`` lambdas per pair — evaluated ~6·dim scalar
     expression nodes per pair on an unpartitioned build side. Cosines are
     BIT-identical: the numpy loops reproduce the JVM aggregates'
     left-to-right IEEE-double summation order exactly (acc = (acc + x_d·y_d)
     in d order), so dot, both norms, and dot/(na·nb) round identically.
     Local top-k selection can never change the result: rank order
-    (cosine desc NaN-greatest, id asc) is replicated per task, and the global
+    (cosine desc NaN-greatest, id asc) is replicated per batch, and the global
     window re-ranks with the same key.
 
     Preconditions (r6, stricter than the r5 join): embeddings must be

@@ -23,31 +23,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import LongType
 
 from corpus_dedup_spark.config import DedupConfig
-from corpus_dedup_spark.functions.udfs import (_as_bytes, _shingle_hashes,
-                                               make_band_hashes_udf,
-                                               make_extract_units_udf,
-                                               make_minhash_udf)
-from corpus_dedup_spark import kernel
-
-
-def make_shingle_set_udf(cfg: DedupConfig):
-    """array<binary> units → array<int64> sorted distinct shingle hashes
-    (unit-level w-shingles or char n-grams per cfg.shingle_level)."""
-    from corpus_dedup_spark.functions.udfs import _doc_shingles
-
-    @pandas_udf(ArrayType(LongType()))
-    def shingle_set(unit_lists: pd.Series) -> pd.Series:
-        out = []
-        for v in unit_lists:
-            v = [bytes(u) for u in (v if v is not None else [])]
-            uh = kernel.fnv1a_many(v)
-            out.append(_doc_shingles(v, uh, cfg).view(np.int64))
-        return pd.Series(out)
-
-    return shingle_set
+from corpus_dedup_spark.functions.udfs import make_band_hashes_udf
 
 
 def doc_features(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
@@ -220,39 +199,28 @@ def verify_jaccard(pairs: DataFrame, features: DataFrame, cfg: DedupConfig,
     return out
 
 
-def near_dup_edges(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
-                   prepartition_features: bool | None = None,
+def near_dup_edges(pages: DataFrame, cfg: DedupConfig, id_col: str = "url"
                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Full LSH leg: returns (verified_pairs, features, dropped_buckets).
 
     verified_pairs = candidates with exact Jaccard ≥ cfg.jaccard_threshold.
 
-    ``prepartition_features``: hash-partition the persisted feature table on the id
-    so BOTH verify joins reuse the cached partitioning (alias-aware output
-    partitioning) instead of re-shuffling the shingle-blob table twice. Worth it
-    only when the verified-pair table is too big to broadcast (cluster scale);
-    when pairs broadcast — every local/bench shape — the extra full shuffle is
-    pure cost (measured +~2 s on 50k docs/32 cores, the r2 bench regression).
-    Default: cfg.extra["prepartition_features"] if set, else KEYED ON THE MASTER —
-    off for single-JVM ``local[N]``, on for any multi-executor master (yarn, k8s,
-    standalone, local-cluster), so the 100 TB sizing table's assumption (features
-    shuffled once, both verify joins co-located) holds by default on a real
-    cluster without a config flag.
+    The persisted feature table is hash-partitioned on the id when the master
+    runs real executors (yarn, k8s, standalone, local-cluster), so BOTH verify
+    joins reuse the cached partitioning (alias-aware output partitioning)
+    instead of re-shuffling the shingle-blob table twice — the 100 TB sizing
+    table's assumption. Single-JVM ``local[N]`` skips it: there the pairs
+    broadcast and the extra full shuffle is pure cost (measured +~2 s on 50k
+    docs/32 cores, the r2 bench regression).
     """
     # ONE fused UDF pass; features feed both the band explode and the verify
     # join — materialize once (the persisted row is just a shingle blob + 32
     # band hashes, the cheap-to-cache representation).
-    if prepartition_features is None:
-        explicit = cfg.extra.get("prepartition_features")
-        if explicit is not None:
-            prepartition_features = bool(explicit)
-        else:
-            master = pages.sparkSession.conf.get("spark.master", "local[*]")
-            # "local-cluster[...]" does NOT match: it runs real executor JVMs
-            is_single_jvm = master == "local" or master.startswith("local[")
-            prepartition_features = not is_single_jvm
+    master = pages.sparkSession.conf.get("spark.master", "local[*]")
+    # "local-cluster[...]" does NOT match: it runs real executor JVMs
+    is_single_jvm = master == "local" or master.startswith("local[")
     features = doc_band_features(pages, cfg, id_col)
-    if prepartition_features:
+    if not is_single_jvm:
         features = features.repartition(id_col)
     features = features.persist()
     bands_df = features.select(

@@ -67,9 +67,9 @@ def build_session(
         # zstd shuffle/broadcast codec: the keeper shuffle carries full
         # norm-unit bytes (quirk Q6 — content is the key), and web text
         # compresses ~2x better under zstd than lz4 for similar CPU.
-        # Alternated best-of-N A/B at 200k docs / 8 cores
-        # (scripts/exp_exact_conf.py, 6 JVMs per variant): lz4 7.12 s best /
-        # zstd 5.44-5.57 s (-22%). Compression fully OFF is another ~4%
+        # Alternated best-of-N A/B at 200k docs / 8 cores, 6 JVMs per
+        # variant (SCALE.md round-5 session-config table): lz4 7.12 s
+        # best / zstd 5.44-5.57 s (-22%). Compression fully OFF is another ~4%
         # on THIS host (no network, tmpfs shuffle) but indefensible on a
         # real cluster where shuffle crosses the wire — zstd is the
         # production choice and the bench config.

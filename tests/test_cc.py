@@ -1,6 +1,7 @@
 """Connected components: correctness on known graphs + convergence on chains."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from corpus_dedup_spark.operators.connected_components import (
     attach_labels, connected_components)
@@ -60,3 +61,12 @@ def test_driver_path_non_string_ids(spark):
     df = spark.createDataFrame([(2, 1), (3, 2), (10, 11)], ["src", "dst"])
     got = {r["node"]: r["cluster_id"] for r in connected_components(df).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_non_convergence_raises(spark):
+    # one star round cannot reach the fixpoint of a 12-node chain: the loop
+    # must refuse to return partial labels
+    edges = [(f"c{i:02d}", f"c{i+1:02d}") for i in range(11)]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, driver_max_edges=0, max_iter=1)

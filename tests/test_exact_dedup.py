@@ -42,22 +42,51 @@ def test_dedup_counts_and_verify(spark, pages):
     assert verify_no_duplicates(deduped) == 0
 
 
-def test_keeper_agg_equals_window_path(spark, pages):
-    """The map-side-combining groupBy keeper path must be bit-identical to the
-    row_number window semantics (same keeper rows, same counters)."""
-    from corpus_dedup_spark.operators.exact_dedup import (
-        dedup_keepers, dedup_stats, dedup_stats_from_keepers)
+def _keeper_rows(rows):
+    """(url, unit_idx, unit) sorted with NULL urls first, like Spark's asc."""
+    return sorted(((r["url"], r["unit_idx"], bytes(r["norm_unit"]))
+                   for r in rows),
+                  key=lambda t: (t[0] is not None, t[0] or "", t[1], t[2]))
 
-    units = explode_units(pages)
-    marked = mark_duplicates(units).cache()
-    keepers = dedup_keepers(units)
-    win_kept = sorted(
-        (r["url"], r["unit_idx"], bytes(r["norm_unit"]))
-        for r in marked.filter(~F.col("is_dup")).collect())
-    agg_kept = sorted(
-        (r["url"], r["unit_idx"], bytes(r["norm_unit"])) for r in keepers.collect())
-    assert win_kept == agg_kept
-    assert dedup_stats(marked).collect() == dedup_stats_from_keepers(keepers).collect()
+
+def test_keeper_agg_equals_window_path(spark, pages):
+    """The shipped keeper path (flat-Arrow extract + map-side-combining groupBy)
+    must be bit-identical to the row_number window semantics (same keeper rows,
+    same counters) — on the synthetic corpus, on unicode / empty / None /
+    heavy-dup texts spread over 4 partitions, and on NULL document ids."""
+    from corpus_dedup_spark.operators.exact_dedup import (
+        dedup_keepers, dedup_stats_from_keepers, explode_units_arrow)
+
+    edge_rows = [("a", "One sentence. Two  spaced!   Third?"),
+                 ("b", ""), ("c", None),
+                 ("d", "ünïcode first. ascii second."),
+                 ("e", "no terminator at all"),
+                 ("f", "One sentence. Two  spaced!   Third?"),
+                 ("g", "ünïcode first. One sentence.")]
+    null_id_rows = [("a", "Shared sentence. Only in a."),
+                    (None, "Shared sentence. Null doc extra!"),
+                    ("b", "Shared sentence. Null doc extra!"),
+                    (None, "Second null doc.")]
+    inputs = {
+        "pages": pages,
+        "edge_cases": spark.createDataFrame(
+            edge_rows, ["url", "text"]).repartition(4),
+        "null_ids": spark.createDataFrame(
+            null_id_rows, ["url", "text"]).repartition(2),
+    }
+    for name, df in inputs.items():
+        marked = mark_duplicates(explode_units(df)).cache()
+        keepers = dedup_keepers(explode_units_arrow(df))
+        win_kept = _keeper_rows(marked.filter(~F.col("is_dup")).collect())
+        agg_kept = _keeper_rows(keepers.collect())
+        assert win_kept == agg_kept, name
+        assert (dedup_stats(marked).collect()
+                == dedup_stats_from_keepers(keepers).collect()), name
+        if name == "null_ids":
+            keeper_of = {u: url for (url, _i, u) in agg_kept}
+            # min(struct) orders NULLS FIRST: the null id wins the tie
+            assert keeper_of[b"Shared sentence."] is None
+        marked.unpersist()
 
 
 def test_intra_doc_dup_counted(spark):
@@ -137,41 +166,6 @@ def test_dedup_against_corpus(spark):
     assert not (kset & cset)
 
 
-def test_local_combine_bit_identical(spark, pages):
-    """The fused extract+partition-local-combine keeper path (numpy
-    combine_keepers_flat inside one mapInArrow pass) must be bit-identical to
-    the explode+groupBy path — keepers, counts and the reassembled output."""
-    from corpus_dedup_spark.operators.exact_dedup import (
-        dedup_keepers, dedup_keepers_combined, explode_units_arrow)
-
-    base = dedup_keepers(explode_units_arrow(pages))
-    comb = dedup_keepers_combined(pages)
-    a = sorted((bytes(r["norm_unit"]), r["url"], r["unit_idx"], r["n_occ"])
-               for r in base.collect())
-    b = sorted((bytes(r["norm_unit"]), r["url"], r["unit_idx"], r["n_occ"])
-               for r in comb.collect())
-    assert a == b
-
-
-def test_local_combine_edge_cases(spark):
-    """Combine path on unicode / empty / None / heavy-dup inputs, multiple
-    partitions (so the per-partition flush runs more than once)."""
-    from corpus_dedup_spark.operators.exact_dedup import (
-        dedup_keepers, dedup_keepers_combined, explode_units_arrow)
-
-    rows = [("a", "One sentence. Two  spaced!   Third?"),
-            ("b", ""), ("c", None),
-            ("d", "ünïcode first. ascii second."),
-            ("e", "no terminator at all"),
-            ("f", "One sentence. Two  spaced!   Third?"),
-            ("g", "ünïcode first. One sentence.")]
-    # tie on the same unit at idx 0 across urls exercises keeper ordering
-    df = spark.createDataFrame(rows, ["url", "text"]).repartition(4)
-    a = sorted(map(tuple, dedup_keepers(explode_units_arrow(df)).collect()))
-    b = sorted(map(tuple, dedup_keepers_combined(df).collect()))
-    assert a == b
-
-
 def test_bucketed_corpus_state_join_no_corpus_exchange(spark, tmp_path):
     """The 100 TB incremental-dedup story, demonstrated: corpus state written
     with write_corpus_state (bucketBy norm_unit) makes the anti-join's corpus
@@ -226,97 +220,3 @@ def test_bucketed_corpus_state_join_no_corpus_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_local_combine_null_ids(spark):
-    """NULL document ids must not crash the combined path and must elect the
-    same keeper as Spark's min(struct) semantics (asc NULLS FIRST): the null
-    id wins any tie group it appears in."""
-    from corpus_dedup_spark.operators.exact_dedup import (
-        dedup_keepers, dedup_keepers_combined, explode_units_arrow)
-
-    rows = [("a", "Shared sentence. Only in a."),
-            (None, "Shared sentence. Null doc extra!"),
-            ("b", "Shared sentence. Null doc extra!"),
-            (None, "Second null doc.")]
-    df = spark.createDataFrame(rows, ["url", "text"]).repartition(2)
-    a = sorted(((bytes(r["norm_unit"]), r["url"], r["unit_idx"], r["n_occ"])
-                for r in dedup_keepers(explode_units_arrow(df)).collect()),
-               key=lambda t: (t[0], t[1] is not None, t[1] or "", t[2]))
-    b = sorted(((bytes(r["norm_unit"]), r["url"], r["unit_idx"], r["n_occ"])
-                for r in dedup_keepers_combined(df).collect()),
-               key=lambda t: (t[0], t[1] is not None, t[1] or "", t[2]))
-    assert a == b
-    keeper_of = {u: url for (u, url, _i, _n) in a}
-    assert keeper_of[b"Shared sentence."] is None  # NULLS FIRST wins the tie
-
-
-def test_combine_keepers_flat_fragmentation_safe():
-    """Partial-group fragmentation is allowed; totals must still be exact.
-    Simulate a hash collision by feeding equal-length distinct contents and
-    checking sum(n_occ) + keeper-min invariants hold per content."""
-    import numpy as np
-
-    units = [b"aaa", b"bbb", b"aaa", b"ccc", b"aaa", b"bbb"]
-    values = np.frombuffer(b"".join(units), dtype=np.uint8)
-    offsets = np.zeros(len(units) + 1, dtype=np.int64)
-    np.cumsum([len(u) for u in units], out=offsets[1:])
-    url_rank = np.array([3, 2, 1, 0, 0, 0], dtype=np.int64)
-    unit_idx = np.array([0, 0, 0, 0, 1, 2], dtype=np.int64)
-    sel, n_occ, fnv = kernel.combine_keepers_flat(
-        values, offsets, url_rank, unit_idx)
-    got = {}
-    for s, k in zip(sel.tolist(), n_occ.tolist()):
-        u = units[s]
-        cur = got.get(u, (None, 0))
-        key = (url_rank[s], unit_idx[s])
-        best = key if cur[0] is None else min(cur[0], key)
-        got[u] = (best, cur[1] + k)
-    # first-wins order is lexicographic (url_rank, unit_idx):
-    #   aaa occurs at (3,0),(1,0),(0,1) -> min (0,1); bbb at (2,0),(0,2) -> (0,2)
-    assert got[b"aaa"] == ((0, 1), 3)
-    assert got[b"bbb"] == ((0, 2), 2)
-    assert got[b"ccc"] == ((0, 0), 1)
-
-
-from hypothesis import given, settings
-from hypothesis import strategies as st
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(
-    st.tuples(st.binary(min_size=0, max_size=6).map(
-        lambda b: bytes(x % 3 + 97 for x in b)),  # tiny alphabet -> collisions
-        st.integers(0, 4), st.integers(0, 9)),
-    max_size=40))
-def test_combine_keepers_flat_matches_model(rows):
-    """Fuzz combine_keepers_flat against a naive per-content model: after
-    min-reducing keepers and summing counts across fragments, every content's
-    keeper is its true (url_rank, unit_idx) minimum and counts are exact."""
-    import numpy as np
-
-    units = [u for u, _, _ in rows]
-    values = np.frombuffer(b"".join(units), dtype=np.uint8)
-    offsets = np.zeros(len(units) + 1, dtype=np.int64)
-    np.cumsum([len(u) for u in units], out=offsets[1:])
-    url_rank = np.array([r for _, r, _ in rows], dtype=np.int64)
-    unit_idx = np.array([i for _, _, i in rows], dtype=np.int64)
-    sel, n_occ, fnv = kernel.combine_keepers_flat(
-        values, offsets, url_rank, unit_idx)
-    got: dict[bytes, tuple] = {}
-    for s, k in zip(sel.tolist(), n_occ.tolist()):
-        u = units[s]
-        cur = got.get(u)
-        key = (url_rank[s], unit_idx[s])
-        got[u] = (key if cur is None else min(cur[0], key),
-                  k if cur is None else cur[1] + k)
-    want: dict[bytes, tuple] = {}
-    for u, r, i in rows:
-        cur = want.get(u)
-        want[u] = ((r, i) if cur is None else min(cur[0], (r, i)),
-                   1 if cur is None else cur[1] + 1)
-    assert got == want
-    # fnv values must be each selected row's own hash
-    if len(sel):
-        expect = kernel.fnv1a_flat(values, offsets)[sel]
-        assert (fnv == expect).all()
