@@ -273,13 +273,13 @@ def _shingle_sets_from_texts(raw: list[bytes], cfg: DedupConfig) -> list[np.ndar
 def make_features_udf(cfg: DedupConfig):
     """FUSED text → struct(shingles: binary, sig: binary): extraction, shingling and
     MinHash in ONE Arrow round-trip (three chained pandas UDFs cost 3× serialization
-    of the unit arrays; the fused kernel is the near-dup hot path).
+    of the unit arrays). It serves the signature queries, which read ``sig``; the
+    near-dup leg runs make_band_features_udf, which emits band hashes instead.
 
     The hash sets are PACKED as little-endian uint64 byte blobs, not array<long>:
-    the features table is persisted once and read by both the banding and the
-    verify join, and block-manager caching of per-element arrays was measured at
-    ~20 s for 200k rows (serialization per element) vs ~1 s for two binary cells.
-    Shingle blobs are sorted-unique u64; sig blobs are num_perm u64."""
+    block-manager caching of per-element arrays was measured at ~20 s for 200k
+    rows (serialization per element) vs ~1 s for two binary cells. Shingle blobs
+    are sorted-unique u64; sig blobs are num_perm u64."""
     from pyspark.sql.types import StructField, StructType
 
     a_params, b_params = _perm_params(cfg)
@@ -325,8 +325,8 @@ def make_band_features_udf(cfg: DedupConfig):
     the 128-value signature never leaves the worker (only the ~32 band hashes and
     the packed shingle blob are emitted), so the persisted features table is
     ~2.5× smaller than with an explicit sig column and banding needs no second
-    UDF pass. Identical semantics to make_features_udf + make_band_hashes_udf
-    (shared kernels)."""
+    UDF pass. Shingles and signatures come from the same kernels as
+    make_features_udf."""
     from pyspark.sql.types import StructField, StructType
 
     a_params, b_params = _perm_params(cfg)
@@ -348,24 +348,11 @@ def make_band_features_udf(cfg: DedupConfig):
             "bands": list(bh),
         })
 
-    return band_features
-
-
-def make_band_hashes_udf(cfg: DedupConfig):
-    """binary signature blob (num_perm × u64) → array<int64> of lsh_bands band
-    hashes. One frombuffer+reshape per Arrow batch — no per-row parsing."""
-    bands, rows = cfg.lsh_bands, cfg.lsh_rows
-
-    @pandas_udf(ArrayType(LongType()))
-    def band_hashes(sigs: pd.Series) -> pd.Series:
-        if len(sigs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.frombuffer(
-            b"".join(bytes(s) for s in sigs), dtype=_U64
-        ).reshape(len(sigs), bands * rows)
-        return pd.Series(list(_band_hashes_from_sig_matrix(mat, bands, rows)))
-
-    return band_hashes
+    # Pure, but a deterministic UDF lets the size(bands) > 0 filter Spark
+    # infers for posexplode(bands) push below the projection and evaluate the
+    # whole pass a second time on an uncached input (two ArrowEvalPython
+    # nodes per branch in the physical plan); non-deterministic pins one.
+    return band_features.asNondeterministic()
 
 
 # ---------------------------------------------------------------------------

@@ -277,10 +277,6 @@ def _skip_closing_punct(data: bytes, i: int, n: int) -> int:
     return i
 
 
-def _is_ascii_alpha(b: int) -> bool:
-    return 97 <= (b | 0x20) <= 122
-
-
 def _should_block_split_on_dot(
     data: bytes, sentence_start: int, dot_pos: int, next_non_space: int, n: int
 ) -> bool:
@@ -1256,24 +1252,6 @@ def extract_units_batch(
                 units.append(u)
         out[gi] = units
     return out  # type: ignore[return-value]
-
-
-def _flatten_unit_lists(
-    unit_lists: list[list[bytes]],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Per-doc unit lists → flat (doc_idx, unit_idx, values, offsets) arrays."""
-    counts = np.fromiter((len(v) for v in unit_lists), dtype=np.int64,
-                         count=len(unit_lists))
-    n = int(counts.sum())
-    doc_idx = np.repeat(np.arange(len(unit_lists), dtype=np.int64), counts)
-    unit_idx = np.arange(n, dtype=np.int64) - np.repeat(
-        np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(np.int64), counts)
-    blob = b"".join(u for v in unit_lists for u in v)
-    lens = np.fromiter((len(u) for v in unit_lists for u in v), dtype=np.int64,
-                       count=n)
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    return doc_idx, unit_idx, np.frombuffer(blob, dtype=np.uint8), offsets
 
 
 def _run_mask(starts: np.ndarray, lens: np.ndarray, n: int) -> np.ndarray:

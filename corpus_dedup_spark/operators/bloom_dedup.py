@@ -173,16 +173,15 @@ def with_bloom_maybe(df: DataFrame, spark, bitmap: np.ndarray, m_bits: int,
 def bloom_incremental_dedup(new_pages: DataFrame, corpus_units: DataFrame,
                             n_items: int, fpp: float = 0.01,
                             mode: str = "sentence", max_length: int = 0,
-                            id_col: str = "url",
-                            persist_probed: bool = True
+                            id_col: str = "url"
                             ) -> Tuple[DataFrame, DataFrame]:
     """Exact incremental dedup with a Bloom bypass — bit-identical output to
     :func:`exact_dedup.dedup_against_corpus`, but only the maybe-in-corpus
     sliver of the batch (true dups + fpp of the rest) enters the anti-join.
 
-    ``persist_probed`` caches the probed unit stream because both branches
-    (bypass + verify) consume it; at driver-query scale recompute is also
-    fine, at 100 TB the cache is one batch's units, not the corpus.
+    The probed unit stream is persisted because both branches (bypass +
+    verify) consume it; at 100 TB the cache is one batch's units, not the
+    corpus.
     """
     from corpus_dedup_spark.operators.exact_dedup import (dedup_keepers,
                                                           explode_units_arrow,
@@ -192,9 +191,8 @@ def bloom_incremental_dedup(new_pages: DataFrame, corpus_units: DataFrame,
     bitmap, m_bits, k = build_bloom(corpus_units.select("norm_unit"),
                                     "norm_unit", n_items, fpp)
     units = explode_units_arrow(new_pages, mode, max_length, id_col=id_col)
-    probed = with_bloom_maybe(units, spark, bitmap, m_bits, k, "norm_unit")
-    if persist_probed:
-        probed = probed.persist()
+    probed = with_bloom_maybe(units, spark, bitmap, m_bits, k,
+                              "norm_unit").persist()
     definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe")
     confirmed_new = (
         probed.filter(F.col("_maybe")).drop("_maybe")

@@ -40,32 +40,22 @@ def ngram_array(text: Column, n: int = 2) -> Column:
 
 def boilerplate_ngram_stats(docs: DataFrame, n: int = 2, min_docs: int = 3,
                             id_col: str = "doc_id",
-                            text_col: str = "text",
-                            persist_grams: bool = False) -> DataFrame:
+                            text_col: str = "text") -> DataFrame:
     """Per-document boilerplate exposure: ``(id, n_grams, n_boiler)`` where
     ``n_boiler`` counts gram POSITIONS whose gram occurs in ``min_docs``+
     distinct documents. Downstream policy (drop grams, drop docs over a
     threshold, reweight) composes on top; this operator only measures.
 
     The collapsed ``(doc, gram, cnt)`` table feeds BOTH the boilerplate-set
-    branch and the per-doc measure branch. Without ``persist_grams`` the
-    explode+collapse is evaluated once per branch (column pruning makes the
-    two subplans non-identical, so exchange reuse cannot dedupe them): two
-    corpus scans, zero storage — the right default for a one-shot pass over
-    10^12 docs. ``persist_grams=True`` caches the collapsed table
-    (MEMORY_AND_DISK) so the corpus is scanned once, at the cost of
-    materializing ~the distinct per-doc gram stream; the caller owns
-    ``.unpersist()`` (the returned plan keeps a reference to the cached
-    child). Prefer it when the input is itself expensive to recompute
-    (a join/filter chain, not a bare table scan)."""
+    branch and the per-doc measure branch, and is evaluated once per branch
+    (column pruning makes the two subplans non-identical, so exchange reuse
+    cannot dedupe them): two corpus scans, zero storage — the right shape for
+    a one-shot pass over 10^12 docs."""
     grams = (
         docs.select(
             F.col(id_col).alias("_id"),
             F.explode(ngram_array(F.col(text_col), n)).alias("g"))
         .groupBy("_id", "g").agg(F.count("*").alias("_cnt")))
-    if persist_grams:
-        from pyspark import StorageLevel
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     boiler = (
         grams
         .groupBy("g").agg(F.count("*").alias("_docs"))

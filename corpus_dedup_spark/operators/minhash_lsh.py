@@ -1,8 +1,8 @@
 """MinHash + LSH near-duplicate detection (north-rule core: H5/H6/J4/J5).
 
-Pipeline: units → shingle-hash sets → batched MinHash signatures (vectorized numpy in
-pandas UDFs) → band hashes → explode → bucket self-join (candidates) → exact shingle-set
-Jaccard verify (never trust hashes alone — quirk Q6 generalized) → edges.
+Pipeline: units → shingle-hash sets → batched MinHash signatures → band hashes (one
+fused pandas UDF, vectorized numpy) → explode → bucket self-join (candidates) → exact
+shingle-set Jaccard verify (never trust hashes alone — quirk Q6 generalized) → edges.
 
 Scale design:
 - The bucket self-join shuffles on band_hash; hot buckets (boilerplate hosts) are CAPPED
@@ -26,7 +26,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 from corpus_dedup_spark.config import DedupConfig
-from corpus_dedup_spark.functions.udfs import make_band_hashes_udf
 
 
 def doc_features(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
@@ -47,14 +46,6 @@ def doc_features(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
     )
 
 
-def band_explode(features: DataFrame, cfg: DedupConfig, id_col: str = "url") -> DataFrame:
-    """(id, sig) → (id, band_id, band_hash): one row per LSH band."""
-    bands = make_band_hashes_udf(cfg)
-    return features.select(
-        id_col, F.posexplode(bands(F.col("sig"))).alias("band_id", "band_hash")
-    )
-
-
 def doc_band_features(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
                       text_col: str = "text") -> DataFrame:
     """pages → (id, shingles, bands): the near-dup pipeline's ONE feature pass
@@ -69,6 +60,12 @@ def doc_band_features(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
         .select(id_col, F.col("_f.shingles").alias("shingles"),
                 F.col("_f.bands").alias("bands"))
     )
+
+
+def band_explode(features: DataFrame, id_col: str = "url") -> DataFrame:
+    """(id, bands) → (id, band_id, band_hash): one row per LSH band."""
+    return features.select(
+        id_col, F.posexplode("bands").alias("band_id", "band_hash"))
 
 
 def candidate_pairs(bands_df: DataFrame, cfg: DedupConfig,
@@ -178,7 +175,7 @@ def verify_jaccard(pairs: DataFrame, features: DataFrame, cfg: DedupConfig,
 
     Set math runs in a vectorized pandas UDF over the packed u64 shingle blobs
     (candidate pairs are few after banding; the blob representation keeps the
-    persisted features table cheap to cache — see make_features_udf)."""
+    persisted features table cheap to cache — see make_band_features_udf)."""
     sh = features.select(F.col(id_col), F.col("shingles"))
     iu = _inter_union_udf()
     out = (
@@ -199,11 +196,26 @@ def verify_jaccard(pairs: DataFrame, features: DataFrame, cfg: DedupConfig,
     return out
 
 
+def edges_from_features(features: DataFrame, cfg: DedupConfig,
+                        id_col: str = "url") -> tuple[DataFrame, DataFrame]:
+    """Fused features (id, shingles, bands) → (verified_pairs, dropped_buckets):
+    band explode → bucket candidates → exact Jaccard, kept at
+    ≥ cfg.jaccard_threshold. ``features`` is read twice (banding and the verify
+    join), so callers hand in a persisted or checkpointed table."""
+    pairs, dropped = candidate_pairs(band_explode(features, id_col), cfg, id_col)
+    verified = verify_jaccard(pairs, features, cfg, id_col).filter(
+        F.col("jaccard") >= F.lit(cfg.jaccard_threshold)
+    )
+    return verified, dropped
+
+
 def near_dup_edges(pages: DataFrame, cfg: DedupConfig, id_col: str = "url"
                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Full LSH leg: returns (verified_pairs, features, dropped_buckets).
 
     verified_pairs = candidates with exact Jaccard ≥ cfg.jaccard_threshold.
+    ``features`` is persisted here and the caller owns ``features.unpersist()``
+    once the verified pairs have been consumed.
 
     The persisted feature table is hash-partitioned on the id when the master
     runs real executors (yarn, k8s, standalone, local-cluster), so BOTH verify
@@ -223,13 +235,7 @@ def near_dup_edges(pages: DataFrame, cfg: DedupConfig, id_col: str = "url"
     if not is_single_jvm:
         features = features.repartition(id_col)
     features = features.persist()
-    bands_df = features.select(
-        id_col, F.posexplode("bands").alias("band_id", "band_hash")
-    )
-    pairs, dropped = candidate_pairs(bands_df, cfg, id_col)
-    verified = verify_jaccard(pairs, features, cfg, id_col).filter(
-        F.col("jaccard") >= F.lit(cfg.jaccard_threshold)
-    )
+    verified, dropped = edges_from_features(features, cfg, id_col)
     return verified, features, dropped
 
 
@@ -240,10 +246,13 @@ def near_dup_clusters(pages: DataFrame, cfg: DedupConfig,
     from corpus_dedup_spark.operators.connected_components import (
         attach_labels, connected_components)
 
-    verified, _features, _dropped = near_dup_edges(pages, cfg, id_col)
+    verified, features, _dropped = near_dup_edges(pages, cfg, id_col)
     labels = connected_components(
         verified.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
+    # connected_components consumed the edges eagerly (localCheckpoint +
+    # count) and attach_labels reads only pages and labels
+    features.unpersist()
     return attach_labels(pages.select(id_col), labels, id_col).select(
         id_col, "cluster_id"
     )

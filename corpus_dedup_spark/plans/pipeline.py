@@ -8,9 +8,10 @@ append-only ``lineage`` table; swapping ``_write``/``_read`` for ``writeTo(...)`
 ``spark.table(...)`` is the only change needed).
 
 Resume contract: a stage directory with Spark's ``_SUCCESS`` marker AND a matching
-``config_hash`` in its stage metadata is reused; anything else is recomputed. Stage
-outputs are deterministic (keeper rule is orderBy(url, unit_idx); cluster ids are min —
-SURVEY quirk Q3 made deterministic), so resumed and fresh runs are byte-equivalent.
+``config_hash`` (and, for stages listed in ``STAGE_LAYOUTS``, a matching ``layout``) in
+its stage metadata is reused; anything else is recomputed. Stage outputs are
+deterministic (keeper rule is orderBy(url, unit_idx); cluster ids are min — SURVEY
+quirk Q3 made deterministic), so resumed and fresh runs are byte-equivalent.
 """
 
 from __future__ import annotations
@@ -26,6 +27,11 @@ from pyspark.sql import functions as F
 from corpus_dedup_spark.config import DedupConfig
 
 STAGES = ("units", "deduped", "features", "edges", "clusters")
+
+#: table layout per stage, recorded next to the config hash: a stage written in
+#: another layout is recomputed. ``features`` holds the fused near-dup pass's
+#: (id, shingles, bands); tables written before carried (id, shingles, sig).
+STAGE_LAYOUTS = {"features": "shingles,bands"}
 
 _ICEBERG_CATALOG_IMPLS = ("org.apache.iceberg.spark.SparkCatalog",
                           "org.apache.iceberg.spark.SparkSessionCatalog")
@@ -66,17 +72,9 @@ class DedupPipeline:
     """End-to-end: pages → exact unit dedup → near-dup LSH edges → clusters."""
 
     def __init__(self, spark: SparkSession, cfg: DedupConfig, work_dir: str,
-                 run_id: str | None = None, checkpoint: bool = True,
+                 run_id: str | None = None,
                  catalog: str | None = None, namespace: str = "corpus_dedup"):
-        """``checkpoint=False`` runs the identical dataflow with NO stage
-        writes/reads (stages compose lazily; nothing is resumable). Its purpose
-        is measurement: the checkpointed/compute-only wall-clock delta at two
-        cluster sizes isolates how much of the pipeline's scaling is bounded by
-        STORAGE bandwidth (which on a real cluster grows with the cluster —
-        object store + per-node NVMe — but on one box is a fixed memory bus)
-        versus the engine's own plan shape. Production runs keep the default.
-
-        ``catalog`` routes stage checkpoints through an ICEBERG catalog
+        """``catalog`` routes stage checkpoints through an ICEBERG catalog
         (``writeTo(...).createOrReplace()`` with the config hash as a table
         property; reads via ``spark.table``; per-partition lineage counters
         from the Iceberg ``.files`` metadata table — real manifest stats
@@ -89,7 +87,6 @@ class DedupPipeline:
         self.cfg = cfg
         self.work_dir = work_dir
         self.run_id = run_id or uuid.uuid4().hex[:12]
-        self.checkpoint = checkpoint
         self.catalog = (detect_iceberg_catalog(spark) if catalog == "auto"
                         else catalog)
         self.namespace = namespace
@@ -110,17 +107,23 @@ class DedupPipeline:
     def _table_name(self, stage: str) -> str:
         return f"{self.catalog}.{self.namespace}.{stage}"
 
+    def _stamp(self, stage: str) -> dict[str, str]:
+        """What a stage's metadata must carry for the stage to be reused: the
+        config hash, plus the table layout where ``STAGE_LAYOUTS`` names one."""
+        stamp = {"config_hash": self.cfg.config_hash()}
+        if stage in STAGE_LAYOUTS:
+            stamp["layout"] = STAGE_LAYOUTS[stage]
+        return stamp
+
     def stage_is_complete(self, stage: str) -> bool:
-        if not self.checkpoint:
-            return False
         if self.catalog:
             tbl = self._table_name(stage)
             if not self.spark.catalog.tableExists(tbl):
                 return False
             props = {r["key"]: r["value"] for r in
                      self.spark.sql(f"SHOW TBLPROPERTIES {tbl}").collect()}
-            return props.get("corpus_dedup.config_hash") == \
-                self.cfg.config_hash()
+            return all(props.get(f"corpus_dedup.{k}") == v
+                       for k, v in self._stamp(stage).items())
         d = self._stage_dir(stage)
         if not os.path.exists(os.path.join(d, "_SUCCESS")):
             return False
@@ -129,27 +132,19 @@ class DedupPipeline:
                 meta = json.load(f)
         except (OSError, json.JSONDecodeError):
             return False
-        return meta.get("config_hash") == self.cfg.config_hash()
+        return all(meta.get(k) == v for k, v in self._stamp(stage).items())
 
     def _write(self, df: DataFrame, stage: str) -> DataFrame:
-        if not self.checkpoint:
-            # multiply-consumed stages must still materialize once: features
-            # feeds band_explode AND the verify join-back; edges feeds CC's
-            # count gate AND its edge traversal. Everything else streams.
-            if stage in ("features", "edges"):
-                df = df.persist()
-            return df
         t0 = time.time()
         if self.catalog:
             tbl = self._table_name(stage)
             self.spark.sql(
                 f"CREATE NAMESPACE IF NOT EXISTS {self.catalog}."
                 f"{self.namespace}")
-            (df.writeTo(tbl).using("iceberg")
-             .tableProperty("corpus_dedup.config_hash",
-                            self.cfg.config_hash())
-             .tableProperty("corpus_dedup.run_id", self.run_id)
-             .createOrReplace())
+            w = df.writeTo(tbl).using("iceberg")
+            for k, v in {**self._stamp(stage), "run_id": self.run_id}.items():
+                w = w.tableProperty(f"corpus_dedup.{k}", v)
+            w.createOrReplace()
             out = self.spark.table(tbl)
             self._record_lineage_iceberg(
                 stage, wall_ms=int((time.time() - t0) * 1000))
@@ -159,7 +154,7 @@ class DedupPipeline:
         out = self.spark.read.parquet(d)
         self._record_lineage(out, stage, wall_ms=int((time.time() - t0) * 1000))
         with open(self._meta_path(stage), "w") as f:
-            json.dump({"config_hash": self.cfg.config_hash(),
+            json.dump({**self._stamp(stage),
                        "run_id": self.run_id,
                        "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                        }, f)
@@ -253,10 +248,8 @@ class DedupPipeline:
                                                               reassemble)
         from corpus_dedup_spark.operators.connected_components import (
             attach_labels, connected_components)
-        from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
-                                                              candidate_pairs,
-                                                              doc_features,
-                                                              verify_jaccard)
+        from corpus_dedup_spark.operators.minhash_lsh import (
+            doc_band_features, edges_from_features)
 
         out: dict[str, DataFrame] = {}
 
@@ -291,16 +284,13 @@ class DedupPipeline:
             out["features"] = self._read("features")
         else:
             out["features"] = self._write(
-                doc_features(pages, self.cfg, id_col), "features")
+                doc_band_features(pages, self.cfg, id_col), "features")
 
         if self.stage_is_complete("edges"):
             out["edges"] = self._read("edges")
         else:
-            pairs, _dropped = candidate_pairs(
-                band_explode(out["features"], self.cfg, id_col), self.cfg, id_col)
-            verified = verify_jaccard(pairs, out["features"], self.cfg, id_col)
-            edges = verified.filter(
-                F.col("jaccard") >= F.lit(self.cfg.jaccard_threshold))
+            edges, _dropped = edges_from_features(out["features"], self.cfg,
+                                                  id_col)
             out["edges"] = self._write(edges, "edges")
 
         if self.stage_is_complete("clusters"):

@@ -544,13 +544,13 @@ def q_lsh_exact_floor(spark, sf_dir):
     signature/banding/bucket-join regression drops rows and turns this red."""
     from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
                                                           candidate_pairs,
-                                                          doc_features)
+                                                          doc_band_features)
 
     cfg = DedupConfig()
     docs = _docs_augmented(spark, sf_dir)
-    feats = doc_features(docs, cfg, id_col="doc_id", text_col="text")
+    feats = doc_band_features(docs, cfg, id_col="doc_id", text_col="text")
     pairs, _dropped = candidate_pairs(
-        band_explode(feats, cfg, id_col="doc_id"), cfg, id_col="doc_id"
+        band_explode(feats, id_col="doc_id"), cfg, id_col="doc_id"
     )
     exact = (
         docs.alias("a")
@@ -797,12 +797,13 @@ def q_lsh_candidates(spark, sf_dir):
     vacuity), so copies are planted deterministically."""
     from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
                                                           candidate_pairs,
-                                                          doc_features)
+                                                          doc_band_features)
 
     cfg = DedupConfig()
-    feats = doc_features(_docs_augmented(spark, sf_dir), cfg, id_col="doc_id")
+    feats = doc_band_features(_docs_augmented(spark, sf_dir), cfg,
+                              id_col="doc_id")
     pairs, _dropped = candidate_pairs(
-        band_explode(feats, cfg, id_col="doc_id"), cfg, id_col="doc_id"
+        band_explode(feats, id_col="doc_id"), cfg, id_col="doc_id"
     )
     return pairs
 

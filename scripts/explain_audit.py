@@ -37,7 +37,7 @@ def main() -> None:
     from corpus_dedup_spark.operators.exact_dedup import (dedup_keepers,
                                                           explode_units)
     from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
-                                                          doc_features,
+                                                          doc_band_features,
                                                           verify_jaccard)
     from corpus_dedup_spark.operators.search import (build_fingerprint_index,
                                                      search)
@@ -103,8 +103,8 @@ def main() -> None:
     # explodes; hot buckets removed by a broadcast ANTI-join before any collect
     from corpus_dedup_spark.operators.minhash_lsh import candidate_pairs
 
-    feats = doc_features(pages, cfg)
-    pairs, _dropped = candidate_pairs(band_explode(feats, cfg), cfg)
+    feats = doc_band_features(pages, cfg)
+    pairs, _dropped = candidate_pairs(band_explode(feats), cfg)
     sections.append((
         "LSH candidate pairs (broadcast anti-join of hot buckets -> bucket "
         "collect_list -> streamed pair explode)",

@@ -215,18 +215,14 @@ def report(min_round: int = 0) -> None:
             "``dist/corpus_dedup_spark.zip`` and shipped through ``spark-submit",
             f"--py-files`` to a ``local-cluster`` master at {lo_s} and {hi_s} separate",
             "executor JVMs (executors import the engine from the zip, not the",
-            "checkout), running the full DedupPipeline in two modes on the same",
-            "input: **checkpointed** (stage parquet writes to tmpfs + lineage",
-            "rows — the resumable production shape) and **compute-only** (the",
-            "identical dataflow with no stage I/O, as a measurement probe:",
-            "the mode delta isolates stage-I/O cost). Measured result:",
-            "dropping checkpoints speeds the 1-core leg MORE than the",
-            "4-executor leg — stage I/O on tmpfs is not the scaling",
-            "bottleneck, and the production (checkpointed) shape is the one",
-            "that passes. tmpfs is the single-box analog of storage that",
-            "scales with the cluster (object store + per-node NVMe); on the",
-            "shared local DISK the same comparison measures only the disk,",
-            "calibrated at 0.26.",
+            "checkout), running the full checkpointed DedupPipeline (stage",
+            "parquet writes to tmpfs + lineage rows — the resumable production",
+            "shape) on the same input at both sizes. A since-removed",
+            "compute-only mode (the same dataflow without stage I/O) showed",
+            "that stage I/O on tmpfs is not the scaling bottleneck. tmpfs is",
+            "the single-box analog of storage that scales with the cluster",
+            "(object store + per-node NVMe); on the shared local DISK the",
+            "same comparison measures only the disk, calibrated at 0.26.",
             "Stage row counts are identical at both sizes. Legs run with",
             "in-process repeats (best wall): iteration 1 pays the",
             "per-executor JIT/codegen/Python-import constant — ~2x the wall",
@@ -236,14 +232,14 @@ def report(min_round: int = 0) -> None:
             "the core-ladder bench above). Best per level, alternating",
             "rounds:",
             "",
-            "| mode | docs | rounds | docs/s @" + str(lo_s) + " exec | docs/s @"
+            "| docs | rounds | docs/s @" + str(lo_s) + " exec | docs/s @"
             + str(hi_s) + " execs | eff (best-of-N/level) | eff (median "
             "paired round) |",
-            "|---|---|---|---|---|---|---|",
+            "|---|---|---|---|---|---|",
         ]
-        for mode, m in sm.get("modes", {}).items():
+        for n_docs, m in sm.get("sizes", {}).items():
             lines.append(
-                f"| {mode} | {m['n_docs']} | {m['n_rounds']} | "
+                f"| {n_docs} | {m['n_rounds']} | "
                 f"{m['pipeline_docs_per_sec'][str(lo_s)]} | "
                 f"{m['pipeline_docs_per_sec'][str(hi_s)]} | "
                 f"**{m['efficiency']}** "

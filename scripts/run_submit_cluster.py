@@ -31,12 +31,6 @@ N_EXECS = (1, 4)
 EXEC_CORES = 1
 EXEC_MEM_MB = 4096
 N_DOCS = int(os.environ.get("SUBMIT_N_DOCS", "100000"))
-# SUBMIT_MODE=compute runs the identical dataflow through the same
-# spark-submit/--py-files path but with NO stage checkpoints: the
-# checkpointed-vs-compute efficiency delta at the same two cluster sizes
-# isolates storage-bandwidth cost (fixed on one box, scales on a cluster)
-# from the engine's own plan scaling.
-MODE = os.environ.get("SUBMIT_MODE", "checkpointed")
 # in-process repeats per leg (best wall reported): iteration 1 pays the
 # per-executor JIT/codegen/Python-import constant that a production-length
 # run amortizes to ~0 — same warmup+best-of protocol as bench.py
@@ -108,8 +102,6 @@ def run(n_execs: int, pages_path: str) -> dict:
         os.path.join(REPO, "scripts", "submit_pipeline.py"),
         "--input", pages_path, "--work-dir", work,
     ]
-    if MODE == "compute":
-        cmd.append("--no-checkpoint")
     if REPEATS > 1:
         cmd += ["--repeats", str(REPEATS)]
     out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO,
@@ -149,22 +141,20 @@ def do_round(i: int, pages_path: str) -> None:
 
 
 def report(min_round: int = 0) -> None:
-    """Best-per-level per MODE (checkpointed vs compute-only), same protocol."""
-    runs = [json.loads(ln) for ln in open(RAW)
-            if json.loads(ln).get("round", 0) >= min_round]
+    """Best-per-level per corpus size, same protocol. Rows from the removed
+    compute-only mode (``"mode": "compute"``) in an older raw file are skipped."""
+    runs = [r for r in map(json.loads, open(RAW))
+            if r.get("round", 0) >= min_round
+            and r.get("mode", "checkpointed") == "checkpointed"]
     lo, hi = N_EXECS
     summary = {
         "harness": "spark-submit --py-files, local-cluster (separate executor "
                    "JVMs)",
         "n_execs": [lo, hi],
-        "modes": {},
+        "sizes": {},
     }
-    cells = sorted({(r.get("mode", "checkpointed"), r["n_docs"])
-                    for r in runs})
-    for mode, n_docs in cells:
-        mruns = [r for r in runs
-                 if r.get("mode", "checkpointed") == mode
-                 and r["n_docs"] == n_docs]
+    for n_docs in sorted({r["n_docs"] for r in runs}):
+        mruns = [r for r in runs if r["n_docs"] == n_docs]
         if not all(any(r["n_execs"] == n for r in mruns) for n in (lo, hi)):
             continue
         best = {n: max((r for r in mruns if r["n_execs"] == n),
@@ -184,8 +174,7 @@ def report(min_round: int = 0) -> None:
         med = (None if k == 0 else
                pair_effs[k // 2] if k % 2 else
                (pair_effs[k // 2 - 1] + pair_effs[k // 2]) / 2)
-        summary["modes"][f"{mode} @{n_docs}"] = {
-            "n_docs": n_docs,
+        summary["sizes"][str(n_docs)] = {
             "pipeline_docs_per_sec": {str(n): best[n]["docs_per_sec"]
                                       for n in best},
             "efficiency": round(eff, 3),

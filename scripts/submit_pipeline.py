@@ -27,10 +27,6 @@ def main() -> None:
     ap.add_argument("--max-length", type=int, default=0)
     ap.add_argument("--jaccard-threshold", type=float, default=0.8)
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--no-checkpoint", action="store_true",
-                    help="run the identical dataflow without stage writes/reads "
-                         "(measurement mode: isolates storage-bandwidth cost "
-                         "from engine scaling; not resumable)")
     ap.add_argument("--repeats", type=int, default=1,
                     help="run the pipeline N times in-process and report the "
                          "best wall (same warmup+best-of protocol as bench.py: "
@@ -56,30 +52,19 @@ def main() -> None:
     import shutil
     for i in range(max(1, args.repeats)):
         wd = args.work_dir if args.repeats <= 1 else f"{args.work_dir}_i{i}"
-        pipe = DedupPipeline(spark, cfg, wd, run_id=args.run_id,
-                             checkpoint=not args.no_checkpoint)
+        pipe = DedupPipeline(spark, cfg, wd, run_id=args.run_id)
         t0 = time.time()
         out = pipe.run(pages)
-        if args.no_checkpoint:
-            # force the two terminal results; everything upstream streams into
-            # them (features/edges are persisted once inside the pipeline)
-            stages = {"deduped": out["deduped"].count(),
-                      "clusters": out["clusters"].count()}
-            stages["edges"] = out["edges"].count()  # from cache, post-clusters
-        else:
-            # stage row counts from parquet footer metadata (the
-            # Iceberg-manifest-stats analog) — five df.count() jobs here were
-            # pure serial overhead, re-scanning tables the pipeline just wrote
-            stages = {name: pipe.stage_rows.get(name)
-                      if name in pipe.stage_rows
-                      else table_rows(pipe._stage_dir(name))
-                      for name in out}
+        # stage row counts from parquet footer metadata (the
+        # Iceberg-manifest-stats analog) — five df.count() jobs here were
+        # pure serial overhead, re-scanning tables the pipeline just wrote
+        stages = {name: pipe.stage_rows.get(name)
+                  if name in pipe.stage_rows
+                  else table_rows(pipe._stage_dir(name))
+                  for name in out}
         walls.append(time.time() - t0)
         if i < args.repeats - 1:
-            for df in out.values():
-                df.unpersist()
-            if not args.no_checkpoint:
-                shutil.rmtree(wd, ignore_errors=True)
+            shutil.rmtree(wd, ignore_errors=True)
     wall = min(walls)
 
     # per-stage walls from the lineage rows (written by _record_lineage)
@@ -95,7 +80,6 @@ def main() -> None:
 
     summary = {
         "run_id": pipe.run_id,
-        "mode": "compute" if args.no_checkpoint else "checkpointed",
         "config_hash": cfg.config_hash(),
         "stages": stages,
         "stage_wall_sec": {k: round(v, 2) for k, v in stage_walls.items()},

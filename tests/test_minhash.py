@@ -6,6 +6,7 @@ import pytest
 from corpus_dedup_spark.config import DedupConfig
 from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
                                                       candidate_pairs,
+                                                      doc_band_features,
                                                       doc_features,
                                                       near_dup_clusters,
                                                       near_dup_edges)
@@ -40,8 +41,9 @@ def test_exact_pairs_recall_is_one(spark, cfg, planted):
     """The reference's exact-dup semantics are the floor: recall on planted
     whole-doc-exact pairs must be 1.0 (identical sigs ⇒ same buckets ⇒ J=1)."""
     df, truth_pairs, _ = planted
-    verified, _, _ = near_dup_edges(df, cfg)
+    verified, feats, _ = near_dup_edges(df, cfg)
     got = {(r["id_a"], r["id_b"]) for r in verified.collect()}
+    feats.unpersist()
     exact = truth_pairs[truth_pairs["kind"] == "exact"]
     missed = [
         (a, b) for a, b in zip(exact["url_a"], exact["url_b"])
@@ -75,8 +77,9 @@ def test_near_pairs_recall(spark, cfg, planted):
             eligible.append((min(a, b), max(a, b)))
     if not eligible:
         pytest.skip("no near pairs above J=0.7")
-    verified, _, _ = near_dup_edges(df, cfg)
+    verified, feats, _ = near_dup_edges(df, cfg)
     got = {(r["id_a"], r["id_b"]) for r in verified.collect()}
+    feats.unpersist()
     hit = sum(p in got for p in eligible)
     recall = hit / len(eligible)
     assert recall >= 0.99, f"near-dup recall {recall:.3f} ({hit}/{len(eligible)})"
@@ -93,11 +96,30 @@ def test_clusters_cover_exact_groups(spark, cfg, planted):
         assert got[a] == got[b], (a, b)
 
 
+def test_clusters_release_feature_cache(spark, cfg, planted):
+    """near_dup_clusters persists its feature table for banding + verify and
+    releases it once connected_components has consumed the edges."""
+    df, _, _ = planted
+    near_dup_clusters(df, cfg).count()
+    level = doc_band_features(df, cfg).storageLevel
+    assert not (level.useMemory or level.useDisk), level
+
+
+def test_band_explode_evaluates_features_once(spark, cfg, planted):
+    """posexplode over the bands column makes Spark infer a size(bands) > 0
+    filter; on an uncached features frame it must not evaluate the fused
+    feature UDF a second time below the projection."""
+    df, _, _ = planted
+    bands = band_explode(doc_band_features(df, cfg))
+    plan = bands._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_skew_cap_drops_hot_buckets(spark, planted):
     df, _, _ = planted
     tiny_cap = DedupConfig(jaccard_threshold=0.35, max_bucket_size=2)
-    feats = doc_features(df, tiny_cap)
-    bands_df = band_explode(feats, tiny_cap)
+    feats = doc_band_features(df, tiny_cap)
+    bands_df = band_explode(feats)
     pairs, dropped = candidate_pairs(bands_df, tiny_cap)
     assert dropped.count() > 0  # exact-dup groups of 3+ exceed cap
     # pairs still computable and bounded

@@ -1,5 +1,6 @@
 """Checkpoint / lineage / resume semantics of the staged pipeline."""
 
+import json
 import os
 import shutil
 
@@ -7,6 +8,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from corpus_dedup_spark.config import DedupConfig
+from corpus_dedup_spark.operators.minhash_lsh import (doc_features,
+                                                      near_dup_clusters)
 from corpus_dedup_spark.plans.pipeline import STAGES, DedupPipeline
 from corpus_dedup_spark.sources.pages import pages_spark
 
@@ -28,6 +31,9 @@ def test_run_resume_and_invalidation(spark, pages, tmp_path):
     out1 = p1.run(pages)
     clusters1 = _cluster_map(out1)
     assert all(p1.stage_is_complete(s) for s in STAGES)
+    # the checkpointed stages run the operator's own near-dup dataflow
+    assert clusters1 == sorted(
+        (r["url"], r["cluster_id"]) for r in near_dup_clusters(pages, cfg).collect())
 
     # resume: nothing recomputed (stage files untouched)
     mtimes = {s: os.path.getmtime(os.path.join(wd, f"{s}.meta.json")) for s in STAGES}
@@ -49,6 +55,32 @@ def test_run_resume_and_invalidation(spark, pages, tmp_path):
     cfg2 = DedupConfig(jaccard_threshold=0.6)
     p4 = DedupPipeline(spark, cfg2, wd, run_id="r4")
     assert not any(p4.stage_is_complete(s) for s in STAGES)
+
+
+def test_stale_features_layout_recomputed(spark, pages, tmp_path):
+    """A features stage written in the older (id, shingles, sig) layout under
+    the same config hash is incomplete: the next run rewrites it and the
+    edges recomputed from it give the same clusters."""
+    cfg = DedupConfig(jaccard_threshold=0.5)
+    wd = str(tmp_path / "wd")
+    clusters1 = _cluster_map(DedupPipeline(spark, cfg, wd, run_id="r1").run(pages))
+
+    doc_features(pages, cfg).write.mode("overwrite").parquet(
+        os.path.join(wd, "features"))
+    meta_path = os.path.join(wd, "features.meta.json")
+    with open(meta_path, "w") as f:
+        json.dump({"config_hash": cfg.config_hash(), "run_id": "old",
+                   "written_at": "2026-01-01T00:00:00Z"}, f)
+    for s in ("edges", "clusters"):
+        shutil.rmtree(os.path.join(wd, s))
+
+    p2 = DedupPipeline(spark, cfg, wd, run_id="r2")
+    assert not p2.stage_is_complete("features")
+    out2 = p2.run(pages)
+    with open(meta_path) as f:
+        assert json.load(f)["run_id"] == "r2"
+    assert "bands" in out2["features"].columns
+    assert _cluster_map(out2) == clusters1
 
 
 def test_lineage_rows(spark, pages, tmp_path):
