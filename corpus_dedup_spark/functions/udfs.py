@@ -471,4 +471,8 @@ def make_window_fingerprints_udf(window: int, base: int = kernel.SEARCH_HASH_BAS
             out.append(w.view(np.int64))
         return pd.Series(out)
 
-    return window_fps
+    # Pure, but a deterministic UDF lets the size(fps) > 0 filter Spark
+    # infers for posexplode(fps) push below the projection and evaluate the
+    # whole pass a second time on an uncached input (two ArrowEvalPython
+    # nodes in the search probe plan); non-deterministic pins one.
+    return window_fps.asNondeterministic()

@@ -126,11 +126,12 @@ def shared_block_pairs(pages: DataFrame, window: int = 64, stride: int = 1,
         pages, window, id_col, text_col, seed=seed).persist()
     probe = idx if stride <= 1 else idx.filter(F.col("pos") % stride == 0)
 
-    # cap pathological fingerprints (site boilerplate) — same skew treatment as the
-    # LSH bucket cap (minhash_lsh.candidate_pairs): sizes via groupBy (map-side
+    # cap pathological fingerprints (site boilerplate): sizes via groupBy (map-side
     # partial combine), then a broadcast ANTI-join of the few hot fingerprints.
-    # A window count would sort-shuffle the entire docs×chars fingerprint index
-    # just to size groups.
+    # minhash_lsh.candidate_pairs sizes its buckets with a window instead, because
+    # its band rows are already hash-partitioned for the bucket aggregation; this
+    # index is not, so a window count here would add a sort-shuffle of the entire
+    # docs×chars fingerprint index just to size groups.
     hot = (
         idx.groupBy("whash").agg(F.count("*").alias("grp_n"))
         .filter(F.col("grp_n") > max_group)

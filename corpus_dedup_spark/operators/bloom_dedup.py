@@ -174,14 +174,15 @@ def bloom_incremental_dedup(new_pages: DataFrame, corpus_units: DataFrame,
                             n_items: int, fpp: float = 0.01,
                             mode: str = "sentence", max_length: int = 0,
                             id_col: str = "url"
-                            ) -> Tuple[DataFrame, DataFrame]:
+                            ) -> Tuple[DataFrame, DataFrame, DataFrame]:
     """Exact incremental dedup with a Bloom bypass — bit-identical output to
     :func:`exact_dedup.dedup_against_corpus`, but only the maybe-in-corpus
     sliver of the batch (true dups + fpp of the rest) enters the anti-join.
 
-    The probed unit stream is persisted because both branches (bypass +
-    verify) consume it; at 100 TB the cache is one batch's units, not the
-    corpus.
+    Returns (kept, deduped, probed). The probed unit stream is persisted
+    because both branches (bypass + verify) consume it; at 100 TB the cache
+    is one batch's units, not the corpus. The caller owns
+    ``probed.unpersist()`` once ``kept`` / ``deduped`` have been consumed.
     """
     from corpus_dedup_spark.operators.exact_dedup import (dedup_keepers,
                                                           explode_units_arrow,
@@ -200,4 +201,4 @@ def bloom_incremental_dedup(new_pages: DataFrame, corpus_units: DataFrame,
     )
     fresh = definitely_new.unionByName(confirmed_new)
     kept = dedup_keepers(fresh, id_col).drop("n_occ")
-    return kept, reassemble(kept, id_col)
+    return kept, reassemble(kept, id_col), probed

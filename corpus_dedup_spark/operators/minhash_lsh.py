@@ -1,17 +1,19 @@
 """MinHash + LSH near-duplicate detection (north-rule core: H5/H6/J4/J5).
 
 Pipeline: units → shingle-hash sets → batched MinHash signatures → band hashes (one
-fused pandas UDF, vectorized numpy) → explode → bucket self-join (candidates) → exact
-shingle-set Jaccard verify (never trust hashes alone — quirk Q6 generalized) → edges.
+fused pandas UDF, vectorized numpy) → explode → bucket member lists (candidates) →
+exact shingle-set Jaccard verify (never trust hashes alone — quirk Q6 generalized) →
+edges.
 
 Scale design:
-- The bucket self-join shuffles on band_hash; hot buckets (boilerplate hosts) are CAPPED
-  at cfg.max_bucket_size and logged, bounding the quadratic blowup; AQE skew-join splits
-  the rest.
+- Band rows cross ONE shuffle, hash-partitioned on (band_id, band_hash). A window
+  over those partitions sizes every bucket; buckets over cfg.max_bucket_size (hot
+  boilerplate hosts) are never collected and come back as the dropped frame, which
+  bounds the quadratic blowup and tells the caller what the cap cut.
 - Exact duplicates are guaranteed caught: identical unit lists ⇒ identical shingle sets
   ⇒ identical signatures ⇒ colliding in every band.
-- Verify joins candidates back to (sorted, distinct) shingle arrays and computes Jaccard
-  with JVM-side array_intersect/array_union sizes — no Python in the verify hot path.
+- Verify joins candidates back to the packed sorted-unique shingle blobs and counts
+  |A∩B| and |A∪B| for a whole Arrow batch in one vectorized numpy pass.
 - Default 32 bands × 4 rows: P(candidate | J=0.8) = 1-(1-0.8^4)^32 ≈ 1-5e-8 — recall
   headroom far beyond the ≥0.99 target.
 """
@@ -24,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
+from pyspark.sql.window import Window
 
 from corpus_dedup_spark.config import DedupConfig
 
@@ -70,43 +73,34 @@ def band_explode(features: DataFrame, id_col: str = "url") -> DataFrame:
 
 def candidate_pairs(bands_df: DataFrame, cfg: DedupConfig,
                     id_col: str = "url") -> tuple[DataFrame, DataFrame]:
-    """Bucket self-join → distinct candidate pairs (id_a < id_b).
+    """Bucket members → distinct candidate pairs (id_a < id_b).
 
     Returns (pairs, dropped_buckets): buckets larger than cfg.max_bucket_size are
-    excluded from the join and reported for lineage (skew cap — a 1M-member
-    boilerplate bucket would otherwise produce 10^12 pairs).
+    excluded from pair generation and returned as (band_id, band_hash, bucket_n),
+    one row per bucket (skew cap — a 1M-member boilerplate bucket would
+    otherwise produce 10^12 pairs).
     """
-    # r6: ONE band-row exchange, SHARED by sizing and bucket collection.
-    # Both aggregations key on (band_id, band_hash); hanging them off one
-    # explicit repartition makes their Exchange subtrees identical, so
-    # Spark's exchange reuse materializes the shuffle once and reads it
-    # twice (verified in the executed plan: a single shuffle write). The r5
-    # shape paid TWO band-row shuffle writes — the sizing groupBy's map-side
-    # partial combine only collapses intra-partition bucket repeats, and
-    # band hashes are high-entropy, so its "shuffle ~distinct buckets" was
-    # ~0.9x a full band-row shuffle here (measured: the shared exchange won
-    # every alternated pair at 500k docs/32c, best 4.38 s vs 4.83 s; the
-    # same holds at scale unless the corpus is so duplicate-heavy that the
-    # partial combine collapses the sizing stream by >2x, the write:read
-    # cost ratio). The cap SAFETY is unchanged: hot buckets are detected on
-    # count rows, the drop set broadcasts, and the anti-join filters the
-    # band stream BEFORE any bucket materialization — no reducer ever
-    # collects an uncapped bucket.
-    rep = bands_df.repartition("band_id", "band_hash")
-    sizes = rep.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bucket_n"))
-    dropped = sizes.filter(F.col("bucket_n") > cfg.max_bucket_size)
-    ok = rep.join(
-        F.broadcast(dropped.select("band_id", "band_hash")),
-        ["band_id", "band_hash"], "left_anti",
+    # ONE band-row exchange. The window sizes each bucket inside the partitions
+    # the repartition made (a sort, no second exchange), and the collect_list
+    # aggregation keys on the same columns, so it reuses that partitioning too.
+    # A bucket over the cap only passes through the window's spillable row
+    # buffer; no reducer ever collects it into a list. Singleton buckets are
+    # filtered before the aggregation (bucket_n counts NULL ids, so the
+    # size(ids) filter still guards the pair explode).
+    sized = bands_df.repartition("band_id", "band_hash").withColumn(
+        "bucket_n",
+        F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_hash")))
+    dropped = (
+        sized.filter(F.col("bucket_n") > cfg.max_bucket_size)
+        .select("band_id", "band_hash", "bucket_n").distinct()
     )
-    # Pair generation: ONE shuffle (groupBy bucket → sorted member list, bounded by
-    # max_bucket_size) + two streamed explodes — measured 2.2x faster than the
-    # bucket self-join, which shuffles every band row twice. The nested explode
-    # streams through whole-stage codegen, so per-task memory stays O(bucket), not
-    # O(bucket^2).
+    # Pair generation: bucket → sorted member list (bounded by max_bucket_size)
+    # + two streamed explodes — measured 2.2x faster than the bucket self-join.
+    # The nested explode streams through whole-stage codegen, so per-task
+    # memory stays O(bucket), not O(bucket^2).
     buckets = (
-        ok.groupBy("band_id", "band_hash")
+        sized.filter(F.col("bucket_n").between(2, cfg.max_bucket_size))
+        .groupBy("band_id", "band_hash")
         .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") >= 2)
     )

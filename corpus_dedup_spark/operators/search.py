@@ -87,7 +87,8 @@ def _raw_fingerprints_udf(window: int):
             out.append(w.view(np.int64))
         return pd.Series(out)
 
-    return window_fps
+    # pinned to one evaluation, as in make_window_fingerprints_udf
+    return window_fps.asNondeterministic()
 
 
 def search(index: DataFrame, pages: DataFrame, query: str, id_col: str = "url",

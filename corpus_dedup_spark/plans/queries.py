@@ -2267,8 +2267,12 @@ def q_bloom_incremental(spark, sf_dir):
     corpus_units = dedup_units(
         explode_units_arrow(corpus, id_col="doc_id"), id_col="doc_id"
     ).select("norm_unit")
-    _kept, deduped = bloom_incremental_dedup(
+    _kept, deduped, probed = bloom_incremental_dedup(
         new, corpus_units, n_items=4096, fpp=0.01, id_col="doc_id")
+    # the caller collects an unexecuted frame and never sees the probed
+    # stream: release it now, so both branches probe instead of leaving a
+    # cache behind
+    probed.unpersist()
     return deduped.select("doc_id", "dedup_text", "n_units")
 
 

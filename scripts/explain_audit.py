@@ -5,7 +5,8 @@ assert the properties that matter at 100 TB:
 - parquet scans carry PushedFilters / narrow ReadSchema (pruning works)
 - the dedup aggregation is HashAggregate with a partial_ pass before the exchange
   (map-side combine)
-- the LSH bucket join and verify join are shuffle/broadcast as intended
+- the LSH band rows cross one exchange and the verify join is shuffle/broadcast
+  as intended
 - WholeStageCodegen spans cover the JVM-side expressions
 
 Writes PLANS.md. Run: python scripts/explain_audit.py
@@ -99,19 +100,28 @@ def main() -> None:
         ["MapInArrow", "!Exchange", "!Window", "!Sort"],
     ))
 
-    # 3. LSH candidate generation: ONE groupBy into capped buckets + streamed
-    # explodes; hot buckets removed by a broadcast ANTI-join before any collect
+    # 3. LSH candidate generation: ONE band-row exchange; a window over its
+    # partitions sizes the buckets, hot ones are filtered out before the
+    # collect_list, and the pairs stream out of two explodes
     from corpus_dedup_spark.operators.minhash_lsh import candidate_pairs
 
     feats = doc_band_features(pages, cfg)
     pairs, _dropped = candidate_pairs(band_explode(feats), cfg)
+    lsh_plan = plan_of(pairs)
     sections.append((
-        "LSH candidate pairs (broadcast anti-join of hot buckets -> bucket "
-        "collect_list -> streamed pair explode)",
-        plan_of(pairs),
-        ["LeftAnti", "collect_list", "Generate", "explode(",
-         "hashpartitioning(band_id"],
+        "LSH candidate pairs (one band-row exchange -> window-sized buckets "
+        "-> capped collect_list -> streamed pair explode)",
+        lsh_plan,
+        ["Window", "collect_list", "Generate", "explode(",
+         "hashpartitioning(band_id", "!LeftAnti"],
     ))
+    # the detail block names each exchange's partitioning once
+    n_band_ex = len(re.findall(r"Arguments: hashpartitioning\(band_id",
+                               lsh_plan))
+    if n_band_ex != 1:
+        print(f"AUDIT FAILURE: expected exactly one band-row exchange in the "
+              f"LSH candidates plan, found {n_band_ex}")
+        sys.exit(1)
 
     # 4. verify join (pairs back to packed shingle blobs) — ONE Arrow-batched
     # UDF evaluation (a deterministic UDF lets the threshold filter push through
@@ -130,13 +140,19 @@ def main() -> None:
            else ["__DUP_UDF__"]),
     ))
 
-    # 5. search probe: fingerprint filter + substring verify
+    # 5. search probe: fingerprint filter + substring verify; on an uncached
+    # index the window_fps UDF runs once (the size(fps) > 0 filter inferred
+    # for posexplode must not re-evaluate it below the projection)
     idx = build_fingerprint_index(pages, window=10)
     hits = search(idx, pages, "table scan")
+    hits_plan = plan_of(hits)
     sections.append((
         "Rabin-Karp search probe (filter + verify; no full-text shuffle)",
-        plan_of(hits),
-        ["Filter"],
+        hits_plan,
+        ["Filter"]
+        + (["!__DUP_UDF__"]
+           if len(re.findall(r"\(\d+\) ArrowEvalPython", hits_plan)) == 1
+           else ["__DUP_UDF__"]),
     ))
 
     # 6. shared-block pairs: hot-fingerprint cap must be a broadcast anti-join,
@@ -293,9 +309,10 @@ def main() -> None:
     bcorpus = bdocs.filter("doc_id < 30")
     bcu = dedup_units(explode_units_arrow(bcorpus, id_col="doc_id"),
                       id_col="doc_id").select("norm_unit")
-    _bk, bdd = bloom_incremental_dedup(bdocs.filter("doc_id >= 30"), bcu,
-                                       n_items=4096, id_col="doc_id")
+    _bk, bdd, bprobed = bloom_incremental_dedup(
+        bdocs.filter("doc_id >= 30"), bcu, n_items=4096, id_col="doc_id")
     bplan = plan_of(bdd)
+    bprobed.unpersist()
     sections.append((
         "Bloom-prefiltered incremental dedup (broadcast-bitmap Arrow probe; "
         "definitely-new units bypass the anti-join; one LeftAnti for the "

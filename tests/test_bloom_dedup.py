@@ -81,9 +81,10 @@ class TestIncrementalDedup:
 
         new, cu = self._split(spark, sf_dir)
         _, plain = dedup_against_corpus(new, cu, id_col="doc_id")
-        _, bloomed = bloom_incremental_dedup(new, cu, n_items=4096,
-                                             id_col="doc_id")
+        _, bloomed, probed = bloom_incremental_dedup(new, cu, n_items=4096,
+                                                     id_col="doc_id")
         assert self._collect(bloomed) == self._collect(plain)
+        probed.unpersist()
 
     def test_exact_under_heavy_false_positives(self, spark, sf_dir):
         """Undersize the filter (64 bits for hundreds of keys → most probes
@@ -93,9 +94,23 @@ class TestIncrementalDedup:
 
         new, cu = self._split(spark, sf_dir)
         _, plain = dedup_against_corpus(new, cu, id_col="doc_id")
-        _, bloomed = bloom_incremental_dedup(new, cu, n_items=1, fpp=0.5,
-                                             id_col="doc_id")
+        _, bloomed, probed = bloom_incremental_dedup(new, cu, n_items=1,
+                                                     fpp=0.5, id_col="doc_id")
         assert self._collect(bloomed) == self._collect(plain)
+        probed.unpersist()
+
+    def test_caller_releases_probed_stream(self, spark, sf_dir):
+        """The persisted probed stream is handed back, so the caller can
+        release it: after unpersist, no cache of the call is left behind."""
+        new, cu = self._split(spark, sf_dir)
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        _, bloomed, probed = bloom_incremental_dedup(new, cu, n_items=4096,
+                                                     id_col="doc_id")
+        bloomed.count()
+        assert jsc.getPersistentRDDs().size() > before
+        probed.unpersist()
+        assert jsc.getPersistentRDDs().size() == before
 
     def test_both_routes_taken(self, spark, sf_dir):
         """Planted corpus copies go maybe; fresh docs go definitely-new."""

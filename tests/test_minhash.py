@@ -1,5 +1,7 @@
 """MinHash/LSH near-dup detection: exact-dup guarantee + planted-truth recall."""
 
+from itertools import combinations
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -115,12 +117,52 @@ def test_band_explode_evaluates_features_once(spark, cfg, planted):
     assert plan.count("ArrowEvalPython") == 1, plan
 
 
+def test_candidates_cross_one_band_exchange(spark, cfg, planted):
+    """Band rows are shuffled once: the window that sizes the buckets and the
+    collect_list that builds them share the (band_id, band_hash) exchange, and
+    no hot-bucket set is broadcast back against the band stream."""
+    df, _, _ = planted
+    verified, feats, _ = near_dup_edges(df, cfg)
+    verified.count()
+    plan = verified._jdf.queryExecution().executedPlan().toString()
+    feats.unpersist()
+    assert plan.count("hashpartitioning(band_id") == 1, plan
+    assert "ReusedExchange" not in plan, plan
+    assert "BroadcastHashJoin [band_id" not in plan, plan
+
+
 def test_skew_cap_drops_hot_buckets(spark, planted):
+    """Buckets over the cap come back one row each with their full size,
+    exactly a plain groupBy count above the cap; pairs come only from the
+    buckets at or under it. A NULL-id band row still counts toward its
+    bucket's size (count(*), not count(id))."""
     df, _, _ = planted
     tiny_cap = DedupConfig(jaccard_threshold=0.35, max_bucket_size=2)
-    feats = doc_band_features(df, tiny_cap)
-    bands_df = band_explode(feats)
+    bands_df = band_explode(doc_band_features(df, tiny_cap))
+    # a NULL-id row added to a 2-member bucket lifts it over the cap
+    two = (bands_df.groupBy("band_id", "band_hash").count()
+           .filter(F.col("count") == 2).orderBy("band_id", "band_hash")
+           .first())
+    bands_df = bands_df.unionByName(spark.createDataFrame(
+        [(None, two["band_id"], two["band_hash"])],
+        "url string, band_id int, band_hash bigint"))
     pairs, dropped = candidate_pairs(bands_df, tiny_cap)
-    assert dropped.count() > 0  # exact-dup groups of 3+ exceed cap
-    # pairs still computable and bounded
-    assert pairs.count() >= 0
+
+    ref = (bands_df.groupBy("band_id", "band_hash").agg(F.count("*").alias("n"))
+           .filter(F.col("n") > tiny_cap.max_bucket_size))
+    got_dropped = sorted(map(tuple, dropped.select(
+        "band_id", "band_hash", "bucket_n").collect()))
+    assert got_dropped == sorted(map(tuple, ref.collect()))
+    assert (two["band_id"], two["band_hash"], 3) in got_dropped
+    assert len(got_dropped) > 1  # exact-dup groups of 3+ exceed the cap too
+
+    members: dict = {}
+    for r in bands_df.collect():
+        members.setdefault((r["band_id"], r["band_hash"]), []).append(r["url"])
+    want = set()
+    for ids in members.values():
+        if len(ids) <= tiny_cap.max_bucket_size:
+            want |= set(combinations(sorted(i for i in ids if i is not None), 2))
+    got_pairs = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    assert got_pairs == want
+    assert got_pairs  # the capped run still pairs the buckets it keeps

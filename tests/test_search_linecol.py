@@ -38,3 +38,18 @@ def test_search_hits_carry_line_col(spark):
             for r in with_line_col(hits, pages).collect()}
     # 1-based line/col, newline-relative, like the reference's printf("%s:%zu:%zu")
     assert rows == {("u1", 2, 1), ("u1", 3, 7), ("u2", 1, 1)}
+
+
+@pytest.mark.parametrize("squash", [True, False])
+def test_search_probe_evaluates_fingerprints_once(spark, squash):
+    """posexplode over the fps column makes Spark infer a size(fps) > 0
+    filter; on an uncached index it must not run the window_fps UDF a
+    second time below the projection."""
+    pages = spark.createDataFrame(
+        [("u1", "first line\nneedle here"), ("u2", "needle at start")],
+        ["url", "text"])
+    idx = build_fingerprint_index(pages, window=6, squash=squash)
+    hits = search(idx, pages, "needle", squash=squash)
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert hits.count() == 2
