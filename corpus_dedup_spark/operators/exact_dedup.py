@@ -274,14 +274,52 @@ def run_exact_dedup_observed(pages: DataFrame, mode: str = "sentence",
     return reassemble(keepers_o.drop("n_occ"), id_col), obs
 
 
+def _unit_fingerprint(col):
+    """64-bit fingerprint of a unit's bytes for :func:`verify_no_duplicates`'
+    filter phase. A hook of its own so that a test can weaken it."""
+    return F.xxhash64(col)
+
+
+def _repeated_fingerprints(units: DataFrame) -> DataFrame:
+    """(_h) of every unit fingerprint seen more than once. The aggregation
+    combines map-side, so its exchange carries only (_h, count): two longs
+    per distinct fingerprint, no unit bytes."""
+    return (
+        units.select(_unit_fingerprint(F.col("norm_unit")).alias("_h"))
+        .groupBy("_h").count().filter(F.col("count") > 1).select("_h")
+    )
+
+
 def verify_no_duplicates(deduped_docs: DataFrame, mode: str = "sentence",
                          max_length: int = 0, id_col: str = "url") -> int:
     """The reference's ``verify`` mode (src/verify_mode.c:370-561): re-split the
-    engine's own output and count duplicate units. Returns that count (must be 0)."""
-    units = explode_units(deduped_docs, mode, max_length,
-                          text_col="dedup_text", id_col=id_col)
+    engine's own output and count duplicate units. Returns that count (must be 0).
+
+    Two phases, so that the common case shuffles fingerprints, not unit bytes,
+    while the count stays keyed on content (quirk Q6: the fingerprint filters,
+    the content decides):
+
+    1. Always: group the units on a 64-bit fingerprint of their bytes. Equal
+       units have equal fingerprints, so if no fingerprint repeats, no unit
+       does, and the answer is 0. One Spark action.
+    2. Only when some fingerprint repeats (a duplicate, or a real 64-bit
+       collision): keep the units whose fingerprint repeats (a ``left_semi``
+       join against phase 1's groups, which stay on the executors), group
+       them on their bytes and count ``sum(count - 1)``. Every copy of a
+       duplicated unit shares its fingerprint, so none is filtered out, and
+       distinct units that only collide fall into groups of one. This phase
+       runs the unit extraction again, on both sides of the join."""
+    units = explode_units_arrow(deduped_docs, mode, max_length,
+                                text_col="dedup_text",
+                                id_col=id_col).select("norm_unit")
+    repeated = _repeated_fingerprints(units)
+    if repeated.isEmpty():
+        return 0
     dup_count = (
-        units.groupBy("norm_unit").count().filter(F.col("count") > 1)
+        units.join(repeated,
+                   _unit_fingerprint(units["norm_unit"]) == repeated["_h"],
+                   "left_semi")
+        .groupBy("norm_unit").count().filter(F.col("count") > 1)
         .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).alias("dups"))
         .collect()[0]["dups"]
     )

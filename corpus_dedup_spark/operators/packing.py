@@ -37,6 +37,7 @@ order-preserving reassembly generalized to a global token axis.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -113,8 +114,10 @@ def global_token_offsets(docs: DataFrame, id_col: str = "doc_id",
     for row in sorted(subtotal_rows, key=lambda r: r["_lo"]):
         bases[row["_pid"]] = base
         base += row["_t"]
+    # from pandas, as in search.search_many: a LocalTableScan, no Python RDD
     base_df = spark.createDataFrame(
-        [(int(p), int(b)) for p, b in bases.items()], "_pid INT, _base BIGINT")
+        pd.DataFrame({"_pid": list(bases), "_base": list(bases.values())}),
+        "_pid INT, _base BIGINT")
     return (
         local.join(F.broadcast(base_df), "_pid")
         .select(id_col, "n_tokens",

@@ -121,9 +121,13 @@ def search_many(index: DataFrame, pages: DataFrame, queries: list[str],
         raise ValueError("all queries in a batch must share one codepoint length")
     qlen = qlens.pop()
     spark = index.sparkSession
+    # from pandas, not a list of tuples: the query table then plans as a
+    # LocalTableScan instead of a pickled Python RDD that Python workers
+    # must unpickle for every broadcast
     qdf = spark.createDataFrame(
-        [(q, query_hash(q)) for q in queries], ["query", "whash"]
-    )
+        pd.DataFrame({"query": queries,
+                      "whash": [query_hash(q) for q in queries]}),
+        "query string, whash long")
     text_expr = F.col(text_col)
     if squash:
         text_expr = F.translate(text_expr, "\n\r", "  ")

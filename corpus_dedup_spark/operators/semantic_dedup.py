@@ -52,6 +52,10 @@ def semantic_dedup(vectors: DataFrame, threshold: float,
     the expected cell at TARGET_CELL_SIZE and the per-cell join at ~10⁶
     pairs regardless of corpus size (the paper's K ≈ N/10⁴ shape). Passing
     an explicit K is honored unchanged (the oracle replay pins one).
+
+    That count runs eagerly: calling this function with ``n_centroids=None``
+    launches a Spark job over ``vectors`` at once, while the returned
+    DataFrame is being built, not when it is later acted on.
     """
     if n_centroids is None:
         n = vectors.count()

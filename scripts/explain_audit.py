@@ -5,6 +5,7 @@ assert the properties that matter at 100 TB:
 - parquet scans carry PushedFilters / narrow ReadSchema (pruning works)
 - the dedup aggregation is HashAggregate with a partial_ pass before the exchange
   (map-side combine)
+- exact verify shuffles 64-bit unit fingerprints and counts, never unit bytes
 - the LSH band rows cross one exchange and the verify join is shuffle/broadcast
   as intended
 - WholeStageCodegen spans cover the JVM-side expressions
@@ -99,6 +100,25 @@ def main() -> None:
         plan_of(explode_units_arrow(pages)),
         ["MapInArrow", "!Exchange", "!Window", "!Sort"],
     ))
+
+    # 2d. exact verify, always-run phase: the units are grouped on a 64-bit
+    # fingerprint, and only (_h, partial count) crosses the exchange — the
+    # unit bytes are grouped only in the rare phase where a fingerprint repeats
+    from corpus_dedup_spark.operators.exact_dedup import _repeated_fingerprints
+
+    verify_plan = plan_of(_repeated_fingerprints(explode_units_arrow(pages)))
+    sections.append((
+        "Exact verify (fingerprint exchange: 64-bit unit hashes and counts "
+        "cross the shuffle, no unit bytes)",
+        verify_plan,
+        ["MapInArrow", "partial_count", "hashpartitioning(_h"],
+    ))
+    verify_ex = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]",
+                           verify_plan)
+    if not verify_ex or any("norm_unit" in cols for cols in verify_ex):
+        print(f"AUDIT FAILURE: norm_unit crosses the exact-verify fingerprint "
+              f"exchange (exchange inputs: {verify_ex})")
+        sys.exit(1)
 
     # 3. LSH candidate generation: ONE band-row exchange; a window over its
     # partitions sizes the buckets, hot ones are filtered out before the

@@ -4,6 +4,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from corpus_dedup_spark import kernel
+from corpus_dedup_spark.operators import exact_dedup
 from corpus_dedup_spark.operators.exact_dedup import (
     dedup_stats, explode_units, mark_duplicates, reassemble, run_exact_dedup,
     verify_no_duplicates)
@@ -40,6 +41,51 @@ def test_dedup_counts_and_verify(spark, pages):
     assert keepers.groupBy("norm_unit").count().filter("count > 1").count() == 0
     # reference verify mode: re-dedup the output → zero duplicates
     assert verify_no_duplicates(deduped) == 0
+
+
+def _content_dup_count(docs):
+    """Duplicate units of ``docs.dedup_text``, grouped on the unit bytes."""
+    units = exact_dedup.explode_units_arrow(docs, text_col="dedup_text")
+    return (units.groupBy("norm_unit").count().filter("count > 1")
+            .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)))
+            .collect()[0][0])
+
+
+@pytest.mark.parametrize("weak_fingerprint", [False, True])
+def test_verify_counts_duplicates_by_content(spark, pages, monkeypatch,
+                                             weak_fingerprint):
+    """verify_no_duplicates is the content-keyed duplicate count: on the raw
+    texts (planted duplicates) and on the deduped output, also when the
+    fingerprint is cut to 2 bits so that distinct units collide."""
+    if weak_fingerprint:
+        monkeypatch.setattr(exact_dedup, "_unit_fingerprint",
+                            lambda c: F.xxhash64(c).bitwiseAND(3))
+    raw = pages.select("url", F.col("text").alias("dedup_text"))
+    want = _content_dup_count(raw)
+    assert want > 0
+    assert verify_no_duplicates(raw) == want
+    _keepers, deduped, _stats = run_exact_dedup(pages)
+    assert verify_no_duplicates(deduped) == 0
+
+
+def test_verify_fingerprint_exchange_carries_no_unit_bytes(spark, pages):
+    """The always-run phase of verify_no_duplicates shuffles 64-bit
+    fingerprints and counts only: every column into its Exchange is a long
+    (``#<id>L`` in the formatted plan), none is the unit bytes."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    units = exact_dedup.explode_units_arrow(pages)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        exact_dedup._repeated_fingerprints(units).explain("formatted")
+    inputs = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]",
+                        buf.getvalue())
+    assert inputs, buf.getvalue()
+    for cols in inputs:
+        assert "norm_unit" not in cols, cols
+        assert all(re.fullmatch(r"\w+#\d+L", c) for c in cols.split(", ")), cols
 
 
 def _keeper_rows(rows):

@@ -53,3 +53,22 @@ def test_search_probe_evaluates_fingerprints_once(spark, squash):
     plan = hits._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
     assert hits.count() == 2
+
+
+def test_search_many_query_table_is_local(spark):
+    """search_many's query table is a LocalTableScan, not a pickled Python
+    RDD (``Scan ExistingRDD``) that workers unpickle for each broadcast."""
+    import pandas as pd
+
+    from corpus_dedup_spark.operators.search import search_many
+
+    pages = spark.createDataFrame(pd.DataFrame({
+        "url": ["u1", "u2"],
+        "text": ["first line\nneedle here", "needle at start, then bobbin"]}))
+    idx = build_fingerprint_index(pages, window=6)
+    hits = search_many(idx, pages, ["needle", "bobbin"])
+    assert sorted(map(tuple, hits.collect())) == [
+        ("bobbin", "u2", 22), ("needle", "u1", 11), ("needle", "u2", 0)]
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
