@@ -290,40 +290,63 @@ def _repeated_fingerprints(units: DataFrame) -> DataFrame:
     )
 
 
+def _content_duplicates(units: DataFrame, repeated: DataFrame) -> DataFrame:
+    """One row, ``dups``: the duplicate units among ``units`` whose
+    fingerprint is in ``repeated``, counted on their bytes. ``repeated`` is
+    broadcast into a ``left_semi`` join, so the units cross no exchange on
+    their way to it; only the suspects that survive it are shuffled, on
+    ``norm_unit``."""
+    suspects = units.join(
+        F.broadcast(repeated),
+        _unit_fingerprint(units["norm_unit"]) == repeated["_h"], "left_semi")
+    return (
+        suspects.groupBy("norm_unit").count().filter(F.col("count") > 1)
+        .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).alias("dups"))
+    )
+
+
 def verify_no_duplicates(deduped_docs: DataFrame, mode: str = "sentence",
                          max_length: int = 0, id_col: str = "url") -> int:
     """The reference's ``verify`` mode (src/verify_mode.c:370-561): re-split the
     engine's own output and count duplicate units. Returns that count (must be 0).
 
-    Two phases, so that the common case shuffles fingerprints, not unit bytes,
-    while the count stays keyed on content (quirk Q6: the fingerprint filters,
-    the content decides):
+    Two phases, so that the units are shuffled as 64-bit fingerprints, not as
+    their bytes, while the count stays keyed on content (quirk Q6: the
+    fingerprint filters, the content decides):
 
-    1. Always: group the units on a 64-bit fingerprint of their bytes. Equal
-       units have equal fingerprints, so if no fingerprint repeats, no unit
-       does, and the answer is 0. One Spark action.
+    1. Always: group the units on a 64-bit fingerprint of their bytes and
+       cache the fingerprints that repeat. Equal units have equal
+       fingerprints, so if none repeats, no unit does, and the answer is 0.
     2. Only when some fingerprint repeats (a duplicate, or a real 64-bit
-       collision): keep the units whose fingerprint repeats (a ``left_semi``
-       join against phase 1's groups, which stay on the executors), group
-       them on their bytes and count ``sum(count - 1)``. Every copy of a
-       duplicated unit shares its fingerprint, so none is filtered out, and
-       distinct units that only collide fall into groups of one. This phase
-       runs the unit extraction again, on both sides of the join."""
+       collision): extract the units again, keep those whose fingerprint is
+       in the cached set (a ``left_semi`` join that Spark broadcasts the set
+       into; no Python code holds it), group them on their bytes and count
+       ``sum(count - 1)``. Every copy of a duplicated unit shares its
+       fingerprint, so none is filtered out, and distinct units that only
+       collide fall into groups of one. Phase 1 is not recomputed: the
+       broadcast reads the cache.
+
+    Phase 2 costs one more extraction, and its shuffle carries the bytes of
+    the suspects only. On a correct output the suspects are the 64-bit
+    collisions, about n^2 / 2^65 for n distinct units: none at 10^5 units,
+    but about 1.8·10^7 hashes (~150 MB of longs to broadcast) at the
+    2.6·10^13 units of SCALE.md, where phase 2 therefore runs every time. A
+    96- or 128-bit fingerprint would stop there after phase 1, but ships
+    1.5-2x the bytes in every run (SCALE.md, "exact verify"). An output
+    with repeated fingerprints of the order of 10^8 outgrows the broadcast
+    and fails instead of returning its count.
+
+    The cache is released before this returns."""
     units = explode_units_arrow(deduped_docs, mode, max_length,
                                 text_col="dedup_text",
                                 id_col=id_col).select("norm_unit")
-    repeated = _repeated_fingerprints(units)
-    if repeated.isEmpty():
-        return 0
-    dup_count = (
-        units.join(repeated,
-                   _unit_fingerprint(units["norm_unit"]) == repeated["_h"],
-                   "left_semi")
-        .groupBy("norm_unit").count().filter(F.col("count") > 1)
-        .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).alias("dups"))
-        .collect()[0]["dups"]
-    )
-    return int(dup_count)
+    repeated = _repeated_fingerprints(units).cache()
+    try:
+        if repeated.isEmpty():
+            return 0
+        return int(_content_duplicates(units, repeated).collect()[0]["dups"])
+    finally:
+        repeated.unpersist()
 
 
 def write_corpus_state(corpus_units: DataFrame, table: str,

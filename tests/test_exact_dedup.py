@@ -1,5 +1,9 @@
 """End-to-end exact dedup on synthetic pages + driver documents table."""
 
+import io
+import re
+from contextlib import redirect_stdout
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -60,32 +64,70 @@ def test_verify_counts_duplicates_by_content(spark, pages, monkeypatch,
     if weak_fingerprint:
         monkeypatch.setattr(exact_dedup, "_unit_fingerprint",
                             lambda c: F.xxhash64(c).bitwiseAND(3))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     raw = pages.select("url", F.col("text").alias("dedup_text"))
     want = _content_dup_count(raw)
     assert want > 0
     assert verify_no_duplicates(raw) == want
     _keepers, deduped, _stats = run_exact_dedup(pages)
     assert verify_no_duplicates(deduped) == 0
+    # the cached repeated fingerprints are released on either path
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def _formatted_plan(df):
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def _exchange_inputs(plan):
+    """(node id, input columns) of every Exchange in a formatted plan."""
+    return [(int(i), cols) for i, cols in re.findall(
+        r"\((\d+)\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)]
 
 
 def test_verify_fingerprint_exchange_carries_no_unit_bytes(spark, pages):
     """The always-run phase of verify_no_duplicates shuffles 64-bit
     fingerprints and counts only: every column into its Exchange is a long
     (``#<id>L`` in the formatted plan), none is the unit bytes."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     units = exact_dedup.explode_units_arrow(pages)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        exact_dedup._repeated_fingerprints(units).explain("formatted")
-    inputs = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]",
-                        buf.getvalue())
-    assert inputs, buf.getvalue()
-    for cols in inputs:
+    plan = _formatted_plan(exact_dedup._repeated_fingerprints(units))
+    inputs = _exchange_inputs(plan)
+    assert inputs, plan
+    for _, cols in inputs:
         assert "norm_unit" not in cols, cols
         assert all(re.fullmatch(r"\w+#\d+L", c) for c in cols.split(", ")), cols
+
+
+def test_verify_repeat_phase_shuffles_no_unit_bytes_before_join(spark, pages):
+    """The repeat phase broadcasts the repeated fingerprints into its
+    left_semi join, so the units reach the join through no Exchange: the
+    unit bytes are shuffled only above it, as the suspects that survive it.
+    The formatted plan numbers a node after all of its children, so every
+    node under the join has a smaller id than the join. Size-based broadcast
+    is switched off, so that only the hint can make the join a broadcast."""
+    raw = pages.select("url", F.col("text").alias("dedup_text"))
+    units = exact_dedup.explode_units_arrow(
+        raw, text_col="dedup_text").select("norm_unit")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = _formatted_plan(exact_dedup._content_duplicates(
+            units, exact_dedup._repeated_fingerprints(units)))
+    finally:
+        spark.conf.set(key, threshold)
+    joins = re.findall(r"\((\d+)\) (\w+)\nLeft keys.*\nRight keys.*\n"
+                       r"Join type: (\w+)", plan)
+    assert [(kind, how) for _, kind, how in joins] == [
+        ("BroadcastHashJoin", "LeftSemi")], plan
+    join_id = int(joins[0][0])
+    byte_exchanges = [i for i, cols in _exchange_inputs(plan)
+                      if "norm_unit" in cols]
+    assert byte_exchanges, plan
+    assert all(i > join_id for i in byte_exchanges), plan
 
 
 def _keeper_rows(rows):
