@@ -106,11 +106,15 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     caller's concern (left-join labels back and coalesce to self). Raises
     ``RuntimeError`` if the star loop has not reached its fixpoint (two equal
     round signatures) after ``max_iter`` rounds.
+
+    Duplicate and reversed edges are not removed up front (that would
+    shuffle the whole edge list once more): the union-find ignores them and
+    ``_small_star`` ends each round with a distinct. So ``n_edges``, which
+    picks the path against ``driver_max_edges``, counts duplicate rows too.
     """
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src") != F.col("dst"))
-        .distinct()
         .localCheckpoint()
     )
     n_edges = e.count()

@@ -10,6 +10,10 @@ Scale design:
   over those partitions sizes every bucket; buckets over cfg.max_bucket_size (hot
   boilerplate hosts) are never collected and come back as the dropped frame, which
   bounds the quadratic blowup and tells the caller what the cap cut.
+- The key routes, the url decides (quirk Q6). Band rows and candidate pairs carry
+  an 8-byte xxhash64 of the url, not the url. The verify joins map each key back
+  to every url that carries it and score each url pair exactly, so a colliding key
+  costs verify work but can never make a wrong edge or lose one.
 - Exact duplicates are guaranteed caught: identical unit lists ⇒ identical shingle sets
   ⇒ identical signatures ⇒ colliding in every band.
 - Verify joins candidates back to the packed sorted-unique shingle blobs and counts
@@ -163,20 +167,12 @@ def _inter_union_udf():
     return inter_union.asNondeterministic()
 
 
-def verify_jaccard(pairs: DataFrame, features: DataFrame, cfg: DedupConfig,
-                   id_col: str = "url") -> DataFrame:
-    """Exact shingle-set Jaccard for every candidate pair (J5).
-
-    Set math runs in a vectorized pandas UDF over the packed u64 shingle blobs
-    (candidate pairs are few after banding; the blob representation keeps the
-    persisted features table cheap to cache — see make_band_features_udf)."""
-    sh = features.select(F.col(id_col), F.col("shingles"))
+def _scored(joined: DataFrame) -> DataFrame:
+    """(id_a, id_b, sh_a, sh_b) → (id_a, id_b, n_inter, n_union, jaccard): the
+    scoring tail both verify paths share, one inter_union evaluation."""
     iu = _inter_union_udf()
-    out = (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a")
-                     .withColumnRenamed("shingles", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b")
-                .withColumnRenamed("shingles", "sh_b"), "id_b")
+    return (
+        joined
         .withColumn("_iu", iu(F.col("sh_a"), F.col("sh_b")))
         .withColumn("n_inter", F.col("_iu.n_inter"))
         .withColumn("n_union", F.col("_iu.n_union"))
@@ -187,7 +183,53 @@ def verify_jaccard(pairs: DataFrame, features: DataFrame, cfg: DedupConfig,
         )
         .select("id_a", "id_b", "n_inter", "n_union", "jaccard")
     )
-    return out
+
+
+def verify_jaccard(pairs: DataFrame, features: DataFrame, cfg: DedupConfig,
+                   id_col: str = "url") -> DataFrame:
+    """Exact shingle-set Jaccard for every candidate pair (J5).
+
+    Set math runs in a vectorized pandas UDF over the packed u64 shingle blobs
+    (candidate pairs are few after banding; the blob representation keeps the
+    persisted features table cheap to cache — see make_band_features_udf)."""
+    sh = features.select(F.col(id_col), F.col("shingles"))
+    return _scored(
+        pairs.join(sh.withColumnRenamed(id_col, "id_a")
+                     .withColumnRenamed("shingles", "sh_a"), "id_a")
+        .join(sh.withColumnRenamed(id_col, "id_b")
+                .withColumnRenamed("shingles", "sh_b"), "id_b"))
+
+
+def _doc_key(col):
+    """64-bit key of a document id, the near-dup leg's band and pair routing
+    key (:func:`edges_from_features`). A hook of its own so that a test can
+    weaken it."""
+    return F.xxhash64(col)
+
+
+def _verify_keyed(pairs: DataFrame, features: DataFrame,
+                  id_col: str) -> DataFrame:
+    """Key pairs (id_a, id_b) → scored id pairs. Each key maps back to every
+    (id, shingles) row that carries it, so a colliding key expands to all of
+    its ids; the ids then decide. Two keys that differ can only give ids that
+    differ, each id pair once. One key paired with itself gives every pair of
+    its ids in both orders, and itself with itself, so only id_a < id_b is
+    kept there. A NULL id takes no part, as in :func:`candidate_pairs`. The
+    ids are oriented least/greatest; the counts are symmetric, so the blobs
+    need no swap."""
+    def side(s: str) -> DataFrame:
+        return features.filter(F.col(id_col).isNotNull()).select(
+            _doc_key(F.col(id_col)).alias(f"k_{s}"),
+            F.col(id_col).alias(f"u_{s}"), F.col("shingles").alias(f"sh_{s}"))
+
+    joined = (
+        pairs.select(F.col("id_a").alias("k_a"), F.col("id_b").alias("k_b"))
+        .join(side("a"), "k_a").join(side("b"), "k_b")
+        .filter((F.col("k_a") != F.col("k_b")) | (F.col("u_a") < F.col("u_b")))
+    )
+    return _scored(joined.select(
+        F.least("u_a", "u_b").alias("id_a"),
+        F.greatest("u_a", "u_b").alias("id_b"), "sh_a", "sh_b"))
 
 
 def edges_from_features(features: DataFrame, cfg: DedupConfig,
@@ -195,9 +237,17 @@ def edges_from_features(features: DataFrame, cfg: DedupConfig,
     """Fused features (id, shingles, bands) → (verified_pairs, dropped_buckets):
     band explode → bucket candidates → exact Jaccard, kept at
     ≥ cfg.jaccard_threshold. ``features`` is read twice (banding and the verify
-    join), so callers hand in a persisted or checkpointed table."""
-    pairs, dropped = candidate_pairs(band_explode(features, id_col), cfg, id_col)
-    verified = verify_jaccard(pairs, features, cfg, id_col).filter(
+    join), so callers hand in a persisted or checkpointed table.
+
+    The band and pair exchanges carry a 64-bit key of the id (:func:`_doc_key`),
+    not the id, so band rows are (key, band_id, band_hash) and pairs two longs.
+    The key routes, the id decides (quirk Q6): the verify joins map each key
+    back to all of its ids and score every id pair exactly, so a key collision
+    can cost verify work but never a wrong or missing edge. The key is computed
+    on the fly; the features layout does not carry it."""
+    keyed = features.select(_doc_key(F.col(id_col)).alias("_k"), "bands")
+    pairs, dropped = candidate_pairs(band_explode(keyed, "_k"), cfg, "_k")
+    verified = _verify_keyed(pairs, features, id_col).filter(
         F.col("jaccard") >= F.lit(cfg.jaccard_threshold)
     )
     return verified, dropped
@@ -211,13 +261,14 @@ def near_dup_edges(pages: DataFrame, cfg: DedupConfig, id_col: str = "url"
     ``features`` is persisted here and the caller owns ``features.unpersist()``
     once the verified pairs have been consumed.
 
-    The persisted feature table is hash-partitioned on the id when the master
-    runs real executors (yarn, k8s, standalone, local-cluster), so BOTH verify
-    joins reuse the cached partitioning (alias-aware output partitioning)
-    instead of re-shuffling the shingle-blob table twice — the 100 TB sizing
-    table's assumption. Single-JVM ``local[N]`` skips it: there the pairs
-    broadcast and the extra full shuffle is pure cost (measured +~2 s on 50k
-    docs/32 cores, the r2 bench regression).
+    The persisted feature table is hash-partitioned on the id's key
+    (:func:`_doc_key`) when the master runs real executors (yarn, k8s,
+    standalone, local-cluster), so BOTH keyed verify joins can reuse the
+    cached partitioning (alias-aware output partitioning) instead of
+    re-shuffling the shingle-blob table twice — the 100 TB sizing table's
+    assumption. Single-JVM ``local[N]`` skips it: there the pairs broadcast
+    and the extra full shuffle is pure cost (measured +~2 s on 50k docs/32
+    cores, the r2 bench regression).
     """
     # ONE fused UDF pass; features feed both the band explode and the verify
     # join — materialize once (the persisted row is just a shingle blob + 32
@@ -227,7 +278,7 @@ def near_dup_edges(pages: DataFrame, cfg: DedupConfig, id_col: str = "url"
     is_single_jvm = master == "local" or master.startswith("local[")
     features = doc_band_features(pages, cfg, id_col)
     if not is_single_jvm:
-        features = features.repartition(id_col)
+        features = features.repartition(_doc_key(F.col(id_col)))
     features = features.persist()
     verified, dropped = edges_from_features(features, cfg, id_col)
     return verified, features, dropped

@@ -6,15 +6,19 @@ assert the properties that matter at 100 TB:
 - the dedup aggregation is HashAggregate with a partial_ pass before the exchange
   (map-side combine)
 - exact verify shuffles 64-bit unit fingerprints and counts, never unit bytes
-- the LSH band rows cross one exchange and the verify join is shuffle/broadcast
-  as intended
+- the shipped LSH edges plan sends band rows across one exchange keyed on a
+  64-bit url key, and evaluates the inter/union UDF once
 - WholeStageCodegen spans cover the JVM-side expressions
 
-Writes PLANS.md. Run: python scripts/explain_audit.py
+Run: python scripts/explain_audit.py [--write]. Exits non-zero if a check
+fails. ``--write`` also rewrites PLANS.md, keeping verbatim every section whose
+plan differs only in expression and plan ids, so a change to one plan shows as
+a change to one section.
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import re
@@ -32,15 +36,60 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def _masked(text: str) -> str:
+    """``text`` with the ids that change from run to run blanked, and line
+    ends as a reread file has them."""
+    text = re.sub(r"\r\n?", "\n", text)
+    text = re.sub(r"#\d+", "#", text)
+    text = re.sub(r"plan_id=\d+", "plan_id=", text)
+    text = re.sub(r"RDD\[\d+\]", "RDD[]", text)
+    return re.sub(r"plans_audit_wh_[^/\s]+", "plans_audit_wh_", text)
+
+
+def _sections(text: str) -> dict[str, str]:
+    """PLANS.md's ``## title`` sections by title, each with its body."""
+    parts = re.split(r"^## ", text, flags=re.M)[1:]
+    return {p.split("\n", 1)[0]: "## " + p for p in parts}
+
+
+def write_plans(out: list[str], old_path: str) -> None:
+    """Write ``out`` to ``old_path``, keeping each old section whose text is
+    the same up to run-specific ids."""
+    new = "\n".join(out)
+    if os.path.exists(old_path):
+        with open(old_path) as f:
+            old = _sections(f.read())
+        head = new.split("\n## ", 1)[0]
+        body = []
+        for title, text in _sections(new).items():
+            kept = old.get(title)
+            keep = kept is not None and _masked(kept.rstrip()) == _masked(text.rstrip())
+            body.append(kept.rstrip() + text[len(text.rstrip()):] if keep
+                        else text)
+        new = head + "\n" + "".join(body)
+    with open(old_path, "w") as f:
+        f.write(new)
+
+
+def exchanges(plan: str) -> list[tuple[str, str]]:
+    """(input columns, arguments) of every Exchange in a formatted plan."""
+    return re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
+                      r"Arguments: ([^\n]*)", plan)
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--write", action="store_true",
+                    help="also rewrite PLANS.md (changed sections only)")
+    args = ap.parse_args()
+
     from pyspark.sql import functions as F
 
     from corpus_dedup_spark.config import DedupConfig
     from corpus_dedup_spark.operators.exact_dedup import (dedup_keepers,
                                                           explode_units)
-    from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
-                                                          doc_band_features,
-                                                          verify_jaccard)
+    from corpus_dedup_spark.operators.minhash_lsh import (doc_band_features,
+                                                          edges_from_features)
     from corpus_dedup_spark.operators.search import (build_fingerprint_index,
                                                      search)
     from corpus_dedup_spark.plans.session import build_session
@@ -59,6 +108,8 @@ def main() -> None:
     cfg = DedupConfig()
 
     sections: list[tuple[str, str, list[str]]] = []
+    # (section title, what failed)
+    failures: list[tuple[str, str]] = []
 
     # 1. scan pruning: filter + projection must reach the parquet scan
     q = docs.filter(F.col("lang") == "en").select("doc_id", "n_chars")
@@ -113,52 +164,40 @@ def main() -> None:
         verify_plan,
         ["MapInArrow", "partial_count", "hashpartitioning(_h"],
     ))
-    verify_ex = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]",
-                           verify_plan)
+    verify_ex = [cols for cols, _ in exchanges(verify_plan)]
     if not verify_ex or any("norm_unit" in cols for cols in verify_ex):
-        print(f"AUDIT FAILURE: norm_unit crosses the exact-verify fingerprint "
-              f"exchange (exchange inputs: {verify_ex})")
-        sys.exit(1)
+        failures.append((sections[-1][0], "norm_unit crosses the fingerprint "
+                         f"exchange (inputs: {verify_ex})"))
 
-    # 3. LSH candidate generation: ONE band-row exchange; a window over its
-    # partitions sizes the buckets, hot ones are filtered out before the
-    # collect_list, and the pairs stream out of two explodes
-    from corpus_dedup_spark.operators.minhash_lsh import candidate_pairs
-
-    feats = doc_band_features(pages, cfg)
-    pairs, _dropped = candidate_pairs(band_explode(feats), cfg)
-    lsh_plan = plan_of(pairs)
+    # 3. LSH edges, the plan near_dup_edges and the pipeline ship: ONE
+    # band-row exchange carrying (64-bit key, band_id, band_hash); a window
+    # over its partitions sizes the buckets, hot ones are filtered out before
+    # the collect_list, the pairs stream out of two explodes, and the verify
+    # joins map keys back to (url, shingles) for ONE Arrow-batched inter/union
+    # evaluation (asNondeterministic keeps the threshold filter from pushing
+    # through the projection and re-evaluating it)
+    feats = doc_band_features(pages, cfg).persist()
+    lsh_plan = plan_of(edges_from_features(feats, cfg)[0])
+    feats.unpersist()
     sections.append((
-        "LSH candidate pairs (one band-row exchange -> window-sized buckets "
-        "-> capped collect_list -> streamed pair explode)",
+        "LSH edges (one band-row exchange on a 64-bit url key -> window-sized "
+        "buckets -> capped collect_list -> streamed pair explode -> keyed "
+        "verify joins, one inter/union eval)",
         lsh_plan,
-        ["Window", "collect_list", "Generate", "explode(",
-         "hashpartitioning(band_id", "!LeftAnti"],
+        ["Window", "collect_list", "Generate", "explode(", "xxhash64(url",
+         "hashpartitioning(band_id", "ArrowEvalPython", "!LeftAnti"],
     ))
-    # the detail block names each exchange's partitioning once
-    n_band_ex = len(re.findall(r"Arguments: hashpartitioning\(band_id",
-                               lsh_plan))
-    if n_band_ex != 1:
-        print(f"AUDIT FAILURE: expected exactly one band-row exchange in the "
-              f"LSH candidates plan, found {n_band_ex}")
-        sys.exit(1)
-
-    # 4. verify join (pairs back to packed shingle blobs) — ONE Arrow-batched
-    # UDF evaluation (a deterministic UDF lets the threshold filter push through
-    # the projection and re-evaluate it; asNondeterministic pins one eval), and
-    # the downstream threshold filter must NOT re-run it
-    pairs_df = spark.createDataFrame([("a", "b")], ["id_a", "id_b"])
-    ver = verify_jaccard(pairs_df, feats, cfg).filter(
-        F.col("jaccard") >= F.lit(cfg.jaccard_threshold))
-    ver_plan = plan_of(ver)
-    sections.append((
-        "Exact-Jaccard verify join (one Arrow-batched inter/union eval, "
-        "threshold filter does not duplicate the UDF)",
-        ver_plan,
-        ["inter_union", "ArrowEvalPython"]
-        + (["!__DUP_UDF__"] if ver_plan.count("inter_union(") == 1
-           else ["__DUP_UDF__"]),
-    ))
+    band_ex = [cols for cols, args in exchanges(lsh_plan)
+               if args.startswith("hashpartitioning(band_id")]
+    if len(band_ex) != 1:
+        failures.append((sections[-1][0],
+                         f"{len(band_ex)} band-row exchanges, expected one"))
+    elif not re.search(r"(^|, )_k#\d+L(,|$)", band_ex[0]) or "url#" in band_ex[0]:
+        failures.append((sections[-1][0], "band-row exchange input is not "
+                         f"(64-bit key, band): {band_ex[0]}"))
+    if lsh_plan.count("inter_union(") != 1:
+        failures.append((sections[-1][0], "inter_union evaluated "
+                         f"{lsh_plan.count('inter_union(')} times"))
 
     # 5. search probe: fingerprint filter + substring verify; on an uncached
     # index the window_fps UDF runs once (the size(fps) > 0 filter inferred
@@ -345,9 +384,8 @@ def main() -> None:
     # detail block — count the detail lines ("Join type: LeftAnti")
     n_anti = bplan.count("Join type: LeftAnti")
     if n_anti != 1:
-        print(f"AUDIT FAILURE: expected exactly one LeftAnti join in bloom "
-              f"plan, found {n_anti}")
-        sys.exit(1)
+        failures.append((sections[-1][0],
+                         f"{n_anti} LeftAnti joins, expected one"))
 
     # 6e. Sequence packing: the global token offset must be a DISTRIBUTED
     # prefix sum — a range-partition Exchange and a per-partition window,
@@ -409,25 +447,24 @@ def main() -> None:
     out = ["# PLANS — physical-plan audit (.explain formatted)", "",
            "Generated by scripts/explain_audit.py; assertions checked at generation "
            "time. Markers prefixed '!' assert ABSENCE.", ""]
-    failures = []
     for title, plan, needles in sections:
         ok = all((n[1:] not in plan) if n.startswith("!") else (n in plan)
                  for n in needles)
         if not ok:
             missing = [n for n in needles
                        if ((n[1:] in plan) if n.startswith("!") else (n not in plan))]
-            failures.append((title, missing))
+            failures.append((title, f"missing {missing}"))
         out += [f"## {title}", "",
                 f"Checked markers: {needles} → {'OK' if ok else 'MISSING: ' + str(missing)}",
                 "", "```", plan.strip(), "```", ""]
-    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
+    if args.write:
+        write_plans(out, os.path.join(REPO, "PLANS.md"))
     if failures:
         print("AUDIT FAILURES:")
         for t, m in failures:
-            print(f"  {t}: missing {m}")
+            print(f"  {t}: {m}")
         sys.exit(1)
-    print("plan audit OK → PLANS.md")
+    print("plan audit OK" + (" -> PLANS.md" if args.write else ""))
 
 
 if __name__ == "__main__":

@@ -4,12 +4,12 @@ import pyspark.sql.functions as F
 import pytest
 
 from corpus_dedup_spark.operators.connected_components import (
-    attach_labels, connected_components)
+    DRIVER_CC_MAX_EDGES, attach_labels, connected_components)
 
 
-def _labels(spark, edges):
+def _labels(spark, edges, **kw):
     df = spark.createDataFrame(edges, ["src", "dst"])
-    out = connected_components(df)
+    out = connected_components(df, **kw)
     return {r["node"]: r["cluster_id"] for r in out.collect()}
 
 
@@ -30,6 +30,19 @@ def test_chain_converges_log_rounds(spark):
 def test_duplicate_and_reversed_edges(spark):
     got = _labels(spark, [("a", "b"), ("b", "a"), ("a", "b"), ("c", "b")])
     assert got == {"a": "a", "b": "a", "c": "a"}
+
+
+@pytest.mark.parametrize("driver_max_edges", [DRIVER_CC_MAX_EDGES, 0])
+def test_repeated_edges_same_labels_both_paths(spark, driver_max_edges):
+    """The edge list reaches either path without a distinct: repeated and
+    reversed copies of every edge give the labels of the plain list."""
+    base = ([(f"c{i}", f"c{i+1}") for i in range(6)]
+            + [(f"k{i}", f"k{j}") for i in range(4) for j in range(i + 1, 4)]
+            + [("x", "y")])
+    noisy = base * 3 + [(b, a) for a, b in base]
+    want = _labels(spark, base)
+    assert set(want.values()) == {"c0", "k0", "x"}
+    assert _labels(spark, noisy, driver_max_edges=driver_max_edges) == want
 
 
 def test_attach_labels_singletons(spark):

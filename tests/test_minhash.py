@@ -1,15 +1,21 @@
 """MinHash/LSH near-dup detection: exact-dup guarantee + planted-truth recall."""
 
+import io
+import re
+from contextlib import redirect_stdout
 from itertools import combinations
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from corpus_dedup_spark.config import DedupConfig
+from corpus_dedup_spark.operators import minhash_lsh
 from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
                                                       candidate_pairs,
                                                       doc_band_features,
                                                       doc_features,
+                                                      edges_from_features,
                                                       near_dup_clusters,
                                                       near_dup_edges)
 from corpus_dedup_spark.sources.pages import pages_spark
@@ -129,6 +135,120 @@ def test_candidates_cross_one_band_exchange(spark, cfg, planted):
     assert plan.count("hashpartitioning(band_id") == 1, plan
     assert "ReusedExchange" not in plan, plan
     assert "BroadcastHashJoin [band_id" not in plan, plan
+
+
+def _exchanges(df) -> list[tuple[list[str], str]]:
+    """(input column names, arguments) of every Exchange in ``df``'s
+    formatted plan; a long column keeps its ``L`` suffix (``_k#12L`` →
+    ``_kL``)."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return [([re.sub(r"#\d+", "", c) for c in cols.split(", ")], args)
+            for cols, args in re.findall(
+                r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
+                r"Arguments: ([^\n]*)", buf.getvalue())]
+
+
+def test_band_exchange_carries_64bit_key(spark, cfg, planted):
+    """The band rows that cross the exchange are (key, band_id, band_hash)
+    with a 64-bit key, and no url string."""
+    df, _, _ = planted
+    verified, feats, _ = near_dup_edges(df, cfg)
+    band = [cols for cols, args in _exchanges(verified)
+            if args.startswith("hashpartitioning(band_id")]
+    feats.unpersist()
+    assert band == [["_kL", "band_id", "band_hashL"]], band
+
+
+def _reaches_cache_unshuffled(node) -> bool:
+    """A path from ``node`` down to an InMemoryTableScan crosses no Exchange."""
+    if node.nodeName() == "InMemoryTableScan":
+        return True
+    if node.nodeName() == "Exchange":
+        return False
+    kids = node.children()
+    return any(_reaches_cache_unshuffled(kids.apply(i))
+               for i in range(kids.size()))
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_verify_joins_reuse_key_partitioned_features(spark, cfg, planted):
+    """Features repartitioned on the key expression feed both shuffled
+    verify joins without another exchange: the joins' key columns are
+    aliases of that expression. Spark reports the partitioning of a cached
+    adaptive plan only once the cache is materialized, hence the count; an
+    unmaterialized cache gets the same final plan when adaptive execution
+    re-plans after the cache stage."""
+    df, _, _ = planted
+    confs = ("spark.sql.autoBroadcastJoinThreshold",
+             "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k in confs:
+        spark.conf.set(k, "-1")
+    feats = doc_band_features(df, cfg).repartition(
+        minhash_lsh._doc_key(F.col("url"))).persist()
+    try:
+        feats.count()
+        verified, _ = edges_from_features(feats, cfg)
+        root = verified._jdf.queryExecution().executedPlan().executedPlan()
+        joins = [n for n in _plan_nodes(root)
+                 if n.nodeName() == "SortMergeJoin"]
+        assert len(joins) == 2, root.toString()
+        assert all(_reaches_cache_unshuffled(j.right()) for j in joins), \
+            root.toString()
+    finally:
+        feats.unpersist()
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_colliding_keys_cost_work_never_wrong_edges(spark, cfg, planted,
+                                                    monkeypatch):
+    """With the key cut to 2 bits nearly every document pair shares a key
+    pair, so the verify joins score them all: the edges grow to a superset
+    of the unmasked run's, and each is still a distinct url pair in order
+    whose exact shingle Jaccard clears the threshold (quirk Q6). A NULL-url
+    twin of one page shares all of its buckets and its key bits, and never
+    reaches an edge."""
+    df, _, _ = planted
+    feats = doc_band_features(df, cfg)
+    feats = feats.unionByName(
+        feats.limit(1).withColumn("url", F.lit(None).cast("string"))).persist()
+
+    def edges():
+        verified, _ = edges_from_features(feats, cfg)
+        return [tuple(r) for r in verified.select("id_a", "id_b",
+                                                  "jaccard").collect()]
+
+    plain = edges()
+    monkeypatch.setattr(minhash_lsh, "_doc_key",
+                        lambda c: F.xxhash64(c).bitwiseAND(3))
+    masked = edges()
+    shingles = {r["url"]: set(np.frombuffer(r["shingles"], np.uint64).tolist())
+                for r in feats.filter(F.col("url").isNotNull())
+                .select("url", "shingles").collect()}
+    feats.unpersist()
+
+    pairs = [(a, b) for a, b, _ in masked]
+    assert len(set(pairs)) == len(pairs)
+    assert all(a is not None and b is not None and a < b for a, b in pairs)
+    assert set(plain) <= set(masked)
+    assert len(masked) > len(plain)  # the mask reached the join keys
+    for a, b, j in masked:
+        sa, sb = shingles[a], shingles[b]
+        exact = len(sa & sb) / len(sa | sb)
+        assert j == pytest.approx(exact), (a, b)
+        assert exact >= cfg.jaccard_threshold, (a, b)
 
 
 def test_skew_cap_drops_hot_buckets(spark, planted):
