@@ -12,8 +12,9 @@ assert the properties that matter at 100 TB:
 
 Run: python scripts/explain_audit.py [--write]. Exits non-zero if a check
 fails. ``--write`` also rewrites PLANS.md, keeping verbatim every section whose
-plan differs only in expression and plan ids, so a change to one plan shows as
-a change to one section.
+plan differs only in run-specific ids (expression, plan and RDD ids, the
+warehouse directory), so a change to one plan shows as a change to one
+section.
 """
 
 from __future__ import annotations
