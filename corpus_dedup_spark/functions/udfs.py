@@ -1,8 +1,12 @@
-"""Vectorized pandas/Arrow UDFs wrapping the parity kernels.
+"""Vectorized pandas UDFs over the parity kernels: the fused MinHash feature
+UDFs, SimHash, the signature digest and the rolling-hash window fingerprints.
 
-Per the input hint: pyspark.sql DataFrame + vectorized pandas/Arrow UDFs throughout, no
-per-row Python UDFs. Every UDF here is Arrow-batched; inner loops are numpy or tight
-C-backed bytes/regex operations from :mod:`corpus_dedup_spark.kernel`.
+No per-row Python UDFs: every UDF here is Arrow-batched; inner loops are numpy
+or tight C-backed bytes operations from :mod:`corpus_dedup_spark.kernel`. Unit
+extraction is not a UDF of its own: the feature and SimHash UDFs call the batch
+kernel :func:`kernel.extract_units_batch_flat` inside their one Arrow
+round-trip, and a plan that needs the unit rows uses
+:func:`corpus_dedup_spark.operators.exact_dedup.explode_units_arrow`.
 
 Hash columns are uint64 semantically but carried as Spark LongType (bit-reinterpreted
 via ``int64`` views) — comparisons/joins are unaffected.
@@ -31,26 +35,6 @@ def _as_bytes(x) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# U1+U5+U6 — unit extraction (squash → split → normalize → truncate → drop empty)
-# ---------------------------------------------------------------------------
-
-def make_extract_units_udf(mode: str = "sentence", max_length: int = 0):
-    """text (string|binary) → array<binary> of normalized units, document order.
-
-    This is the byte-identical-per-url invariant kernel (ref: src/sentence_splitter.c:
-    277-401, src/text_utils.c:7-34, src/io_utils.c:68-88, src/dedup.c:297-366).
-    """
-
-    @pandas_udf(ArrayType(BinaryType()))
-    def extract_units(texts: pd.Series) -> pd.Series:
-        batch = kernel.extract_units_batch(
-            [_as_bytes(t) for t in texts], mode, max_length)
-        return pd.Series(batch)
-
-    return extract_units
-
-
-# ---------------------------------------------------------------------------
 # H5 — shingling + batched MinHash signatures (north-rule extension)
 # ---------------------------------------------------------------------------
 
@@ -70,30 +54,21 @@ def _shingle_hashes(unit_hashes: np.ndarray, k: int) -> np.ndarray:
     return np.unique(acc)
 
 
-def _char_shingle_hashes(units: list[bytes], n: int) -> np.ndarray:
-    """Character n-gram shingles over the normalized unit stream (units joined by a
-    single space, mirroring the reference's normalized output — quirk Q4): one u64
-    rolling hash per n-byte window, vectorized over the whole doc."""
-    blob = b" ".join(units)
-    if not blob:
-        return np.empty(0, dtype=_U64)
-    arr = np.frombuffer(blob, dtype=np.uint8).astype(_U64)
+def _char_shingle_hashes(blob: np.ndarray, n: int) -> np.ndarray:
+    """Character n-gram shingles over a document's normalized unit stream
+    (``blob``: its units joined by a single space as uint8, mirroring the
+    reference's normalized output — quirk Q4): one u64 rolling hash per
+    n-byte window, vectorized over the whole doc."""
+    arr = blob.astype(_U64)
     if len(arr) <= n:
         windows = arr[None, :]
     else:
-        windows = np.lib.stride_tricks.sliding_window_view(arr, min(n, len(arr)))
+        windows = np.lib.stride_tricks.sliding_window_view(arr, n)
     with np.errstate(over="ignore"):
         acc = np.zeros(windows.shape[0], dtype=_U64)
         for j in range(windows.shape[1]):
             acc = acc * _MIX_BASE + windows[:, j]
     return np.unique(acc)
-
-
-def _doc_shingles(units: list[bytes], unit_hashes: np.ndarray,
-                  cfg: DedupConfig) -> np.ndarray:
-    if cfg.shingle_level == "char":
-        return _char_shingle_hashes(units, cfg.char_ngram)
-    return _shingle_hashes(unit_hashes, cfg.shingle_k)
 
 
 def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
@@ -237,36 +212,31 @@ def _signatures(shingle_sets: list[np.ndarray], a_params: np.ndarray,
         shingle_sets, a_params, b_params, cfg.num_perm)
 
 
+def _doc_runs(doc_idx: np.ndarray):
+    """(first, end, document) of each run of equal ``doc_idx``: the units of
+    one document, which the flat kernel emits contiguously."""
+    bounds = np.flatnonzero(np.diff(doc_idx) != 0) + 1
+    starts = [0, *bounds.tolist()]
+    return zip(starts, [*starts[1:], len(doc_idx)], doc_idx[starts].tolist())
+
 
 def _shingle_sets_from_texts(raw: list[bytes], cfg: DedupConfig) -> list[np.ndarray]:
-    """texts → per-doc sorted-unique shingle hash sets.
-
-    Unit-level shingles need only the per-unit FNV hashes, so the flat kernel
-    path (extract_units_batch_flat + fnv1a_flat) runs with ZERO per-unit Python
-    objects; char-level shingles need the unit bytes and use the list path."""
-    n = len(raw)
-    if cfg.shingle_level == "unit":
-        d, _u, v, o = kernel.extract_units_batch_flat(raw, cfg.mode, cfg.max_length)
-        uh = kernel.fnv1a_flat(v, o)
-        out = [np.empty(0, dtype=_U64)] * n
-        if len(d):
-            bounds = np.flatnonzero(np.diff(d) != 0) + 1
-            starts = np.concatenate([[0], bounds]).astype(np.int64)
-            ends = np.concatenate([bounds, [len(d)]]).astype(np.int64)
-            k = cfg.shingle_k
-            for s0, s1, di in zip(starts.tolist(), ends.tolist(),
-                                  d[starts].tolist()):
-                out[di] = _shingle_hashes(uh[s0:s1], k)
+    """texts → per-doc sorted-unique shingle hash sets, from ONE flat-kernel
+    extraction: unit shingles hash the units with ``fnv1a_flat``, char
+    shingles read each document's units, space-joined, straight from the
+    value buffer. No Python object is made per unit."""
+    d, _u, v, o = kernel.extract_units_batch_flat(raw, cfg.mode, cfg.max_length)
+    out = [np.empty(0, dtype=_U64)] * len(raw)
+    if not len(d):
         return out
-    unit_lists = kernel.extract_units_batch(raw, cfg.mode, cfg.max_length)
-    counts = [len(vv) for vv in unit_lists]
-    flat = [u for vv in unit_lists for u in vv]
-    uh_all = kernel.fnv1a_many(flat)
-    out = []
-    pos = 0
-    for units, c in zip(unit_lists, counts):
-        out.append(_doc_shingles(units, uh_all[pos:pos + c], cfg))
-        pos += c
+    if cfg.shingle_level == "char":
+        for s0, s1, di in _doc_runs(d):
+            blob = np.insert(v[o[s0]:o[s1]], o[s0 + 1:s1] - o[s0], 0x20)
+            out[di] = _char_shingle_hashes(blob, cfg.char_ngram)
+        return out
+    uh = kernel.fnv1a_flat(v, o)
+    for s0, s1, di in _doc_runs(d):
+        out[di] = _shingle_hashes(uh[s0:s1], cfg.shingle_k)
     return out
 
 
@@ -360,23 +330,17 @@ def make_band_features_udf(cfg: DedupConfig):
 # ---------------------------------------------------------------------------
 
 @pandas_udf(LongType())
-def simhash_udf(unit_lists: pd.Series) -> pd.Series:
-    """array<binary> units → int64 SimHash: sign of per-bit vote over unit FNV hashes."""
-    lists = [v if v is not None else [] for v in unit_lists]
-    counts = [len(v) for v in lists]
-    flat = [_as_bytes(u) for v in lists for u in v]
-    uh = kernel.fnv1a_many(flat)
-    bits = ((uh[:, None] >> np.arange(64, dtype=_U64)[None, :]) & _U64(1)).astype(np.int64)
-    votes = bits * 2 - 1  # 0 → -1, 1 → +1
-    out = np.zeros(len(lists), dtype=np.uint64)
-    pos = 0
-    for i, c in enumerate(counts):
-        if c:
-            tally = votes[pos:pos + c].sum(axis=0)
-            out[i] = np.bitwise_or.reduce(
-                np.where(tally > 0, _U64(1), _U64(0)) << np.arange(64, dtype=_U64)
-            )
-        pos += c
+def simhash_udf(texts: pd.Series) -> pd.Series:
+    """text → int64 SimHash: the sign of each bit's vote over the FNV-1a hashes
+    of the document's sentence units (0 for a document without units)."""
+    d, _u, v, o = kernel.extract_units_batch_flat(
+        [_as_bytes(t) for t in texts])
+    bits = (kernel.fnv1a_flat(v, o)[:, None]
+            >> np.arange(64, dtype=_U64)[None, :]) & _U64(1)
+    tally = np.zeros((len(texts), 64), dtype=np.int64)
+    np.add.at(tally, d, bits.astype(np.int64) * 2 - 1)  # 0 → -1, 1 → +1
+    out = np.bitwise_or.reduce(
+        (tally > 0).astype(_U64) << np.arange(64, dtype=_U64), axis=1)
     return pd.Series(out.view(np.int64))
 
 

@@ -317,7 +317,7 @@ def split_sentences(text: bytes) -> list[tuple[int, int]]:
     """
     n = len(text)
     if n >= 8192:  # per-doc numpy overhead only amortizes on large docs;
-        arr = np.frombuffer(text, dtype=np.uint8)  # batches use split_sentences_batch
+        arr = np.frombuffer(text, dtype=np.uint8)
         if not (arr & 0x80).any():
             return _split_sentences_ascii(arr)
     return _split_sentences_scalar(text)
@@ -708,48 +708,6 @@ def _split_nonascii_docs_byte_spans(
     gs = bpos_ext[g0]
     ge = bpos_ext[g0 + ln_cp]
     return doc_all, gs, ge, blob, doc_boff
-
-
-def split_sentences_batch(texts: list[bytes]) -> list[list[tuple[int, int]]]:
-    """Batched :func:`split_sentences` — ONE vectorized pass over the pure-ASCII
-    documents (byte automaton) and ONE over the non-ASCII documents (codepoint
-    automaton). This is the Arrow-batch hot path: numpy overhead amortizes
-    across the batch; output is span-identical to the scalar automaton."""
-    out: list[list[tuple[int, int]] | None] = [None] * len(texts)
-    ascii_ids: list[int] = []
-    ascii_texts: list[bytes] = []
-    na_ids: list[int] = []
-    na_texts: list[bytes] = []
-    for i, t in enumerate(texts):
-        if not t:
-            out[i] = []
-        elif (np.frombuffer(t, dtype=np.uint8) & 0x80).any():
-            na_ids.append(i)
-            na_texts.append(t)
-        else:
-            ascii_ids.append(i)
-            ascii_texts.append(t)
-    if na_texts:
-        doc_all, gs, ge, _blob, boff = _split_nonascii_docs_byte_spans(na_texts)
-        cuts = np.searchsorted(doc_all, np.arange(len(na_ids) + 1))
-        st_rel = (gs - boff[doc_all]).tolist()
-        ln_l = (ge - gs).tolist()
-        for j, gi in enumerate(na_ids):
-            lo, hi = cuts[j], cuts[j + 1]
-            out[gi] = list(zip(st_rel[lo:hi], ln_l[lo:hi]))
-    if ascii_texts:
-        arr = np.frombuffer(b"".join(ascii_texts), dtype=np.uint8)
-        lens = np.fromiter((len(t) for t in ascii_texts), dtype=np.int64,
-                           count=len(ascii_texts))
-        offsets = np.zeros(len(lens), dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        doc_all, st_all, ln_all = _split_ascii_batch(arr, offsets, offsets + lens)
-        cuts = np.searchsorted(doc_all, np.arange(len(ascii_ids) + 1))
-        st_l, ln_l = st_all.tolist(), ln_all.tolist()
-        for j, gi in enumerate(ascii_ids):
-            lo, hi = cuts[j], cuts[j + 1]
-            out[gi] = list(zip(st_l[lo:hi], ln_l[lo:hi]))
-    return out  # type: ignore[return-value]
 
 
 def _split_sentences_scalar(text: bytes) -> list[tuple[int, int]]:
@@ -1166,92 +1124,19 @@ def extract_units(raw: bytes, mode: str = "sentence", max_length: int = 0) -> li
     return units
 
 
+def extract_units_batch(
+    texts: list[bytes], mode: str = "sentence", max_length: int = 0
+) -> list[list[bytes]]:
+    """:func:`extract_units` per document, as a list of unit lists: the
+    scalar pipeline, so a reference built on it checks
+    :func:`extract_units_batch_flat` against the oracle, not against itself."""
+    return [extract_units(t, mode, max_length) for t in texts]
+
+
 # every byte <= 0x20 → space: the composition of the newline squash (Q1) and the
 # whitespace CLASS of the normalizer — byte classes (terminator/closer/alpha/ws)
 # are preserved, so sentence spans computed on the translated text are identical
 _WS_TO_SPACE = bytes(0x20 if b <= 0x20 else b for b in range(256))
-
-
-def extract_units_batch(
-    texts: list[bytes], mode: str = "sentence", max_length: int = 0
-) -> list[list[bytes]]:
-    """Batched :func:`extract_units` — the Arrow-batch hot path (bit-identical output).
-
-    Two batch-level optimizations over the per-doc pipeline:
-    1. sentence spans come from ONE vectorized pass over the whole batch
-       (:func:`split_sentences_batch`);
-    2. normalization (trim + collapse ws runs — src/text_utils.c:7-34) is done by
-       translating ALL bytes <= 0x20 to space once per document (one C pass) and then
-       ``b" ".join(span.split())`` per span — C-speed, no per-span regex. The
-       translate maps every whitespace-class byte to 0x20 without changing any byte's
-       class, so spans and normalized unit bytes are unchanged.
-    """
-    if mode != "sentence":
-        return [extract_units(t, mode, max_length) for t in texts]
-    out: list[list[bytes] | None] = [None] * len(texts)
-    ascii_ids: list[int] = []
-    ascii_texts: list[bytes] = []
-    na_ids: list[int] = []
-    na_texts: list[bytes] = []
-    for i, t in enumerate(texts):
-        tt = t.translate(_WS_TO_SPACE)
-        if not tt:
-            out[i] = []
-        elif (np.frombuffer(tt, dtype=np.uint8) & 0x80).any():
-            na_ids.append(i)
-            na_texts.append(tt)
-        else:
-            ascii_ids.append(i)
-            ascii_texts.append(tt)
-    if na_texts:
-        # batched codepoint split (spans identical to the scalar automaton);
-        # per-span normalization shares the translate trick with the ASCII path
-        doc_all, gs, ge, nblob, _boff = _split_nonascii_docs_byte_spans(na_texts)
-        cuts = np.searchsorted(doc_all, np.arange(len(na_ids) + 1))
-        gs_l, ge_l = gs.tolist(), ge.tolist()
-        for j, gi in enumerate(na_ids):
-            units = []
-            for k in range(cuts[j], cuts[j + 1]):
-                u = b" ".join(nblob[gs_l[k]:ge_l[k]].split())
-                if max_length:
-                    u = u[:max_length]
-                if u:
-                    units.append(u)
-            out[gi] = units
-    if not ascii_texts:
-        return out  # type: ignore[return-value]
-    blob = b"".join(ascii_texts)
-    arr = np.frombuffer(blob, dtype=np.uint8)
-    lens = np.fromiter((len(t) for t in ascii_texts), dtype=np.int64,
-                       count=len(ascii_texts))
-    offsets = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=offsets[1:])
-    doc_all, st_loc, ln_all = _split_ascii_batch(arr, offsets, offsets + lens)
-    gs = st_loc + offsets[doc_all]
-    ge = gs + ln_all
-    # a span is already normalized ("clean") iff it has no interior double space and
-    # no trailing space (span starts are non-ws by construction; after the translate
-    # every ws byte is 0x20) — clean spans slice straight out of the blob
-    sp = arr == 0x20
-    dbl = np.flatnonzero(sp[:-1] & sp[1:])
-    dirty = (np.searchsorted(dbl, gs) != np.searchsorted(dbl, ge - 1)) \
-        | sp[np.maximum(ge - 1, 0)]
-    cuts = np.searchsorted(doc_all, np.arange(len(ascii_ids) + 1)).tolist()
-    gs_l = gs.tolist()
-    ge_l = ge.tolist()
-    dirty_l = dirty.tolist()
-    for j, gi in enumerate(ascii_ids):
-        units = []
-        for k in range(cuts[j], cuts[j + 1]):
-            u = blob[gs_l[k]:ge_l[k]]
-            if dirty_l[k]:
-                u = b" ".join(u.split())
-            if max_length and len(u) > max_length:
-                u = u[:max_length]
-            if u:
-                units.append(u)
-        out[gi] = units
-    return out  # type: ignore[return-value]
 
 
 def _run_mask(starts: np.ndarray, lens: np.ndarray, n: int) -> np.ndarray:
@@ -1267,38 +1152,29 @@ def _run_mask(starts: np.ndarray, lens: np.ndarray, n: int) -> np.ndarray:
 
 
 def _assemble_units(
-    arr: np.ndarray, blob: bytes | None, doc_all: np.ndarray, gs: np.ndarray,
-    ge: np.ndarray, batch_ids: list[int], max_length: int,
+    blob: bytes, doc_all: np.ndarray, gs: np.ndarray, ge: np.ndarray,
+    batch_ids: list[int], max_length: int,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Spans → normalized flat unit buffers (shared by the ASCII and UTF-8
     batch paths of :func:`extract_units_batch_flat`).
 
-    ``arr``/``blob`` hold whitespace-translated text (every byte <= 0x20 is a
+    ``blob`` holds whitespace-translated text (every byte <= 0x20 is a
     space), ``gs``/``ge`` are global byte spans, ``doc_all`` indexes
     ``batch_ids``. Clean spans (no interior double space, no leading or
     trailing space) copy verbatim via one ragged gather; dirty spans
     re-normalize individually. (Sentence spans never start with whitespace;
     the leading check exists for the full-document spans of the
-    line/paragraph/document modes.) ``blob`` may be None (the Arrow
-    zero-boxing path): dirty spans then slice from ``arr`` directly —
-    boxing only the dirty minority instead of every document."""
+    line/paragraph/document modes.)"""
+    arr = np.frombuffer(blob, dtype=np.uint8)
     sp = arr == 0x20
     dbl = np.flatnonzero(sp[:-1] & sp[1:])
     dirty = (np.searchsorted(dbl, gs) != np.searchsorted(dbl, ge - 1)) \
         | sp[np.maximum(ge - 1, 0)] | sp[np.minimum(gs, sp.shape[0] - 1)]
     out_lens = (ge - gs).copy()
     dirty_ids = np.flatnonzero(dirty)
-    dirty_bytes: list[bytes] = []
-    gs_l = gs[dirty_ids].tolist()
-    ge_l = ge[dirty_ids].tolist()
-    if blob is None:
-        for a, b in zip(gs_l, ge_l):
-            u = b" ".join(arr[a:b].tobytes().split())
-            dirty_bytes.append(u)
-    else:
-        for a, b in zip(gs_l, ge_l):
-            u = b" ".join(blob[a:b].split())
-            dirty_bytes.append(u)
+    dirty_bytes = [b" ".join(blob[a:b].split())
+                   for a, b in zip(gs[dirty_ids].tolist(),
+                                   ge[dirty_ids].tolist())]
     if dirty_ids.size:
         out_lens[dirty_ids] = np.fromiter(
             (len(u) for u in dirty_bytes), dtype=np.int64,
@@ -1311,8 +1187,6 @@ def _assemble_units(
             doc_all[keep], gs[keep], ge[keep], dirty[keep], out_lens[keep])
         dirty_bytes = [u for j, u in zip(dirty_ids, dirty_bytes)
                        if keep[j]]
-        dirty_ids = np.flatnonzero(dirty)
-    else:
         dirty_ids = np.flatnonzero(dirty)
     n_units = doc_all.shape[0]
     offsets = np.zeros(n_units + 1, dtype=np.int64)
@@ -1357,9 +1231,7 @@ def _concat_flat_parts(
     parts: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Merge (doc_idx, unit_idx, values, offsets) flat-unit parts into one,
-    rebasing each subsequent part's offsets onto the growing value buffer.
-    Shared by the list and Arrow batch extractors, which must stay
-    bit-identical."""
+    rebasing each subsequent part's offsets onto the growing value buffer."""
     if len(parts) == 1:
         return parts[0]
     doc_idx = np.concatenate([p[0] for p in parts])
@@ -1376,61 +1248,48 @@ def _concat_flat_parts(
 def extract_units_batch_flat(
     texts: list[bytes], mode: str = "sentence", max_length: int = 0
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Flat, zero-boxing variant of :func:`extract_units_batch`.
+    """The batch unit kernel: :func:`extract_units` over a whole Arrow batch,
+    returned as flat buffers.
 
     Returns ``(doc_idx, unit_idx, values, offsets)``: unit k's bytes are
     ``values[offsets[k]:offsets[k+1]]``, belonging to document ``doc_idx[k]`` at
     in-document position ``unit_idx[k]``. Row content is bit-identical to
-    ``extract_units_batch`` (same kernels); ROW ORDER groups the pure-ASCII
+    :func:`extract_units` per document; ROW ORDER groups the pure-ASCII
     documents first, then the non-ASCII documents (both fully vectorized —
     ASCII over bytes, the rest over decoded codepoints) — downstream consumers
     are order-free relational operators, and the per-doc (doc_idx, unit_idx)
     pairs are identical.
 
-    The point: the list-of-lists API materializes one Python bytes object per
-    unit (~14M objects for 500k web docs) just so Arrow can re-serialize them;
-    this variant assembles the Arrow-ready value/offset buffers directly with
-    one vectorized ragged gather for the clean spans (dirty spans — interior
-    double spaces or a trailing space — are normalized individually, typically
-    a small minority)."""
+    No Python bytes object is made per unit: the Arrow-ready value/offset
+    buffers are assembled directly, with one vectorized ragged gather for the
+    clean spans (dirty spans — interior double spaces or a trailing space —
+    are normalized individually, typically a small minority)."""
+    if mode not in MODES:
+        raise ValueError(f"unknown mode: {mode!r}")
+    tts = [t.translate(_WS_TO_SPACE) for t in texts]
+    lens_all = np.fromiter(map(len, tts), dtype=np.int64, count=len(tts))
+    ne = np.flatnonzero(lens_all > 0)
+    if not ne.size:
+        z = np.empty(0, dtype=np.int64)
+        return z, z.copy(), np.empty(0, dtype=np.uint8), np.zeros(1, np.int64)
+    blob_all = b"".join(tts)
+    starts_all = np.zeros(len(tts), dtype=np.int64)
+    np.cumsum(lens_all[:-1], out=starts_all[1:])
     if mode != "sentence":
-        if mode not in ("line", "paragraph", "document"):
-            raise ValueError(f"unknown mode: {mode!r}")
         # After the reference's read-time newline squash (Q1,
         # src/io_utils.c:68-88) no \n/\r bytes remain, so line and paragraph
         # splitting DEGENERATE to one whole-document span (the U2 degeneracy
         # quirk) — identical to document mode. One full-doc span per doc
         # through the shared vectorized assembler; all-space docs normalize
-        # to empty and drop (P1/P2). Scalar parity pinned by hypothesis
-        # tests (batch ≡ extract_units per doc, all modes).
-        tts = [t.translate(_WS_TO_SPACE) for t in texts]
-        lens_all = np.fromiter(map(len, tts), dtype=np.int64, count=len(tts))
-        ne = np.flatnonzero(lens_all > 0)
-        if not ne.size:
-            z = np.empty(0, dtype=np.int64)
-            return z, z.copy(), np.empty(0, dtype=np.uint8), np.zeros(
-                1, np.int64)
-        blob = b"".join(tts)
-        arr = np.frombuffer(blob, dtype=np.uint8)
-        starts_all = np.zeros(len(tts), dtype=np.int64)
-        np.cumsum(lens_all[:-1], out=starts_all[1:])
+        # to empty and drop (P1/P2).
         gs = starts_all[ne]
-        return _assemble_units(arr, blob, np.arange(ne.size, dtype=np.int64),
+        return _assemble_units(blob_all, np.arange(ne.size, dtype=np.int64),
                                gs, gs + lens_all[ne], ne.tolist(), max_length)
-    tts = [t.translate(_WS_TO_SPACE) for t in texts]
-    lens_all = np.fromiter(map(len, tts), dtype=np.int64, count=len(tts))
-    ne = np.flatnonzero(lens_all > 0)
-    if ne.size:
-        # ASCII/non-ASCII classification in ONE pass over the concatenated
-        # bytes (bitwise-OR per doc segment), replacing a per-doc
-        # frombuffer+any round-trip
-        blob_all = b"".join(tts)
-        arr_all = np.frombuffer(blob_all, dtype=np.uint8)
-        starts_all = np.zeros(len(tts), dtype=np.int64)
-        np.cumsum(lens_all[:-1], out=starts_all[1:])
-        hi = (np.bitwise_or.reduceat(arr_all, starts_all[ne]) & 0x80) > 0
-    else:
-        hi = np.empty(0, dtype=bool)
+    # ASCII/non-ASCII classification in ONE pass over the concatenated
+    # bytes (bitwise-OR per doc segment), replacing a per-doc
+    # frombuffer+any round-trip
+    hi = (np.bitwise_or.reduceat(np.frombuffer(blob_all, dtype=np.uint8),
+                                 starts_all[ne]) & 0x80) > 0
     ascii_ids = ne[~hi].tolist()
     ascii_texts = [tts[i] for i in ascii_ids]
     na_ids = ne[hi].tolist()
@@ -1447,106 +1306,13 @@ def extract_units_batch_flat(
         doc_all, st_loc, ln_all = _split_ascii_batch(arr, doc_off, doc_off + lens)
         gs = st_loc + doc_off[doc_all]
         parts.append(_assemble_units(
-            arr, blob, doc_all, gs, gs + ln_all, ascii_ids, max_length))
+            blob, doc_all, gs, gs + ln_all, ascii_ids, max_length))
     if na_texts:
         # non-ASCII docs: batched codepoint split (same translate trick — every
         # byte <= 0x20 is already a space, so byte-level normalization below is
         # valid, and the translate changes no span: whitespace-class and
         # letter-class membership are preserved byte-for-byte)
         doc_all, gs, ge, blob, _boff = _split_nonascii_docs_byte_spans(na_texts)
-        arr = np.frombuffer(blob, dtype=np.uint8)
         parts.append(_assemble_units(
-            arr, blob, doc_all, gs, ge, na_ids, max_length))
-    if not parts:
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy(), np.empty(0, dtype=np.uint8), np.zeros(1, np.int64)
-    return _concat_flat_parts(parts)
-
-
-# vectorized form of _WS_TO_SPACE: one uint8 LUT gather translates a whole
-# Arrow value buffer in a single memory-speed pass (vs per-doc bytes.translate)
-_WS_LUT = np.frombuffer(_WS_TO_SPACE, dtype=np.uint8)
-
-
-def extract_units_batch_flat_arrow(
-    arr: np.ndarray, starts: np.ndarray, ends: np.ndarray,
-    mode: str = "sentence", max_length: int = 0,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Zero-boxing variant of :func:`extract_units_batch_flat` over Arrow
-    binary-array buffers: ``arr`` is the uint8 view of the value buffer and
-    ``starts``/``ends`` are per-document [start, end) byte bounds (a null
-    document is passed as an empty span). Bit-identical rows to the list API
-    (same kernels downstream); row order groups ASCII docs first, as there.
-
-    The list API boxes one Python bytes object per document (``to_pylist``),
-    translates each individually, and re-joins them into a blob; this variant
-    never materializes a per-document object on the hot path — whitespace
-    translation is one LUT gather, the per-class blob is one ragged
-    mask-to-mask copy, and only the non-ASCII minority (which needs the
-    codepoint decode) is boxed per document.
-    """
-    if mode not in ("sentence", "line", "paragraph", "document"):
-        raise ValueError(f"unknown mode: {mode!r}")
-    arr = np.asarray(arr, dtype=np.uint8)
-    starts = np.asarray(starts, dtype=np.int64)
-    ends = np.asarray(ends, dtype=np.int64)
-    lens_all = ends - starts
-    ne = np.flatnonzero(lens_all > 0)
-    empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
-             np.empty(0, dtype=np.uint8), np.zeros(1, np.int64))
-    if not ne.size:
-        return empty
-
-    def compact(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Gather docs ``ids`` into one contiguous translated blob (ragged
-        mask-to-mask copy — no per-doc objects). Returns (blob_arr, off, lens).
-        """
-        c_lens = lens_all[ids]
-        off = np.zeros(ids.size, dtype=np.int64)
-        np.cumsum(c_lens[:-1], out=off[1:])
-        total = int(off[-1] + c_lens[-1])
-        out = np.empty(total, dtype=np.uint8)
-        out[_run_mask(off, c_lens, total)] = arr[
-            _run_mask(starts[ids], c_lens, arr.shape[0])]
-        return _WS_LUT[out], off, c_lens
-
-    if mode != "sentence":
-        # line/paragraph degenerate to document mode post-squash (quirk U2);
-        # one full-doc span per nonempty doc through the shared assembler
-        blob_arr, off, c_lens = compact(ne)
-        return _assemble_units(blob_arr, None,
-                               np.arange(ne.size, dtype=np.int64),
-                               off, off + c_lens, ne.tolist(), max_length)
-
-    # ASCII classification without boxing: bitwise-OR reduceat over per-doc
-    # segments of the raw buffer. Segments span from each nonempty doc's start
-    # to the next one's (interleaved empty docs contribute zero bytes; a null
-    # slot with residual buffer bytes can only widen a segment, which may only
-    # flip a doc to the non-ASCII path — safe, that path handles ASCII too).
-    last_end = int(ends[ne[-1]])
-    hi = (np.bitwise_or.reduceat(arr[:last_end], starts[ne]) & 0x80) > 0
-    ascii_ids = ne[~hi]
-    na_ids = ne[hi]
-
-    parts: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = []
-    if ascii_ids.size:
-        blob_arr, off, c_lens = compact(ascii_ids)
-        doc_all, st_loc, ln_all = _split_ascii_batch(blob_arr, off,
-                                                     off + c_lens)
-        gs = st_loc + off[doc_all]
-        parts.append(_assemble_units(blob_arr, None, doc_all, gs, gs + ln_all,
-                                     ascii_ids.tolist(), max_length))
-    if na_ids.size:
-        # the codepoint decode needs per-doc boundaries through a NUL-joined
-        # blob; boxing just this minority preserves the list-path code exactly
-        na_texts = [arr[s:e].tobytes().translate(_WS_TO_SPACE)
-                    for s, e in zip(starts[na_ids].tolist(),
-                                    ends[na_ids].tolist())]
-        doc_all, gs, ge, blob, _boff = _split_nonascii_docs_byte_spans(
-            na_texts)
-        parts.append(_assemble_units(np.frombuffer(blob, dtype=np.uint8),
-                                     blob, doc_all, gs, ge, na_ids.tolist(),
-                                     max_length))
-    if not parts:
-        return empty
+            blob, doc_all, gs, ge, na_ids, max_length))
     return _concat_flat_parts(parts)

@@ -15,90 +15,53 @@ before the shuffle, killing the worst boilerplate key early. Unit rows carry onl
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from corpus_dedup_spark.functions.udfs import make_extract_units_udf
+from corpus_dedup_spark import kernel
 
 
-def explode_units(pages: DataFrame, mode: str = "sentence", max_length: int = 0,
-                  text_col: str = "text", id_col: str = "url") -> DataFrame:
-    """pages(id, text, ...) → units(id, unit_idx, norm_unit).
-
-    Column-prunes to (id, text) before the UDF so the scan never reads html/binary
-    payloads; posexplode preserves document order for the deterministic keeper rule.
-    Empty units are already dropped inside the kernel (P1/P2).
-    """
-    extract = make_extract_units_udf(mode, max_length)
-    return (
-        pages.select(id_col, text_col)
-        .select(id_col, F.posexplode(extract(F.col(text_col))).alias("unit_idx", "norm_unit"))
-    )
-
-
-def _binary_view(col):
-    """Arrow string/binary Array → (values uint8 ndarray, starts, ends) without
-    boxing a single document: zero-copy views of the value and offset buffers.
-    Null slots are returned as empty spans (start == end)."""
-    import numpy as np
-    import pyarrow as pa
-
-    if pa.types.is_string(col.type):
-        col = col.cast(pa.binary())
-    elif pa.types.is_large_string(col.type):
-        col = col.cast(pa.large_binary())
-    off_dtype = (np.int64 if pa.types.is_large_binary(col.type)
-                 else np.int32)
-    bufs = col.buffers()
-    offs = np.frombuffer(bufs[1], dtype=off_dtype)[
-        col.offset:col.offset + len(col) + 1].astype(np.int64)
-    arr = (np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None
-           else np.empty(0, dtype=np.uint8))
-    starts, ends = offs[:-1], offs[1:]
-    if col.null_count:
-        valid = col.is_valid().to_numpy(zero_copy_only=False)
-        ends = np.where(valid, ends, starts)
-    return arr, starts, ends
+def _explode_batch(rb, mode: str, max_length: int, text_col: str,
+                   id_col: str):
+    """One Arrow batch of pages → one batch of (id, unit_idx, norm_unit)
+    rows: the per-batch body of :func:`explode_units_arrow`."""
+    texts = rb.column(text_col).cast(pa.binary()).to_pylist()
+    doc_idx, unit_idx, values, offsets = kernel.extract_units_batch_flat(
+        [t or b"" for t in texts], mode, max_length)
+    if offsets[-1] >= (1 << 31):  # not assert: must survive python -O
+        raise ValueError(
+            "Arrow batch unit bytes exceed int32 offsets "
+            f"({int(offsets[-1])} bytes); lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch")
+    ids = rb.column(id_col).take(pa.array(doc_idx, type=pa.int64()))
+    units = pa.Array.from_buffers(
+        pa.binary(), len(doc_idx),
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(values)])
+    return pa.RecordBatch.from_arrays(
+        [ids, pa.array(unit_idx, type=pa.int64()), units],
+        names=[id_col, "unit_idx", "norm_unit"])
 
 
 def explode_units_arrow(pages: DataFrame, mode: str = "sentence",
                         max_length: int = 0, text_col: str = "text",
                         id_col: str = "url") -> DataFrame:
-    """Flat-Arrow variant of :func:`explode_units` — same rows, same clean-window
-    wall clock (see SCALE.md), but ~14M fewer Python heap objects per 500k docs
-    and one fewer JVM stage.
+    """pages(id, text, ...) → units(id, unit_idx, norm_unit): the one Spark
+    path to the normalized units.
 
-    ``mapInArrow`` hands the kernel a pyarrow RecordBatch and takes back value/
-    offset buffers built directly by :func:`kernel.extract_units_batch_flat_arrow`:
-    no per-unit OR per-document Python bytes objects (text enters the kernel as
-    zero-copy buffer views — see :func:`_binary_view`), no JVM-side explode
-    (rows leave the worker already flat), and the id column is carried by a C++
-    ``take`` gather. Bit-identical unit bytes and (id, unit_idx) pairs."""
-    import numpy as np
-    import pyarrow as pa
-
-    from corpus_dedup_spark import kernel
-
+    Column-prunes to (id, text), so the scan never reads html/binary payloads.
+    ``mapInArrow`` hands each pyarrow RecordBatch to
+    :func:`kernel.extract_units_batch_flat`, which returns the units as flat
+    value/offset buffers; they leave the worker as one binary column, so no
+    Python object is made per unit and no JVM-side explode stage runs. The id
+    column (any type, a struct too) is carried by a C++ ``take`` gather. A
+    NULL text has no units; empty units are dropped inside the kernel
+    (P1/P2). ``unit_idx`` is the unit's position in its document, for the
+    deterministic keeper rule."""
     def fn(batches):
         for rb in batches:
-            arr, starts, ends = _binary_view(rb.column(text_col))
-            doc_idx, unit_idx, values, offsets = (
-                kernel.extract_units_batch_flat_arrow(
-                    arr, starts, ends, mode, max_length))
-            n = len(doc_idx)
-            if offsets[-1] >= (1 << 31):  # not assert: must survive python -O
-                raise ValueError(
-                    "Arrow batch unit bytes exceed int32 offsets "
-                    f"({int(offsets[-1])} bytes); lower "
-                    "spark.sql.execution.arrow.maxRecordsPerBatch")
-            ids = rb.column(id_col).take(pa.array(doc_idx, type=pa.int64()))
-            units = pa.Array.from_buffers(
-                pa.binary(), n,
-                [None, pa.py_buffer(offsets.astype(np.int32)),
-                 pa.py_buffer(values)])
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(unit_idx, type=pa.int64()), units],
-                names=[id_col, "unit_idx", "norm_unit"])
+            yield _explode_batch(rb, mode, max_length, text_col, id_col)
 
     src = pages.select(id_col, text_col)
     id_type = dict(src.dtypes)[id_col]

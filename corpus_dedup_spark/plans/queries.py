@@ -849,14 +849,10 @@ def q_simhash(spark, sf_dir):
     Multi-unit voting is value-checked separately by simhash_floor (planted
     copies) and pytest goldens.
     """
-    from corpus_dedup_spark.functions.udfs import (make_extract_units_udf,
-                                                   simhash_udf)
+    from corpus_dedup_spark.functions.udfs import simhash_udf
 
     pages = _docs_as_pages(spark, sf_dir)
-    extract = make_extract_units_udf()
-    return pages.select(
-        "url", simhash_udf(extract(F.col("text"))).alias("simhash")
-    )
+    return pages.select("url", simhash_udf(F.col("text")).alias("simhash"))
 
 
 SQL_SIMHASH = """
@@ -1181,12 +1177,10 @@ FROM documents WHERE doc_id % 20 = 0
 def q_simhash_floor(spark, sf_dir):
     """Same structural floor for SimHash: identical text ⇒ identical 64-bit
     simhash. Upgrades the r3 rows-only simhash entry with a value check."""
-    from corpus_dedup_spark.functions.udfs import (make_extract_units_udf,
-                                                   simhash_udf)
+    from corpus_dedup_spark.functions.udfs import simhash_udf
 
-    extract = make_extract_units_udf()
     sh = _docs_augmented(spark, sf_dir).select(
-        "doc_id", simhash_udf(extract(F.col("text"))).alias("simhash"))
+        "doc_id", simhash_udf(F.col("text")).alias("simhash"))
     orig = sh.filter(F.col("doc_id") < 1_000_000).select(
         "doc_id", F.col("simhash").alias("sh_o"))
     copy = sh.filter(F.col("doc_id") >= 1_000_000).select(

@@ -72,10 +72,12 @@ def write_plans(out: list[str], old_path: str) -> None:
         f.write(new)
 
 
-def exchanges(plan: str) -> list[tuple[str, str]]:
-    """(input columns, arguments) of every Exchange in a formatted plan."""
-    return re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
-                      r"Arguments: ([^\n]*)", plan)
+def exchanges(plan: str) -> list[tuple[int, str, str]]:
+    """(node id, input columns, arguments) of every Exchange in a formatted
+    plan."""
+    return [(int(i), cols, args) for i, cols, args in re.findall(
+        r"\((\d+)\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
+        r"Arguments: ([^\n]*)", plan)]
 
 
 def main() -> None:
@@ -88,7 +90,7 @@ def main() -> None:
 
     from corpus_dedup_spark.config import DedupConfig
     from corpus_dedup_spark.operators.exact_dedup import (dedup_keepers,
-                                                          explode_units)
+                                                          explode_units_arrow)
     from corpus_dedup_spark.operators.minhash_lsh import (doc_band_features,
                                                           edges_from_features)
     from corpus_dedup_spark.operators.search import (build_fingerprint_index,
@@ -122,25 +124,15 @@ def main() -> None:
          "ReadSchema: struct<doc_id:bigint,lang:string,n_chars:bigint>"],
     ))
 
-    # 2. dedup keeper aggregation: partial hash agg before the exchange
-    units = explode_units(pages)
-    keepers = dedup_keepers(units)
-    sections.append((
-        "Exact-dedup keeper aggregation (map-side combine before shuffle)",
-        plan_of(keepers),
-        ["partial_min", "partial_count", "hashpartitioning(_h"],
-    ))
-
-    # 2b. flat-Arrow extraction pipeline: scan → MapInArrow (flat units, no
-    # explode stage) → partial-combined keeper aggregation
-    from corpus_dedup_spark.operators.exact_dedup import explode_units_arrow
-
-    keepers_arrow = dedup_keepers(explode_units_arrow(pages))
+    # 2. the shipped extraction feeding the keeper aggregation: scan →
+    # MapInArrow (flat units: no pandas UDF, no explode stage) → partial
+    # hash agg before the exchange (map-side combine)
     sections.append((
         "Flat-Arrow extraction feeding the keeper aggregation (MapInArrow, "
         "no explode stage, partial agg before the exchange)",
-        plan_of(keepers_arrow),
-        ["MapInArrow", "partial_min", "hashpartitioning(_h", "!Generate"],
+        plan_of(dedup_keepers(explode_units_arrow(pages))),
+        ["MapInArrow", "partial_min", "partial_count", "hashpartitioning(_h",
+         "!ArrowEvalPython", "!Generate"],
     ))
 
     # 2c. pipeline units stage: extraction alone (what plans/pipeline.py writes
@@ -165,7 +157,7 @@ def main() -> None:
         verify_plan,
         ["MapInArrow", "partial_count", "hashpartitioning(_h"],
     ))
-    verify_ex = [cols for cols, _ in exchanges(verify_plan)]
+    verify_ex = [cols for _, cols, _ in exchanges(verify_plan)]
     if not verify_ex or any("norm_unit" in cols for cols in verify_ex):
         failures.append((sections[-1][0], "norm_unit crosses the fingerprint "
                          f"exchange (inputs: {verify_ex})"))
@@ -188,7 +180,7 @@ def main() -> None:
         ["Window", "collect_list", "Generate", "explode(", "xxhash64(url",
          "hashpartitioning(band_id", "ArrowEvalPython", "!LeftAnti"],
     ))
-    band_ex = [cols for cols, args in exchanges(lsh_plan)
+    band_ex = [cols for _, cols, args in exchanges(lsh_plan)
                if args.startswith("hashpartitioning(band_id")]
     if len(band_ex) != 1:
         failures.append((sections[-1][0],

@@ -1,39 +1,24 @@
 """End-to-end exact dedup on synthetic pages + driver documents table."""
 
-import io
 import re
-from contextlib import redirect_stdout
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
 from corpus_dedup_spark import kernel
 from corpus_dedup_spark.operators import exact_dedup
 from corpus_dedup_spark.operators.exact_dedup import (
-    dedup_stats, explode_units, mark_duplicates, reassemble, run_exact_dedup,
-    verify_no_duplicates)
+    dedup_stats, explode_units_arrow, mark_duplicates, reassemble,
+    run_exact_dedup, verify_no_duplicates)
 from corpus_dedup_spark.sources.pages import pages_spark
+from scripts.explain_audit import exchanges, plan_of
 
 
 @pytest.fixture(scope="module")
 def pages(spark):
     df, truth_pairs, clusters = pages_spark(spark, n_docs=200, seed=42)
     return df.cache()
-
-
-def test_explode_units_matches_kernel(spark, pages):
-    """Byte-identical-per-url invariant: Spark UDF output == pure kernel output."""
-    rows = pages.select("url", "text").collect()
-    expected = {
-        r["url"]: kernel.extract_units(r["text"].encode()) for r in rows
-    }
-    got_rows = explode_units(pages).collect()
-    got: dict[str, list[bytes]] = {}
-    for r in sorted(got_rows, key=lambda r: (r["url"], r["unit_idx"])):
-        got.setdefault(r["url"], []).append(bytes(r["norm_unit"]))
-    assert got.keys() == {u for u, e in expected.items() if e}
-    for url, units in got.items():
-        assert units == expected[url], url
 
 
 def test_dedup_counts_and_verify(spark, pages):
@@ -75,28 +60,15 @@ def test_verify_counts_duplicates_by_content(spark, pages, monkeypatch,
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
-def _formatted_plan(df):
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def _exchange_inputs(plan):
-    """(node id, input columns) of every Exchange in a formatted plan."""
-    return [(int(i), cols) for i, cols in re.findall(
-        r"\((\d+)\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)]
-
-
 def test_verify_fingerprint_exchange_carries_no_unit_bytes(spark, pages):
     """The always-run phase of verify_no_duplicates shuffles 64-bit
     fingerprints and counts only: every column into its Exchange is a long
     (``#<id>L`` in the formatted plan), none is the unit bytes."""
     units = exact_dedup.explode_units_arrow(pages)
-    plan = _formatted_plan(exact_dedup._repeated_fingerprints(units))
-    inputs = _exchange_inputs(plan)
+    plan = plan_of(exact_dedup._repeated_fingerprints(units))
+    inputs = exchanges(plan)
     assert inputs, plan
-    for _, cols in inputs:
+    for _, cols, _ in inputs:
         assert "norm_unit" not in cols, cols
         assert all(re.fullmatch(r"\w+#\d+L", c) for c in cols.split(", ")), cols
 
@@ -115,7 +87,7 @@ def test_verify_repeat_phase_shuffles_no_unit_bytes_before_join(spark, pages):
     threshold = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        plan = _formatted_plan(exact_dedup._content_duplicates(
+        plan = plan_of(exact_dedup._content_duplicates(
             units, exact_dedup._repeated_fingerprints(units)))
     finally:
         spark.conf.set(key, threshold)
@@ -124,7 +96,7 @@ def test_verify_repeat_phase_shuffles_no_unit_bytes_before_join(spark, pages):
     assert [(kind, how) for _, kind, how in joins] == [
         ("BroadcastHashJoin", "LeftSemi")], plan
     join_id = int(joins[0][0])
-    byte_exchanges = [i for i, cols in _exchange_inputs(plan)
+    byte_exchanges = [i for i, cols, _ in exchanges(plan)
                       if "norm_unit" in cols]
     assert byte_exchanges, plan
     assert all(i > join_id for i in byte_exchanges), plan
@@ -143,7 +115,7 @@ def test_keeper_agg_equals_window_path(spark, pages):
     same counters) — on the synthetic corpus, on unicode / empty / None /
     heavy-dup texts spread over 4 partitions, and on NULL document ids."""
     from corpus_dedup_spark.operators.exact_dedup import (
-        dedup_keepers, dedup_stats_from_keepers, explode_units_arrow)
+        dedup_keepers, dedup_stats_from_keepers)
 
     edge_rows = [("a", "One sentence. Two  spaced!   Third?"),
                  ("b", ""), ("c", None),
@@ -163,8 +135,9 @@ def test_keeper_agg_equals_window_path(spark, pages):
             null_id_rows, ["url", "text"]).repartition(2),
     }
     for name, df in inputs.items():
-        marked = mark_duplicates(explode_units(df)).cache()
-        keepers = dedup_keepers(explode_units_arrow(df))
+        units = explode_units_arrow(df)
+        marked = mark_duplicates(units).cache()
+        keepers = dedup_keepers(units)
         win_kept = _keeper_rows(marked.filter(~F.col("is_dup")).collect())
         agg_kept = _keeper_rows(keepers.collect())
         assert win_kept == agg_kept, name
@@ -184,7 +157,7 @@ def test_intra_doc_dup_counted(spark):
          ("u2", "Same sentence here. Another unique sentence.")],
         ["url", "text"],
     )
-    marked = mark_duplicates(explode_units(df))
+    marked = mark_duplicates(explode_units_arrow(df))
     stats = dedup_stats(marked).collect()[0]
     # units: u1 = [same, same, unique1], u2 = [same, unique2]
     # reference: u1#1 unique, u1#2 intra-doc dup, unique1 unique,
@@ -195,7 +168,7 @@ def test_intra_doc_dup_counted(spark):
 
 def test_deterministic_keeper(spark, pages):
     """Q3 fixed: keeper attribution is deterministic across runs/parallelism."""
-    a = mark_duplicates(explode_units(pages)).filter(~F.col("is_dup"))
+    a = mark_duplicates(explode_units_arrow(pages)).filter(~F.col("is_dup"))
     res1 = sorted((r["url"], r["unit_idx"]) for r in a.collect())
     res2 = sorted((r["url"], r["unit_idx"]) for r in a.repartition(3).sortWithinPartitions("url").collect())
     # recompute from a differently-partitioned input
@@ -204,26 +177,57 @@ def test_deterministic_keeper(spark, pages):
 
 def test_reassemble_round_trip(spark):
     df = spark.createDataFrame([("u1", "One. Two. Three.")], ["url", "text"])
-    out = reassemble(explode_units(df)).collect()[0]
+    out = reassemble(explode_units_arrow(df)).collect()[0]
     assert out["dedup_text"] == "One.\nTwo.\nThree."
     assert out["n_units"] == 3
 
 
-def test_explode_units_arrow_equivalence(spark):
-    """Flat-Arrow extraction ≡ pandas+posexplode on mixed ascii/unicode docs."""
-    from corpus_dedup_spark.operators.exact_dedup import explode_units_arrow
+def _units_by_id(rows) -> dict:
+    """(id, unit_idx, norm_unit) rows → {id: units in document order}."""
+    got: dict = {}
+    for r in sorted(rows, key=lambda r: (r["url"], r["unit_idx"])):
+        got.setdefault(r["url"], []).append(bytes(r["norm_unit"]))
+    return got
 
-    df = spark.createDataFrame(
-        [("a", "One sentence. Two  spaced!   Third?"),
-         ("b", ""),
-         ("c", None),
-         ("d", "ünïcode first. ascii second."),
-         ("e", "no terminator at all"),
-         ("f", "One sentence. Two  spaced!   Third?")],
-        ["url", "text"])
-    a = explode_units(df).collect()
-    b = explode_units_arrow(df).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+_EDGE_TEXTS = ["One sentence. Two  spaced!   Third?", "", None,
+               "ünïcode first. ascii second.", "no terminator at all",
+               "One sentence. Two  spaced!   Third?", "\t lead\n\nand trail  ",
+               "Mr. Smith left。次の文？ Yes."]
+_MODES = (("sentence", 0), ("sentence", 5), ("line", 0), ("document", 40))
+
+
+def test_explode_units_arrow_equivalence(spark, pages):
+    """Byte-identical-per-url invariant: explode_units_arrow yields exactly
+    the scalar kernel.extract_units units of each document, in document
+    order, in sentence, line and document mode and with truncation: on the
+    synthetic corpus, on edge texts (NULL, empty, unicode, dirty whitespace)
+    over 3 partitions, and, for its per-batch body, on a sliced Arrow batch
+    whose arrays start at a non-zero offset."""
+    edge = spark.createDataFrame(
+        [(f"e{i}", t) for i, t in enumerate(_EDGE_TEXTS)],
+        ["url", "text"]).repartition(3)
+    lead = 2
+    padded = ["pad. lead"] * lead + _EDGE_TEXTS
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([f"e{i - lead}" for i in range(len(padded))]),
+         pa.array(padded, type=pa.string())],
+        names=["url", "text"]).slice(lead)
+    assert batch.column(1).offset == lead
+    for mode, max_length in _MODES:
+        for df in (pages, edge):
+            want = {r["url"]: kernel.extract_units(
+                        (r["text"] or "").encode(), mode, max_length)
+                    for r in df.select("url", "text").collect()}
+            got = _units_by_id(
+                explode_units_arrow(df, mode, max_length).collect())
+            assert got == {u: e for u, e in want.items() if e}, mode
+        want = {f"e{i}": kernel.extract_units((t or "").encode(), mode,
+                                              max_length)
+                for i, t in enumerate(_EDGE_TEXTS)}
+        got = _units_by_id(exact_dedup._explode_batch(
+            batch, mode, max_length, "text", "url").to_pylist())
+        assert got == {u: e for u, e in want.items() if e}, mode
 
 
 def test_dedup_against_corpus(spark):

@@ -1,8 +1,6 @@
 """MinHash/LSH near-dup detection: exact-dup guarantee + planted-truth recall."""
 
-import io
 import re
-from contextlib import redirect_stdout
 from itertools import combinations
 
 import numpy as np
@@ -19,6 +17,7 @@ from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
                                                       near_dup_clusters,
                                                       near_dup_edges)
 from corpus_dedup_spark.sources.pages import pages_spark
+from scripts.explain_audit import exchanges, plan_of
 
 
 @pytest.fixture(scope="module")
@@ -137,25 +136,14 @@ def test_candidates_cross_one_band_exchange(spark, cfg, planted):
     assert "BroadcastHashJoin [band_id" not in plan, plan
 
 
-def _exchanges(df) -> list[tuple[list[str], str]]:
-    """(input column names, arguments) of every Exchange in ``df``'s
-    formatted plan; a long column keeps its ``L`` suffix (``_k#12L`` →
-    ``_kL``)."""
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return [([re.sub(r"#\d+", "", c) for c in cols.split(", ")], args)
-            for cols, args in re.findall(
-                r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
-                r"Arguments: ([^\n]*)", buf.getvalue())]
-
-
 def test_band_exchange_carries_64bit_key(spark, cfg, planted):
     """The band rows that cross the exchange are (key, band_id, band_hash)
     with a 64-bit key, and no url string."""
     df, _, _ = planted
     verified, feats, _ = near_dup_edges(df, cfg)
-    band = [cols for cols, args in _exchanges(verified)
+    # a long column keeps its ``L`` suffix: ``_k#12L`` → ``_kL``
+    band = [re.sub(r"#\d+", "", cols).split(", ")
+            for _, cols, args in exchanges(plan_of(verified))
             if args.startswith("hashpartitioning(band_id")]
     feats.unpersist()
     assert band == [["_kL", "band_id", "band_hashL"]], band

@@ -10,12 +10,19 @@ than the default in-memory HDFS-backed one.
 import pyspark.sql.functions as F
 import pytest
 
-from corpus_dedup_spark.operators.exact_dedup import explode_units
+from corpus_dedup_spark import kernel
 from corpus_dedup_spark.sources.pages import pages_spark
 from corpus_dedup_spark.streaming.stream_dedup import stream_unit_dedup
 
 ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."
            "RocksDBStateStoreProvider")
+
+
+def _scalar_units(pages):
+    """Distinct units of every page by the scalar kernel: a truth that
+    shares no Spark path with the stream under test."""
+    return {u for r in pages.select("text").collect()
+            for u in kernel.extract_units((r["text"] or "").encode())}
 
 
 def _drain(spark, input_dir, schema, out_dir, ckpt_dir):
@@ -68,13 +75,11 @@ def test_rocksdb_restart_resume(spark, tmp_path):
         assert len(emitted) == len(set(emitted))
         # replayed batch1 re-emitted NOTHING (its units were all in state)
         new_units = set(emitted) - units1
-        batch1_units = {bytes(r["norm_unit"]) for r in
-                        explode_units(batch1).select("norm_unit").collect()}
+        batch1_units = _scalar_units(batch1)
         assert not (new_units & batch1_units)
         # final set == batch keep-set over the union of all input
         union = batch1.unionByName(batch1).unionByName(batch2)
-        expect = {bytes(r["norm_unit"]) for r in
-                  explode_units(union).select("norm_unit").distinct().collect()}
+        expect = _scalar_units(union)
         assert set(emitted) == expect
     finally:
         if prev is None:
