@@ -180,6 +180,36 @@ def test_extract_units_batch_flat_nonsentence_matches_scalar(
     assert got == {i: units for i, units in enumerate(ref) if units}
 
 
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.one_of(st.none(), st.text(min_size=0, max_size=120)),
+                min_size=0, max_size=12),
+       st.sampled_from(["sentence", "line", "document"]),
+       st.sampled_from([0, 5, 40]),
+       st.integers(0, 3))
+def test_extract_units_batch_flat_arrow_matches_lists(
+        texts, mode, max_length, lead):
+    """The per-batch body of explode_units_arrow (Arrow batch in, Arrow
+    batch of (id, unit_idx, norm_unit) out) ≡ the scalar extract_units per
+    document on any input: NULL texts have no units, and a sliced batch whose
+    arrays start at a non-zero Arrow offset reads its own rows only."""
+    import pyarrow as pa
+
+    from corpus_dedup_spark.operators.exact_dedup import _explode_batch
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(-lead, len(texts)), type=pa.int64()),
+         pa.array(["pad. lead"] * lead + texts, type=pa.string())],
+        names=["id", "text"]).slice(lead)
+    assert batch.column(1).offset == lead
+    got: dict[int, list[tuple[int, bytes]]] = {}
+    for r in _explode_batch(batch, mode, max_length, "text", "id").to_pylist():
+        got.setdefault(r["id"], []).append((r["unit_idx"], r["norm_unit"]))
+    ref = [kernel.extract_units((t or "").encode("utf-8"), mode, max_length)
+           for t in texts]
+    assert {i: [b for _, b in sorted(units)] for i, units in got.items()} \
+        == {i: units for i, units in enumerate(ref) if units}
+
+
 # ---------------------------------------------------------------------------
 # Mersenne-61 second hash family (shared-block double-hash verify)
 # ---------------------------------------------------------------------------
