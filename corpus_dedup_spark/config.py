@@ -34,18 +34,8 @@ class DedupConfig:
     num_perm: int = 128
     lsh_bands: int = 32             # 32 bands x 4 rows: s-curve threshold ~0.42
     lsh_rows: int = 4
-    minhash_seed: int = 1215752193  # any fixed odd-ish seed; drives (a, b) draws
-    # "oph": one-permutation hashing (Li et al. 2012) + hashed-permutation
-    # OPTIMAL densification (Shrivastava, ICML 2017) — one pass over the shingles
-    # instead of num_perm passes; ~10x less memory traffic (the classic scheme
-    # saturates the memory bus at high core counts). Rotation densification
-    # (Shrivastava & Li 2014) was measured here to correlate adjacent bins on
-    # sparse sets and inflate candidates 31x — see udfs._optimal_densify; it is
-    # used only as the probe-exhausted tail fallback. "classic":
-    # per-permutation multiply-shift minhash.
-    # Both are pure functions of the shingle set: identical sets ⇒ identical
-    # signatures, so the exact-duplicate floor holds under either scheme.
-    minhash_scheme: str = "oph"
+    minhash_seed: int = 1215752193  # any fixed odd-ish seed; drives the (a, b) draws
+    # of the one-permutation MinHash (udfs._oph_signatures_from_shingle_sets)
 
     # candidate hygiene at scale
     max_bucket_size: int = 2000     # LSH buckets above this are sampled + logged (skew cap)
@@ -56,8 +46,6 @@ class DedupConfig:
             raise ValueError(f"bad mode {self.mode!r}")
         if self.lsh_bands * self.lsh_rows != self.num_perm:
             raise ValueError("lsh_bands * lsh_rows must equal num_perm")
-        if self.minhash_scheme not in ("oph", "classic"):
-            raise ValueError(f"bad minhash_scheme {self.minhash_scheme!r}")
 
     def config_hash(self) -> str:
         blob = json.dumps(asdict(self), sort_keys=True).encode()

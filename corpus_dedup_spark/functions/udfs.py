@@ -78,29 +78,6 @@ def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def _signatures_from_shingle_sets(shingle_sets: list[np.ndarray],
-                                  a_params: np.ndarray, b_params: np.ndarray,
-                                  num_perm: int) -> np.ndarray:
-    """Batched MinHash: one (S_total × P) numpy pass for a whole Arrow batch.
-    Empty sets get the max-uint64 sentinel signature."""
-    n = len(shingle_sets)
-    s_counts = np.fromiter((len(s) for s in shingle_sets), dtype=np.int64, count=n)
-    total = int(s_counts.sum())
-    out = np.full((n, num_perm), np.iinfo(np.uint64).max, dtype=_U64)
-    if total:
-        hs = np.concatenate([s for s in shingle_sets if len(s)])
-        starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(s_counts[:-1], out=starts[1:])
-        nonempty = s_counts > 0
-        ne_starts = starts[nonempty]
-        with np.errstate(over="ignore"):
-            for p0 in range(0, num_perm, 16):
-                p1 = min(p0 + 16, num_perm)
-                m = hs[:, None] * a_params[None, p0:p1] + b_params[None, p0:p1]
-                out[nonempty, p0:p1] = np.minimum.reduceat(m, ne_starts, axis=0)
-    return out.view(np.int64)
-
-
 def _oph_signatures_from_shingle_sets(shingle_sets: list[np.ndarray],
                                       a0: np.uint64, b0: np.uint64,
                                       num_perm: int) -> np.ndarray:
@@ -108,7 +85,8 @@ def _oph_signatures_from_shingle_sets(shingle_sets: list[np.ndarray],
     Shrivastava, "Optimal Densification for Fast and Accurate Minwise Hashing",
     ICML 2017).
 
-    ONE multiply-shift pass over all shingles (vs num_perm passes classically):
+    ONE multiply-shift pass over all shingles (vs num_perm passes for
+    per-permutation MinHash):
     each shingle is hashed once, assigned to bin ``h % num_perm``, and the bin
     keeps its minimum. Empty bins probe a sequence of OTHER bins chosen by fixed
     per-attempt permutations (functions of the bin index only, shared across all
@@ -119,8 +97,10 @@ def _oph_signatures_from_shingle_sets(shingle_sets: list[np.ndarray],
     sparse sets (~25 shingles in 128 bins): one shared shingle could light up an
     entire band and candidate pairs exploded 31x; hashed probing decorrelates the
     band rows. Pure function of the shingle set: identical sets ⇒ identical
-    signatures. Empty sets keep the all-max sentinel row, as in the classic
-    scheme."""
+    signatures. Empty sets keep the all-max sentinel row.
+
+    ``(a0, b0)`` is the first draw of :func:`_perm_params`, which the
+    closed-form ``minhash_signatures`` oracle pins."""
     n = len(shingle_sets)
     P = num_perm
     MAX = np.iinfo(np.uint64).max
@@ -202,16 +182,6 @@ def _optimal_densify(mat: np.ndarray, mask: np.ndarray, C: np.uint64) -> np.ndar
     return dens.reshape(n, P)
 
 
-def _signatures(shingle_sets: list[np.ndarray], a_params: np.ndarray,
-                b_params: np.ndarray, cfg: DedupConfig) -> np.ndarray:
-    """Scheme dispatcher — see DedupConfig.minhash_scheme."""
-    if cfg.minhash_scheme == "oph":
-        return _oph_signatures_from_shingle_sets(
-            shingle_sets, a_params[0], b_params[0], cfg.num_perm)
-    return _signatures_from_shingle_sets(
-        shingle_sets, a_params, b_params, cfg.num_perm)
-
-
 def _doc_runs(doc_idx: np.ndarray):
     """(first, end, document) of each run of equal ``doc_idx``: the units of
     one document, which the flat kernel emits contiguously."""
@@ -252,9 +222,8 @@ def make_features_udf(cfg: DedupConfig):
     are sorted-unique u64; sig blobs are num_perm u64."""
     from pyspark.sql.types import StructField, StructType
 
-    a_params, b_params = _perm_params(cfg)
+    a, b = _perm_params(cfg)
     num_perm = cfg.num_perm
-    mode, max_length = cfg.mode, cfg.max_length
     schema = StructType([
         StructField("shingles", BinaryType()),
         StructField("sig", BinaryType()),
@@ -264,7 +233,8 @@ def make_features_udf(cfg: DedupConfig):
     def features(texts: pd.Series) -> pd.DataFrame:
         shingle_sets = _shingle_sets_from_texts(
             [_as_bytes(t) for t in texts], cfg)
-        sig = _signatures(shingle_sets, a_params, b_params, cfg)
+        sig = _oph_signatures_from_shingle_sets(
+            shingle_sets, a[0], b[0], num_perm)
         return pd.DataFrame({
             "shingles": [s.tobytes() for s in shingle_sets],
             "sig": [row.tobytes() for row in sig],
@@ -299,9 +269,8 @@ def make_band_features_udf(cfg: DedupConfig):
     make_features_udf."""
     from pyspark.sql.types import StructField, StructType
 
-    a_params, b_params = _perm_params(cfg)
+    a, b = _perm_params(cfg)
     num_perm, bands, rows = cfg.num_perm, cfg.lsh_bands, cfg.lsh_rows
-    mode, max_length = cfg.mode, cfg.max_length
     schema = StructType([
         StructField("shingles", BinaryType()),
         StructField("bands", ArrayType(LongType())),
@@ -311,7 +280,8 @@ def make_band_features_udf(cfg: DedupConfig):
     def band_features(texts: pd.Series) -> pd.DataFrame:
         shingle_sets = _shingle_sets_from_texts(
             [_as_bytes(t) for t in texts], cfg)
-        sig = _signatures(shingle_sets, a_params, b_params, cfg).view(_U64)
+        sig = _oph_signatures_from_shingle_sets(
+            shingle_sets, a[0], b[0], num_perm).view(_U64)
         bh = _band_hashes_from_sig_matrix(sig, bands, rows)
         return pd.DataFrame({
             "shingles": [s.tobytes() for s in shingle_sets],

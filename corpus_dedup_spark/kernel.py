@@ -104,23 +104,17 @@ def utf8_decode_buffer(data: bytes) -> np.ndarray:
     arr = np.frombuffer(data, dtype=np.uint8)
     if (arr < 0x80).all():
         return arr.astype(np.uint32)
-    return _utf8_decode_vec(arr)
+    cp, is_start = _utf8_decode_vec(arr)
+    return cp[is_start]
 
 
-def utf8_decode_buffer_pos(data: bytes) -> tuple[np.ndarray, np.ndarray]:
-    """Like :func:`utf8_decode_buffer` but also returns each codepoint's BYTE
-    start position — the bridge that lets the codepoint-level splitter emit
-    byte spans over the original buffer."""
-    if not data:
-        return np.empty(0, dtype=np.uint32), np.empty(0, dtype=np.int64)
-    arr = np.frombuffer(data, dtype=np.uint8)
-    if (arr < 0x80).all():
-        return arr.astype(np.uint32), np.arange(len(arr), dtype=np.int64)
-    return _utf8_decode_vec_pos(arr)
-
-
-def _utf8_decode_vec(arr: np.ndarray) -> np.ndarray:
+def _utf8_decode_vec(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized decode, bit-identical to the scalar advance loop.
+
+    Returns ``(cp, is_start)`` over the BYTES of ``arr``: ``is_start`` marks
+    the byte that starts each decoded codepoint and ``cp`` holds that
+    codepoint there, so ``cp[is_start]`` is the decoded buffer and
+    ``np.flatnonzero(is_start)`` each codepoint's byte position.
 
     UTF-8 is self-synchronizing: valid sequences have non-continuation leads and
     continuation interiors, so every non-continuation byte is a sequence start, and
@@ -164,45 +158,7 @@ def _utf8_decode_vec(arr: np.ndarray) -> np.ndarray:
         np.where(v2, cp2,
                  np.where(v3, cp3,
                           np.where(v4, cp4, np.uint32(0xFFFD)))))
-    return cp[is_start]
-
-
-def _utf8_decode_vec_pos(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """:func:`_utf8_decode_vec` variant returning (codepoints, byte positions)."""
-    n = arr.shape[0]
-    pad = np.zeros(n + 3, dtype=np.uint8)
-    pad[:n] = arr
-    b0 = arr.astype(np.uint32)
-    b1 = pad[1:n + 1].astype(np.uint32)
-    b2 = pad[2:n + 2].astype(np.uint32)
-    b3 = pad[3:n + 3].astype(np.uint32)
-    c1 = (pad[1:n + 1] & 0xC0) == 0x80
-    c2 = (pad[2:n + 2] & 0xC0) == 0x80
-    c3 = (pad[3:n + 3] & 0xC0) == 0x80
-    ascii_ = arr < 0x80
-    lead2 = (arr & 0xE0) == 0xC0
-    lead3 = (arr & 0xF0) == 0xE0
-    lead4 = (arr & 0xF8) == 0xF0
-    cp2 = ((b0 & 0x1F) << 6) | (b1 & 0x3F)
-    cp3 = ((b0 & 0x0F) << 12) | ((b1 & 0x3F) << 6) | (b2 & 0x3F)
-    cp4 = (((b0 & 0x07) << 18) | ((b1 & 0x3F) << 12)
-           | ((b2 & 0x3F) << 6) | (b3 & 0x3F))
-    v2 = lead2 & c1 & (cp2 >= 0x80)
-    v3 = lead3 & c1 & c2 & (cp3 >= 0x800) & ~((cp3 >= 0xD800) & (cp3 <= 0xDFFF))
-    v4 = lead4 & c1 & c2 & c3 & (cp4 >= 0x10000) & (cp4 <= 0x10FFFF)
-    cont = (arr & 0xC0) == 0x80
-    covered = np.zeros(n, dtype=bool)
-    covered[1:] = v2[:-1] | v3[:-1] | v4[:-1]
-    covered[2:] |= v3[:-2] | v4[:-2]
-    covered[3:] |= v4[:-3]
-    is_start = ~cont | ~covered
-    cp = np.where(
-        ascii_, b0,
-        np.where(v2, cp2,
-                 np.where(v3, cp3,
-                          np.where(v4, cp4, np.uint32(0xFFFD)))))
-    pos = np.flatnonzero(is_start)
-    return cp[pos], pos
+    return cp, is_start
 
 
 # ---------------------------------------------------------------------------
@@ -310,408 +266,10 @@ def split_sentences(text: bytes) -> list[tuple[int, int]]:
     dot-suppression; immediate split on 。？！…؟｡; invalid bytes skipped one at a time.
     Returned spans include terminators/closers, exclude inter-sentence whitespace.
 
-    Dispatches to a numpy-batched fast path for pure-ASCII documents (the dominant
-    case for extracted web text; the reference SIMD-batches the same event scan —
-    src/sentence_splitter.c:202-245). Output is identical to the scalar automaton
-    (property-tested in tests/test_kernel_properties.py).
+    This scalar automaton is the executable spec for every input. The batch
+    splitter :func:`_split_batch` behind :func:`extract_units_batch_flat` is
+    property-tested against it (tests/test_kernel_properties.py).
     """
-    n = len(text)
-    if n >= 8192:  # per-doc numpy overhead only amortizes on large docs;
-        arr = np.frombuffer(text, dtype=np.uint8)
-        if not (arr & 0x80).any():
-            return _split_sentences_ascii(arr)
-    return _split_sentences_scalar(text)
-
-
-# lowercase 2-/3-letter abbreviation words packed as little integers for vectorized
-# membership tests ("mr" → 0x6d72, ...)
-_ABBREV_2_CODES = np.array(
-    sorted((w[0] << 8) | w[1] for w in _ABBREV_2), dtype=np.int64)
-_ABBREV_3_CODES = np.array(
-    sorted((w[0] << 16) | (w[1] << 8) | w[2] for w in _ABBREV_3), dtype=np.int64)
-
-
-def _split_sentences_ascii(arr: np.ndarray) -> list[tuple[int, int]]:
-    """Single-document wrapper over the batched vector splitter."""
-    n = arr.shape[0]
-    _doc, starts, lens = _split_ascii_batch(
-        arr, np.zeros(1, dtype=np.int64), np.array([n], dtype=np.int64))
-    return list(zip(starts.tolist(), lens.tolist()))
-
-
-_IS_WS_TBL = np.zeros(256, dtype=bool)
-_IS_WS_TBL[: 0x21] = True
-_IS_CLOSER_TBL = np.zeros(256, dtype=bool)
-for _b in b"\"')]}":
-    _IS_CLOSER_TBL[_b] = True
-del _b
-
-
-def _skip_class_vec(arr: np.ndarray, pos: np.ndarray, limit: np.ndarray,
-                    tbl: np.ndarray, N: int, max_iter: int = 24) -> np.ndarray:
-    """First position >= pos whose byte is NOT in class ``tbl``, clamped per-element
-    to ``limit``. Vectorized +1 advance per round — class runs (closers, whitespace
-    gaps) are short in real text; rounds are capped with a scalar fallback so a
-    pathological run costs O(run), not O(run × events)."""
-    pos = np.minimum(pos, limit)
-    active = (pos < limit) & tbl[arr[np.minimum(pos, N - 1)]]
-    it = 0
-    while active.any():
-        it += 1
-        if it > max_iter:
-            for k in np.flatnonzero(active):
-                p, lim = int(pos[k]), int(limit[k])
-                while p < lim and tbl[arr[p]]:
-                    p += 1
-                pos[k] = p
-            break
-        pos[active] += 1
-        active = (pos < limit) & tbl[arr[np.minimum(pos, N - 1)]]
-    return pos
-
-
-def _skip_ws_vec(arr: np.ndarray, pos: np.ndarray, limit: np.ndarray,
-                 N: int) -> np.ndarray:
-    return _skip_class_vec(arr, pos, limit, _IS_WS_TBL, N)
-
-
-def _split_ascii_batch(
-    arr: np.ndarray, offsets: np.ndarray, ends: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized sentence splitting over a CONCATENATED pure-ASCII buffer.
-
-    ``arr`` is the uint8 concatenation of all documents; ``offsets``/``ends`` are
-    per-document [start, end) bounds. Returns ``(doc_idx, start_local, length)``
-    arrays sorted by (doc, start) — per-doc spans identical to the scalar automaton.
-
-    Why this is safe to batch: every maximal same-char run of ``. ! ?`` is an
-    independent "event" (the scalar cursor's jumps only skip closer/whitespace
-    bytes, which contain no terminators), so events classify in parallel. Each
-    per-event lookup (run end → closer-skip end → whitespace-skip end, via
-    searchsorted over non-closer/non-ws position arrays) is clamped to the event's
-    own document end, and the dot-suppression backward letter scan is clamped to
-    its document start — so no state leaks across document boundaries.
-    """
-    N = arr.shape[0]
-    n_docs = offsets.shape[0]
-    # first non-ws at/after each doc start, clamped to doc end ("no content" → end)
-    ss0 = _skip_ws_vec(arr, offsets.copy(), ends, N)
-
-    is_term = (arr == 0x2E) | (arr == 0x21) | (arr == 0x3F)
-    ev = np.flatnonzero(is_term)
-    s_after = s_ws = s_doc = np.empty(0, dtype=np.int64)
-    if ev.size:
-        # maximal same-char run starts ('..' then '!' is two events); a doc start
-        # always begins a fresh run even if the previous doc ended with the same char
-        oidx = np.searchsorted(offsets, ev, side="left")
-        at_doc_start = (oidx < n_docs) & (offsets[np.minimum(oidx, n_docs - 1)] == ev)
-        starts_mask = at_doc_start
-        nz = ev > 0
-        starts_mask[nz] |= arr[ev[nz] - 1] != arr[ev[nz]]
-        e = ev[starts_mask]
-
-        doc_idx = np.searchsorted(ends, e, side="right")
-        d_end = ends[doc_idx]
-        d_start = offsets[doc_idx]
-
-        # term_end: end of the same-char run (terminator runs are short — vectorized
-        # +1 advance over the still-active set; see _skip_ws_vec for the pattern)
-        b0 = arr[e]
-        term_end = np.minimum(e + 1, d_end)
-        active = (term_end < d_end) & (arr[np.minimum(term_end, N - 1)] == b0)
-        it = 0
-        while active.any():
-            it += 1
-            if it > 24:  # pathological terminator run → scalar per-event
-                for k in np.flatnonzero(active):
-                    p, lim, c = int(term_end[k]), int(d_end[k]), arr[e[k]]
-                    while p < lim and arr[p] == c:
-                        p += 1
-                    term_end[k] = p
-                break
-            term_end[active] += 1
-            active = (term_end < d_end) & (arr[np.minimum(term_end, N - 1)] == b0)
-
-        # closers skip: first non-closer position >= term_end
-        after = _skip_class_vec(arr, term_end, d_end, _IS_CLOSER_TBL, N)
-        # whitespace skip: first non-ws position >= after
-        ws = _skip_class_vec(arr, after.copy(), d_end, _IS_WS_TBL, N)
-
-        # dot-suppression (only '.' events with a whitespace gap can be blocked)
-        gap = ws > after
-        is_dot = b0 == 0x2E
-        blocked = np.zeros(e.shape, dtype=bool)
-        need = is_dot & gap & (ws < d_end)
-        if need.any():
-            lower = arr | np.uint8(0x20)
-            # letters immediately before the dot, counted directly (at most 4
-            # gathers), clamped to the doc start like the scalar scan
-            def alpha_at(p):
-                ok = p >= d_start
-                v = lower[np.maximum(p, 0)]
-                return ok & (v >= 97) & (v <= 122)
-            a1 = alpha_at(e - 1)
-            a2 = a1 & alpha_at(e - 2)
-            a3 = a2 & alpha_at(e - 3)
-            a4 = a3 & alpha_at(e - 4)
-            ln = (a1.astype(np.int8) + a2.astype(np.int8)
-                  + a3.astype(np.int8) + a4.astype(np.int8))
-            valid_ln = a1 & ~a4  # 1 <= ln <= 3
-            ws_c = np.minimum(ws, N - 1)
-            lower_follows = (arr[ws_c] >= 97) & (arr[ws_c] <= 122)
-            word_ok = np.zeros(e.shape, dtype=bool)
-            two = need & valid_ln & (ln == 2)
-            if two.any():
-                code = (lower[e[two] - 2].astype(np.int64) << 8) | lower[e[two] - 1]
-                word_ok[two] = np.isin(code, _ABBREV_2_CODES)
-            three = need & valid_ln & (ln == 3)
-            if three.any():
-                code = (lower[e[three] - 3].astype(np.int64) << 16) | \
-                       (lower[e[three] - 2].astype(np.int64) << 8) | \
-                       lower[e[three] - 1]
-                word_ok[three] = np.isin(code, _ABBREV_3_CODES)
-            blocked = need & valid_ln & (lower_follows | word_ok)
-
-        split = (after >= d_end) | (gap & ~(is_dot & blocked))
-        s_after = after[split]
-        s_ws = ws[split]
-        s_doc = doc_idx[split]
-
-    # span assembly: each split event closes a span [ss, after); ss chains from the
-    # previous split's ws within the doc (first split in a doc starts at ss0);
-    # each doc emits a tail span [last_ss, end) when content remains
-    last_ss = ss0.copy()
-    if s_after.size:
-        first_in = np.ones(s_doc.shape, dtype=bool)
-        first_in[1:] = s_doc[1:] != s_doc[:-1]
-        ss_arr = np.empty(s_after.shape, dtype=np.int64)
-        ss_arr[1:] = s_ws[:-1]
-        ss_arr[first_in] = ss0[s_doc[first_in]]
-        keep = s_after > ss_arr
-        span_doc = s_doc[keep]
-        span_start = ss_arr[keep]
-        span_len = s_after[keep] - ss_arr[keep]
-        last_in = np.ones(s_doc.shape, dtype=bool)
-        last_in[:-1] = s_doc[1:] != s_doc[:-1]
-        last_ss[s_doc[last_in]] = s_ws[last_in]
-    else:
-        span_doc = np.empty(0, dtype=np.int64)
-        span_start = np.empty(0, dtype=np.int64)
-        span_len = np.empty(0, dtype=np.int64)
-
-    tail_keep = ends > last_ss
-    tail_doc = np.flatnonzero(tail_keep)
-    doc_all = np.concatenate([span_doc, tail_doc])
-    st_all = np.concatenate([span_start, last_ss[tail_keep]])
-    ln_all = np.concatenate([span_len, (ends - last_ss)[tail_keep]])
-    order = np.lexsort((st_all, doc_all))
-    doc_all, st_all, ln_all = doc_all[order], st_all[order], ln_all[order]
-    return doc_all, st_all - offsets[doc_all], ln_all
-
-
-# ---------------------------------------------------------------------------
-# Codepoint-level vectorized splitter: the non-ASCII batch path. Real web text
-# is mostly non-ASCII, so at corpus scale THIS is the hot path — the scalar
-# automaton stays as the executable spec (property-tested equivalence).
-# ---------------------------------------------------------------------------
-
-_CP_TABLE_SIZE = 0x110000
-
-
-def _build_cp_tables() -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    ws = np.zeros(_CP_TABLE_SIZE, dtype=bool)           # _is_basic_white_space
-    ws[: 0x21] = True
-    for _c in (0x00A0, 0x1680, 0x3000, 0x2028, 0x2029, 0x202F, 0x205F):
-        ws[_c] = True
-    ws[0x2000:0x200B] = True
-    cl = np.zeros(_CP_TABLE_SIZE, dtype=bool)           # ASCII + unicode closers
-    for _c in b"\"')]}":
-        cl[_c] = True
-    for _c in _UNICODE_CLOSERS:
-        cl[_c] = True
-    im = np.zeros(_CP_TABLE_SIZE, dtype=bool)           # immediate terminators
-    for _c in _IMMEDIATE_TERMINATORS:
-        im[_c] = True
-    return ws, cl, im
-
-
-_CP_WS_TBL, _CP_CLOSER_TBL, _CP_IMM_TBL = _build_cp_tables()
-
-
-def _split_cp_batch(
-    cps: np.ndarray, offsets: np.ndarray, ends: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized sentence splitting over a CONCATENATED codepoint buffer —
-    the full-UTF-8 generalization of :func:`_split_ascii_batch`.
-
-    Spans are in CODEPOINT indices; callers map back to byte offsets via the
-    positions from :func:`utf8_decode_buffer_pos`. Semantics mirror the scalar
-    automaton exactly (property-tested): ASCII ``. ! ?`` events keep the
-    run/closer/whitespace-gap/dot-suppression machinery; immediate terminators
-    (。？！…؟｡ — src/sentence_splitter.c:21-24) each split unconditionally after
-    closer absorption, with NO run merging (the scalar loop handles them one at
-    a time) and no whitespace-gap requirement; invalid bytes decode to U+FFFD,
-    which is in no character class — exactly the scalar ``cursor++``.
-    """
-    N = cps.shape[0]
-    n_docs = offsets.shape[0]
-    idx = cps.astype(np.int64)
-    ss0 = _skip_class_vec(idx, offsets.copy(), ends, _CP_WS_TBL, N)
-
-    is_term = (cps == 0x2E) | (cps == 0x21) | (cps == 0x3F)
-    ev = np.flatnonzero(is_term)
-    ev_i = np.flatnonzero(_CP_IMM_TBL[idx])
-    e_parts, after_parts, ws_parts, doc_parts = [], [], [], []
-
-    if ev.size:
-        # maximal same-char run starts; a doc start always begins a fresh run
-        oidx = np.searchsorted(offsets, ev, side="left")
-        at_doc_start = (oidx < n_docs) & (offsets[np.minimum(oidx, n_docs - 1)] == ev)
-        starts_mask = at_doc_start
-        nz = ev > 0
-        starts_mask[nz] |= cps[ev[nz] - 1] != cps[ev[nz]]
-        e = ev[starts_mask]
-
-        doc_idx = np.searchsorted(ends, e, side="right")
-        d_end = ends[doc_idx]
-        d_start = offsets[doc_idx]
-
-        b0 = cps[e]
-        term_end = np.minimum(e + 1, d_end)
-        active = (term_end < d_end) & (cps[np.minimum(term_end, N - 1)] == b0)
-        it = 0
-        while active.any():
-            it += 1
-            if it > 24:  # pathological terminator run → scalar per-event
-                for k in np.flatnonzero(active):
-                    p, lim, c = int(term_end[k]), int(d_end[k]), cps[e[k]]
-                    while p < lim and cps[p] == c:
-                        p += 1
-                    term_end[k] = p
-                break
-            term_end[active] += 1
-            active = (term_end < d_end) & (cps[np.minimum(term_end, N - 1)] == b0)
-
-        after = _skip_class_vec(idx, term_end, d_end, _CP_CLOSER_TBL, N)
-        ws = _skip_class_vec(idx, after.copy(), d_end, _CP_WS_TBL, N)
-
-        gap = ws > after
-        is_dot = b0 == 0x2E
-        blocked = np.zeros(e.shape, dtype=bool)
-        need = is_dot & gap & (ws < d_end)
-        if need.any():
-            lower = idx | 0x20  # only consulted through ASCII range checks
-
-            def alpha_at(p):
-                ok = p >= d_start
-                v = lower[np.maximum(p, 0)]
-                return ok & (v >= 97) & (v <= 122)
-            a1 = alpha_at(e - 1)
-            a2 = a1 & alpha_at(e - 2)
-            a3 = a2 & alpha_at(e - 3)
-            a4 = a3 & alpha_at(e - 4)
-            ln = (a1.astype(np.int8) + a2.astype(np.int8)
-                  + a3.astype(np.int8) + a4.astype(np.int8))
-            valid_ln = a1 & ~a4  # 1 <= ln <= 3
-            ws_c = np.minimum(ws, N - 1)
-            lower_follows = (cps[ws_c] >= 97) & (cps[ws_c] <= 122)
-            word_ok = np.zeros(e.shape, dtype=bool)
-            two = need & valid_ln & (ln == 2)
-            if two.any():
-                code = (lower[e[two] - 2] << 8) | lower[e[two] - 1]
-                word_ok[two] = np.isin(code, _ABBREV_2_CODES)
-            three = need & valid_ln & (ln == 3)
-            if three.any():
-                code = (lower[e[three] - 3] << 16) | \
-                       (lower[e[three] - 2] << 8) | lower[e[three] - 1]
-                word_ok[three] = np.isin(code, _ABBREV_3_CODES)
-            blocked = need & valid_ln & (lower_follows | word_ok)
-
-        split = (after >= d_end) | (gap & ~(is_dot & blocked))
-        e_parts.append(e[split])
-        after_parts.append(after[split])
-        ws_parts.append(ws[split])
-        doc_parts.append(doc_idx[split])
-
-    if ev_i.size:
-        doc_i = np.searchsorted(ends, ev_i, side="right")
-        d_end_i = ends[doc_i]
-        after_i = _skip_class_vec(
-            idx, np.minimum(ev_i + 1, d_end_i), d_end_i, _CP_CLOSER_TBL, N)
-        ws_i = _skip_class_vec(idx, after_i.copy(), d_end_i, _CP_WS_TBL, N)
-        e_parts.append(ev_i)
-        after_parts.append(after_i)
-        ws_parts.append(ws_i)
-        doc_parts.append(doc_i)
-
-    last_ss = ss0.copy()
-    if e_parts:
-        e_all = np.concatenate(e_parts)
-        order = np.argsort(e_all, kind="stable")
-        s_after = np.concatenate(after_parts)[order]
-        s_ws = np.concatenate(ws_parts)[order]
-        s_doc = np.concatenate(doc_parts)[order]
-    else:
-        s_after = s_ws = s_doc = np.empty(0, dtype=np.int64)
-
-    if s_after.size:
-        first_in = np.ones(s_doc.shape, dtype=bool)
-        first_in[1:] = s_doc[1:] != s_doc[:-1]
-        ss_arr = np.empty(s_after.shape, dtype=np.int64)
-        ss_arr[1:] = s_ws[:-1]
-        ss_arr[first_in] = ss0[s_doc[first_in]]
-        keep = s_after > ss_arr
-        span_doc = s_doc[keep]
-        span_start = ss_arr[keep]
-        span_len = s_after[keep] - ss_arr[keep]
-        last_in = np.ones(s_doc.shape, dtype=bool)
-        last_in[:-1] = s_doc[1:] != s_doc[:-1]
-        last_ss[s_doc[last_in]] = s_ws[last_in]
-    else:
-        span_doc = np.empty(0, dtype=np.int64)
-        span_start = np.empty(0, dtype=np.int64)
-        span_len = np.empty(0, dtype=np.int64)
-
-    tail_keep = ends > last_ss
-    tail_doc = np.flatnonzero(tail_keep)
-    doc_all = np.concatenate([span_doc, tail_doc])
-    st_all = np.concatenate([span_start, last_ss[tail_keep]])
-    ln_all = np.concatenate([span_len, (ends - last_ss)[tail_keep]])
-    order = np.lexsort((st_all, doc_all))
-    doc_all, st_all, ln_all = doc_all[order], st_all[order], ln_all[order]
-    return doc_all, st_all - offsets[doc_all], ln_all
-
-
-def _split_nonascii_docs_byte_spans(
-    texts: list[bytes],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, bytes, np.ndarray]:
-    """Batched codepoint-split of non-ASCII docs → per-doc BYTE spans.
-
-    Returns ``(doc_idx, byte_start_global, byte_end_global, blob, doc_boff)``
-    where the offsets index ``blob`` = texts joined by a single NUL separator
-    and ``doc_boff[i]`` is document i's byte offset in the blob (the single
-    source of the separator arithmetic). The NUL is ASCII and non-continuation,
-    so the one-shot vectorized decode of the whole blob cannot merge sequences
-    across document boundaries; per-doc clamps in :func:`_split_cp_batch` keep
-    the separator itself out of every span."""
-    blob = b"\x00".join(texts)
-    cps, bpos = utf8_decode_buffer_pos(blob)
-    lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=len(texts))
-    doc_boff = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1] + 1, out=doc_boff[1:])  # +1 per NUL separator
-    doc_bend = doc_boff + lens
-    cp_off = np.searchsorted(bpos, doc_boff)
-    cp_end = np.searchsorted(bpos, doc_bend)
-    doc_all, st_loc, ln_cp = _split_cp_batch(cps, cp_off, cp_end)
-    bpos_ext = np.concatenate([bpos, [len(blob)]])
-    g0 = cp_off[doc_all] + st_loc
-    gs = bpos_ext[g0]
-    ge = bpos_ext[g0 + ln_cp]
-    return doc_all, gs, ge, blob, doc_boff
-
-
-def _split_sentences_scalar(text: bytes) -> list[tuple[int, int]]:
-    """Scalar automaton — the executable spec; handles all inputs incl. non-ASCII."""
     out: list[tuple[int, int]] = []
     n = len(text)
     if n == 0:
@@ -779,6 +337,239 @@ def _split_sentences_scalar(text: bytes) -> list[tuple[int, int]]:
     if cur > ss:
         out.append((ss, cur - ss))
     return out
+
+
+# lowercase 2-/3-letter abbreviation words packed as little integers for vectorized
+# membership tests ("mr" → 0x6d72, ...)
+_ABBREV_2_CODES = np.array(
+    sorted((w[0] << 8) | w[1] for w in _ABBREV_2), dtype=np.int64)
+_ABBREV_3_CODES = np.array(
+    sorted((w[0] << 16) | (w[1] << 8) | w[2] for w in _ABBREV_3), dtype=np.int64)
+
+
+def _skip_class_vec(arr: np.ndarray, pos: np.ndarray, limit: np.ndarray,
+                    tbl: np.ndarray, N: int, max_iter: int = 24) -> np.ndarray:
+    """First position >= pos whose character is NOT in class ``tbl``, clamped
+    per-element to ``limit``. Vectorized +1 advance per round — class runs
+    (closers, whitespace gaps) are short in real text; rounds are capped with a
+    scalar fallback so a pathological run costs O(run), not O(run × events)."""
+    pos = np.minimum(pos, limit)
+    active = (pos < limit) & tbl[arr[np.minimum(pos, N - 1)]]
+    it = 0
+    while active.any():
+        it += 1
+        if it > max_iter:
+            for k in np.flatnonzero(active):
+                p, lim = int(pos[k]), int(limit[k])
+                while p < lim and tbl[arr[p]]:
+                    p += 1
+                pos[k] = p
+            break
+        pos[active] += 1
+        active = (pos < limit) & tbl[arr[np.minimum(pos, N - 1)]]
+    return pos
+
+
+# Character classes of the batch splitter, indexed by byte or codepoint.
+_CP_TABLE_SIZE = 0x110000
+
+
+def _build_cp_tables() -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    ws = np.zeros(_CP_TABLE_SIZE, dtype=bool)           # _is_basic_white_space
+    ws[: 0x21] = True
+    for _c in (0x00A0, 0x1680, 0x3000, 0x2028, 0x2029, 0x202F, 0x205F):
+        ws[_c] = True
+    ws[0x2000:0x200B] = True
+    cl = np.zeros(_CP_TABLE_SIZE, dtype=bool)           # ASCII + unicode closers
+    for _c in _ASCII_CLOSERS | _UNICODE_CLOSERS:
+        cl[_c] = True
+    im = np.zeros(_CP_TABLE_SIZE, dtype=bool)           # immediate terminators
+    for _c in _IMMEDIATE_TERMINATORS:
+        im[_c] = True
+    return ws, cl, im
+
+
+_CP_WS_TBL, _CP_CLOSER_TBL, _CP_IMM_TBL = _build_cp_tables()
+
+
+def _split_batch(
+    codes: np.ndarray, offsets: np.ndarray, ends: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Vectorized sentence splitting over a CONCATENATED batch of documents.
+
+    ``codes`` holds uint8 bytes for pure-ASCII documents or uint32 codepoints
+    (from :func:`_utf8_decode_vec`) for the rest; ``offsets``/``ends`` are
+    per-document [start, end) bounds in it. Returns ``(doc_idx, start_local,
+    length)`` in ``codes`` indices, sorted by (doc, start) — per-doc spans
+    identical to :func:`split_sentences` (property-tested).
+
+    Why this is safe to batch: every maximal same-char run of ``. ! ?`` is an
+    independent "event" (the scalar cursor's jumps only skip closer/whitespace
+    characters, which contain no terminators), so events classify in parallel.
+    Each per-event skip (run end → closers → whitespace gap) is clamped to the
+    event's own document end, and the dot-suppression backward letter scan to
+    its document start — so no state leaks across document boundaries.
+    Immediate terminators (。？！…؟｡ — src/sentence_splitter.c:21-24) each split
+    unconditionally after closer absorption, with NO run merging and no
+    whitespace-gap requirement; all six are non-ASCII, so a uint8 batch skips
+    that pass. Invalid bytes decode to U+FFFD, which is in no character class —
+    exactly the scalar ``cursor++``.
+    """
+    N = codes.shape[0]
+    n_docs = offsets.shape[0]
+    ss0 = _skip_class_vec(codes, offsets.copy(), ends, _CP_WS_TBL, N)
+
+    ev = np.flatnonzero((codes == 0x2E) | (codes == 0x21) | (codes == 0x3F))
+    e_parts, after_parts, ws_parts, doc_parts = [], [], [], []
+
+    if ev.size:
+        # maximal same-char run starts ('..' then '!' is two events); a doc start
+        # always begins a fresh run even if the previous doc ended with the same char
+        oidx = np.searchsorted(offsets, ev, side="left")
+        at_doc_start = (oidx < n_docs) & (offsets[np.minimum(oidx, n_docs - 1)] == ev)
+        starts_mask = at_doc_start
+        nz = ev > 0
+        starts_mask[nz] |= codes[ev[nz] - 1] != codes[ev[nz]]
+        e = ev[starts_mask]
+
+        doc_idx = np.searchsorted(ends, e, side="right")
+        d_end = ends[doc_idx]
+        d_start = offsets[doc_idx]
+
+        # term_end: end of the same-char run (terminator runs are short — the
+        # +1 advance of _skip_class_vec over the still-active set)
+        b0 = codes[e]
+        term_end = np.minimum(e + 1, d_end)
+        active = (term_end < d_end) & (codes[np.minimum(term_end, N - 1)] == b0)
+        it = 0
+        while active.any():
+            it += 1
+            if it > 24:  # pathological terminator run → scalar per-event
+                for k in np.flatnonzero(active):
+                    p, lim, c = int(term_end[k]), int(d_end[k]), codes[e[k]]
+                    while p < lim and codes[p] == c:
+                        p += 1
+                    term_end[k] = p
+                break
+            term_end[active] += 1
+            active = (term_end < d_end) & (codes[np.minimum(term_end, N - 1)] == b0)
+
+        after = _skip_class_vec(codes, term_end, d_end, _CP_CLOSER_TBL, N)
+        ws = _skip_class_vec(codes, after.copy(), d_end, _CP_WS_TBL, N)
+
+        # dot-suppression (only '.' events with a whitespace gap can be blocked)
+        gap = ws > after
+        is_dot = b0 == 0x2E
+        blocked = np.zeros(e.shape, dtype=bool)
+        need = is_dot & gap & (ws < d_end)
+        if need.any():
+            lower = codes | 0x20  # only consulted through ASCII range checks
+
+            # letters immediately before the dot, counted directly (at most 4
+            # gathers), clamped to the doc start like the scalar scan
+            def alpha_at(p):
+                ok = p >= d_start
+                v = lower[np.maximum(p, 0)]
+                return ok & (v >= 97) & (v <= 122)
+            a1 = alpha_at(e - 1)
+            a2 = a1 & alpha_at(e - 2)
+            a3 = a2 & alpha_at(e - 3)
+            a4 = a3 & alpha_at(e - 4)
+            ln = (a1.astype(np.int8) + a2.astype(np.int8)
+                  + a3.astype(np.int8) + a4.astype(np.int8))
+            valid_ln = a1 & ~a4  # 1 <= ln <= 3
+            ws_c = np.minimum(ws, N - 1)
+            lower_follows = (codes[ws_c] >= 97) & (codes[ws_c] <= 122)
+            word_ok = np.zeros(e.shape, dtype=bool)
+            two = need & valid_ln & (ln == 2)
+            if two.any():
+                code = (lower[e[two] - 2].astype(np.int64) << 8) | lower[e[two] - 1]
+                word_ok[two] = np.isin(code, _ABBREV_2_CODES)
+            three = need & valid_ln & (ln == 3)
+            if three.any():
+                code = (lower[e[three] - 3].astype(np.int64) << 16) | \
+                       (lower[e[three] - 2].astype(np.int64) << 8) | \
+                       lower[e[three] - 1]
+                word_ok[three] = np.isin(code, _ABBREV_3_CODES)
+            blocked = need & valid_ln & (lower_follows | word_ok)
+
+        split = (after >= d_end) | (gap & ~(is_dot & blocked))
+        e_parts.append(e[split])
+        after_parts.append(after[split])
+        ws_parts.append(ws[split])
+        doc_parts.append(doc_idx[split])
+
+    if codes.dtype != np.uint8:
+        ev_i = np.flatnonzero(_CP_IMM_TBL[codes])
+        doc_i = np.searchsorted(ends, ev_i, side="right")
+        d_end_i = ends[doc_i]
+        after_i = _skip_class_vec(
+            codes, np.minimum(ev_i + 1, d_end_i), d_end_i, _CP_CLOSER_TBL, N)
+        e_parts.append(ev_i)
+        after_parts.append(after_i)
+        ws_parts.append(_skip_class_vec(codes, after_i.copy(), d_end_i, _CP_WS_TBL, N))
+        doc_parts.append(doc_i)
+
+    # span assembly: each split event closes a span [ss, after); ss chains from the
+    # previous split's ws within the doc (first split in a doc starts at ss0);
+    # each doc emits a tail span [last_ss, end) when content remains
+    if e_parts:
+        s_after, s_ws, s_doc = (np.concatenate(p) for p in
+                                (after_parts, ws_parts, doc_parts))
+        if len(e_parts) > 1:  # interleave run and immediate events in text order
+            order = np.argsort(np.concatenate(e_parts), kind="stable")
+            s_after, s_ws, s_doc = s_after[order], s_ws[order], s_doc[order]
+    else:
+        s_after = s_ws = s_doc = np.empty(0, dtype=np.int64)
+    first_in = np.ones(s_doc.shape, dtype=bool)
+    first_in[1:] = s_doc[1:] != s_doc[:-1]
+    ss_arr = np.empty(s_after.shape, dtype=np.int64)
+    ss_arr[1:] = s_ws[:-1]
+    ss_arr[first_in] = ss0[s_doc[first_in]]
+    keep = s_after > ss_arr
+    last_in = np.ones(s_doc.shape, dtype=bool)
+    last_in[:-1] = s_doc[1:] != s_doc[:-1]
+    last_ss = ss0.copy()
+    last_ss[s_doc[last_in]] = s_ws[last_in]
+
+    tail_keep = ends > last_ss
+    doc_all = np.concatenate([s_doc[keep], np.flatnonzero(tail_keep)])
+    st_all = np.concatenate([ss_arr[keep], last_ss[tail_keep]])
+    ln_all = np.concatenate([(s_after - ss_arr)[keep], (ends - last_ss)[tail_keep]])
+    order = np.lexsort((st_all, doc_all))
+    doc_all, st_all, ln_all = doc_all[order], st_all[order], ln_all[order]
+    return doc_all, st_all - offsets[doc_all], ln_all
+
+
+def _sentence_spans(
+    texts: list[bytes], ascii_: bool,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, bytes]:
+    """Batched sentence split of ``texts`` → ``(doc_idx, start, end, blob)``:
+    global BYTE spans over ``blob``, the texts joined by one NUL each.
+
+    Pure-ASCII texts (``ascii_``) split over their bytes. The others split over
+    the codepoints of one vectorized decode of the whole blob — the NUL is
+    ASCII and no continuation byte, so no sequence decodes across a document
+    boundary — and map back through each codepoint's byte position. Per-doc
+    clamps in :func:`_split_batch` keep the separators out of every span."""
+    blob = b"\x00".join(texts)
+    arr = np.frombuffer(blob, dtype=np.uint8)
+    lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+    boff = np.zeros(len(texts), dtype=np.int64)
+    np.cumsum(lens[:-1] + 1, out=boff[1:])  # +1 per NUL separator
+    bend = boff + lens
+    if ascii_:
+        doc_all, st_loc, ln = _split_batch(arr, boff, bend)
+        gs = boff[doc_all] + st_loc
+        return doc_all, gs, gs + ln, blob
+    cp, is_start = _utf8_decode_vec(arr)
+    bpos = np.flatnonzero(is_start)
+    cp_off = np.searchsorted(bpos, boff)
+    doc_all, st_loc, ln = _split_batch(cp[bpos], cp_off,
+                                       np.searchsorted(bpos, bend))
+    g0 = cp_off[doc_all] + st_loc
+    bpos = np.append(bpos, len(blob))
+    return doc_all, bpos[g0], bpos[g0 + ln], blob
 
 
 # ---------------------------------------------------------------------------
@@ -868,48 +659,24 @@ def fnv1a(data: bytes) -> int:
     return h
 
 
-def fnv1a_many(units: list[bytes]) -> np.ndarray:
-    """Vectorized FNV-1a over a batch of byte strings → uint64 array.
-
-    Vectorizes across units (one numpy pass per byte position), which is fast when
-    unit lengths are bounded (sentences). Matches :func:`fnv1a` bit-for-bit.
-    """
-    m = len(units)
-    if m == 0:
-        return np.empty(0, dtype=np.uint64)
-    lengths = np.fromiter((len(u) for u in units), dtype=np.int64, count=m)
-    if lengths.max(initial=0) == 0:
-        return np.full(m, np.uint64(FNV_OFFSET), dtype=np.uint64)
-    blob = np.frombuffer(b"".join(units), dtype=np.uint8)
-    offsets = np.zeros(m, dtype=np.int64)
-    np.cumsum(lengths[:-1], out=offsets[1:])
-    return _fnv1a_core(blob, offsets, lengths)
-
-
 def fnv1a_flat(values: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     """FNV-1a over flat (values, offsets) buffers — the zero-boxing companion of
-    :func:`extract_units_batch_flat` (no per-unit bytes objects). Bit-identical
-    to :func:`fnv1a` per unit."""
+    :func:`extract_units_batch_flat` (no per-unit bytes objects): one numpy
+    pass per byte position across all units, fast for bounded unit lengths
+    (sentences). Bit-identical to :func:`fnv1a` per unit."""
     m = len(offsets) - 1
-    if m == 0:
-        return np.empty(0, dtype=np.uint64)
     starts = np.asarray(offsets[:-1], dtype=np.int64)
     lengths = np.asarray(offsets[1:], dtype=np.int64) - starts
-    if lengths.max(initial=0) == 0:
-        return np.full(m, np.uint64(FNV_OFFSET), dtype=np.uint64)
-    return _fnv1a_core(np.asarray(values, dtype=np.uint8), starts, lengths)
-
-
-def _fnv1a_core(blob: np.ndarray, offsets: np.ndarray,
-                lengths: np.ndarray) -> np.ndarray:
-    m = len(lengths)
     h = np.full(m, FNV_OFFSET, dtype=np.uint64)
+    max_len = int(lengths.max(initial=0))
+    if max_len == 0:
+        return h
+    blob = np.asarray(values, dtype=np.uint8)
     prime = np.uint64(FNV_PRIME)
-    max_len = int(lengths.max())
     # sort by length so the active set is a suffix → pure slicing, no boolean masks
     order = np.argsort(lengths, kind="stable")
     h_s = h[order]
-    off_s = offsets[order]
+    off_s = starts[order]
     len_s = lengths[order]
     start = 0
     with np.errstate(over="ignore"):
@@ -1155,11 +922,12 @@ def _assemble_units(
     blob: bytes, doc_all: np.ndarray, gs: np.ndarray, ge: np.ndarray,
     batch_ids: list[int], max_length: int,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Spans → normalized flat unit buffers (shared by the ASCII and UTF-8
-    batch paths of :func:`extract_units_batch_flat`).
+    """Spans → normalized flat unit buffers, for every mode of
+    :func:`extract_units_batch_flat`.
 
     ``blob`` holds whitespace-translated text (every byte <= 0x20 is a
-    space), ``gs``/``ge`` are global byte spans, ``doc_all`` indexes
+    space, except the NUL separators of :func:`_sentence_spans`, which no
+    span covers), ``gs``/``ge`` are global byte spans, ``doc_all`` indexes
     ``batch_ids``. Clean spans (no interior double space, no leading or
     trailing space) copy verbatim via one ragged gather; dirty spans
     re-normalize individually. (Sentence spans never start with whitespace;
@@ -1254,11 +1022,14 @@ def extract_units_batch_flat(
     Returns ``(doc_idx, unit_idx, values, offsets)``: unit k's bytes are
     ``values[offsets[k]:offsets[k+1]]``, belonging to document ``doc_idx[k]`` at
     in-document position ``unit_idx[k]``. Row content is bit-identical to
-    :func:`extract_units` per document; ROW ORDER groups the pure-ASCII
-    documents first, then the non-ASCII documents (both fully vectorized —
-    ASCII over bytes, the rest over decoded codepoints) — downstream consumers
-    are order-free relational operators, and the per-doc (doc_idx, unit_idx)
-    pairs are identical.
+    :func:`extract_units` per document. In sentence mode, ROW ORDER groups the
+    pure-ASCII documents first, then the others: both halves run the one
+    vectorized splitter :func:`_split_batch`, the first over bytes and the
+    second over decoded codepoints. The ASCII half skips the decode because
+    it dominates the split: on 2,155 pure-ASCII benchmark documents the
+    codepoint split took 0.12 s against 0.017 s over bytes (one core of a
+    4-vCPU x86 host). Downstream consumers are order-free relational operators, and the per-doc
+    (doc_idx, unit_idx) pairs are identical.
 
     No Python bytes object is made per unit: the Arrow-ready value/offset
     buffers are assembled directly, with one vectorized ragged gather for the
@@ -1266,6 +1037,9 @@ def extract_units_batch_flat(
     are normalized individually, typically a small minority)."""
     if mode not in MODES:
         raise ValueError(f"unknown mode: {mode!r}")
+    # every byte <= 0x20 becomes a space: whitespace-class and letter-class
+    # membership are preserved byte-for-byte, so no span changes, and the
+    # byte-level normalization in _assemble_units is valid
     tts = [t.translate(_WS_TO_SPACE) for t in texts]
     lens_all = np.fromiter(map(len, tts), dtype=np.int64, count=len(tts))
     ne = np.flatnonzero(lens_all > 0)
@@ -1286,33 +1060,13 @@ def extract_units_batch_flat(
         return _assemble_units(blob_all, np.arange(ne.size, dtype=np.int64),
                                gs, gs + lens_all[ne], ne.tolist(), max_length)
     # ASCII/non-ASCII classification in ONE pass over the concatenated
-    # bytes (bitwise-OR per doc segment), replacing a per-doc
-    # frombuffer+any round-trip
+    # bytes (bitwise-OR per doc segment)
     hi = (np.bitwise_or.reduceat(np.frombuffer(blob_all, dtype=np.uint8),
                                  starts_all[ne]) & 0x80) > 0
-    ascii_ids = ne[~hi].tolist()
-    ascii_texts = [tts[i] for i in ascii_ids]
-    na_ids = ne[hi].tolist()
-    na_texts = [tts[i] for i in na_ids]
-
-    parts: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = []
-    if ascii_texts:
-        blob = b"".join(ascii_texts)
-        arr = np.frombuffer(blob, dtype=np.uint8)
-        lens = np.fromiter((len(t) for t in ascii_texts), dtype=np.int64,
-                           count=len(ascii_texts))
-        doc_off = np.zeros(len(lens), dtype=np.int64)
-        np.cumsum(lens[:-1], out=doc_off[1:])
-        doc_all, st_loc, ln_all = _split_ascii_batch(arr, doc_off, doc_off + lens)
-        gs = st_loc + doc_off[doc_all]
-        parts.append(_assemble_units(
-            blob, doc_all, gs, gs + ln_all, ascii_ids, max_length))
-    if na_texts:
-        # non-ASCII docs: batched codepoint split (same translate trick — every
-        # byte <= 0x20 is already a space, so byte-level normalization below is
-        # valid, and the translate changes no span: whitespace-class and
-        # letter-class membership are preserved byte-for-byte)
-        doc_all, gs, ge, blob, _boff = _split_nonascii_docs_byte_spans(na_texts)
-        parts.append(_assemble_units(
-            blob, doc_all, gs, ge, na_ids, max_length))
+    parts = []
+    for ids, ascii_ in ((ne[~hi], True), (ne[hi], False)):
+        if ids.size:
+            ids = ids.tolist()
+            doc_all, gs, ge, blob = _sentence_spans([tts[i] for i in ids], ascii_)
+            parts.append(_assemble_units(blob, doc_all, gs, ge, ids, max_length))
     return _concat_flat_parts(parts)

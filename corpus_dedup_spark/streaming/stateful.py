@@ -57,16 +57,14 @@ def _update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         bitmap = np.zeros(SKETCH_BITS // 8, dtype=np.uint8)
 
     for pdf in pdfs:
-        for text in pdf["text"]:
-            raw = (text or "").encode("utf-8")
-            units = kernel.extract_units(raw)
-            n_docs += 1
-            n_units += len(units)
-            n_bytes += len(raw)
-            if units:
-                h = kernel.fnv1a_many(units) % np.uint64(SKETCH_BITS)
-                np.bitwise_or.at(bitmap, (h // 8).astype(np.int64),
-                                 (np.uint8(1) << (h % 8).astype(np.uint8)))
+        raw = [(t or "").encode("utf-8") for t in pdf["text"]]
+        doc_idx, _u, values, offsets = kernel.extract_units_batch_flat(raw)
+        n_docs += len(raw)
+        n_units += len(doc_idx)
+        n_bytes += sum(map(len, raw))
+        h = kernel.fnv1a_flat(values, offsets) % np.uint64(SKETCH_BITS)
+        np.bitwise_or.at(bitmap, (h // 8).astype(np.int64),
+                         (np.uint8(1) << (h % 8).astype(np.uint8)))
 
     state.update((n_docs, n_units, n_bytes, bitmap.tobytes()))
     yield pd.DataFrame({

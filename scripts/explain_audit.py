@@ -38,9 +38,7 @@ def plan_of(df) -> str:
 
 
 def _masked(text: str) -> str:
-    """``text`` with the ids that change from run to run blanked, and line
-    ends as a reread file has them."""
-    text = re.sub(r"\r\n?", "\n", text)
+    """``text`` with the ids that change from run to run blanked."""
     text = re.sub(r"#\d+", "#", text)
     text = re.sub(r"plan_id=\d+", "plan_id=", text)
     text = re.sub(r"RDD\[\d+\]", "RDD[]", text)
@@ -55,10 +53,13 @@ def _sections(text: str) -> dict[str, str]:
 
 def write_plans(out: list[str], old_path: str) -> None:
     """Write ``out`` to ``old_path``, keeping each old section whose text is
-    the same up to run-specific ids."""
+    the same up to run-specific ids. Both opens use ``newline=""``: a plan
+    can print a bare ``\\r`` (the whitespace class of a regex literal), which
+    universal-newline reading would turn into ``\\n``, so an unchanged
+    section would be rewritten."""
     new = "\n".join(out)
     if os.path.exists(old_path):
-        with open(old_path) as f:
+        with open(old_path, newline="") as f:
             old = _sections(f.read())
         head = new.split("\n## ", 1)[0]
         body = []
@@ -68,7 +69,7 @@ def write_plans(out: list[str], old_path: str) -> None:
             body.append(kept.rstrip() + text[len(text.rstrip()):] if keep
                         else text)
         new = head + "\n" + "".join(body)
-    with open(old_path, "w") as f:
+    with open(old_path, "w", newline="") as f:
         f.write(new)
 
 

@@ -174,10 +174,10 @@ def test_fnv1a_reference_constants():
 
 
 def test_fnv1a_many_matches_scalar():
-    units = [b"", b"a", b"abc", b"hello world", bytes(range(256)), b"x" * 1000]
-    vec = kernel.fnv1a_many(units)
-    for u, v in zip(units, vec):
-        assert int(v) == kernel.fnv1a(u)
+    units = [b"", b"a", b"abc", b"", b"hello world", bytes(range(256)), b"x" * 1000]
+    offsets = np.cumsum([0] + [len(u) for u in units])
+    vec = kernel.fnv1a_flat(np.frombuffer(b"".join(units), np.uint8), offsets)
+    assert [int(v) for v in vec] == [kernel.fnv1a(u) for u in units]
 
 
 # --- UTF-8 decode (src/utf8.c) ---
@@ -234,6 +234,22 @@ def test_extract_units_pipeline():
 def test_extract_units_maxlen():
     units = kernel.extract_units(b"A very long sentence here. Short.", max_length=6)
     assert units == [b"A very", b"Short."]
+
+
+def test_long_ascii_document_batch_matches_scalar():
+    """A pure-ASCII document of 8 KiB or more: the batch kernel's units equal
+    the scalar automaton's spans, normalized (abbreviations, closers,
+    terminator runs and whitespace gaps included)."""
+    doc = b" ".join(
+        b"Mr. Smith met Dr. Jones at St. Paul's (etc.) on day %d... "
+        b"Did it rain?!  \"Yes.\"   It did) ok.x" % i for i in range(160))
+    assert len(doc) >= 8192 and max(doc) < 0x80
+    want = [kernel.normalize_unit(doc[s:s + n])
+            for s, n in kernel.split_sentences(doc)]
+    d, u, v, o = kernel.extract_units_batch_flat([doc])
+    assert [bytes(v[o[k]:o[k + 1]]) for k in range(len(d))] == \
+        [w for w in want if w]
+    assert d.tolist() == [0] * len(d) and u.tolist() == list(range(len(d)))
 
 
 def test_run_mask_marks_disjoint_and_adjacent_runs():

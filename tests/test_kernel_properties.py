@@ -79,7 +79,8 @@ def test_extract_units_deterministic_and_normalized(data):
 @given(st.lists(st.binary(max_size=60), max_size=30))
 @settings(max_examples=150)
 def test_fnv_vectorized_matches_scalar(units):
-    vec = kernel.fnv1a_many(units)
+    offsets = np.cumsum([0] + [len(u) for u in units])
+    vec = kernel.fnv1a_flat(np.frombuffer(b"".join(units), np.uint8), offsets)
     assert [int(v) for v in vec] == [kernel.fnv1a(u) for u in units]
 
 
@@ -246,16 +247,22 @@ def test_window_hashes_mod61_match_horner(text, window):
             assert got[s] == got[s + 1]
 
 
-# unicode-dense splitter fuzz: terminators/closers/ws/invalid bytes at high
-# density exercise every branch of the codepoint batch automaton
+# dense splitter fuzz: terminators/closers/ws/invalid bytes at high density
+# exercise every branch of the batch splitter, over codepoints and (for the
+# pure-ASCII alphabet) over bytes; the 30-long runs outlast the 24 vectorized
+# rounds of the run and class skips, so their scalar fallbacks run too
+_RUNS = [c * 30 for c in ".) "]
 _UNI_ALPHABET = st.sampled_from(
     list("ab cz.!?\"')]}。？！…؟｡」»"
          "’  　д文z ")
-    + ["mr.", "etc.", "st. "]
+    + ["mr.", "etc.", "st. ", "」" * 30] + _RUNS
 )
+_ASCII_ALPHABET = st.sampled_from(
+    list("ab cz.!?\"')]}") + ["mr.", "etc.", "st. "] + _RUNS)
 
 
-@given(st.lists(st.lists(_UNI_ALPHABET, max_size=40).map("".join), max_size=6),
+@given(st.one_of(*(st.lists(st.lists(a, max_size=40).map("".join), max_size=6)
+                   for a in (_UNI_ALPHABET, _ASCII_ALPHABET))),
        st.sampled_from([0, 7]))
 @settings(max_examples=300, deadline=None)
 def test_unicode_dense_batch_matches_scalar(texts, max_length):

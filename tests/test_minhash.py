@@ -72,7 +72,9 @@ def test_near_pairs_recall(spark, cfg, planted):
     texts = {r["url"]: r["text"] for r in df.select("url", "text").collect()}
 
     def shingles(url):
-        uh = kernel.fnv1a_many(kernel.extract_units(texts[url].encode()))
+        uh = np.array([kernel.fnv1a(u)
+                       for u in kernel.extract_units(texts[url].encode())],
+                      dtype=np.uint64)
         return set(_shingle_hashes(uh, cfg.shingle_k).tolist())
 
     near = truth_pairs[truth_pairs["kind"] == "near"]

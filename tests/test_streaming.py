@@ -1,10 +1,11 @@
 """Structured Streaming dedup: streamed keep-set equals the batch keep-set."""
 
-import pyspark.sql.functions as F
+import re
+
+import numpy as np
 import pytest
 
 from corpus_dedup_spark import kernel
-from corpus_dedup_spark.operators.exact_dedup import explode_units_arrow
 from corpus_dedup_spark.sources.pages import pages_spark
 from corpus_dedup_spark.streaming.stream_dedup import run_stream_to_memory
 
@@ -32,7 +33,11 @@ def test_stream_matches_batch_keepset(spark, tmp_path, capsys):
 
 
 def test_stateful_host_stats(spark, tmp_path):
-    from corpus_dedup_spark.streaming.stateful import run_host_stats_to_memory
+    """Per-host counters of the stateful operator (batch kernel) equal a
+    scalar-kernel recount: docs, units, bytes, and the distinct-unit
+    estimate of a sketch built from scalar FNV-1a unit hashes."""
+    from corpus_dedup_spark.streaming.stateful import (
+        SKETCH_BITS, _linear_count, run_host_stats_to_memory)
 
     df, _, _ = pages_spark(spark, n_docs=80, seed=9)
     path = str(tmp_path / "pages_state")
@@ -43,22 +48,22 @@ def test_stateful_host_stats(spark, tmp_path):
     got = {r["host"]: r for r in spark.sql(
         "select * from hs_test").collect()}
 
-    # batch truth: per-host doc and unit counts, the units from the batch
-    # engine's extraction (the operator under test runs the scalar kernel)
-    truth = {
-        r["host"]: r for r in (
-            df.selectExpr("regexp_extract(url, 'https?://([^/]+)/', 1) as host",
-                          "url", "text")
-            .join(explode_units_arrow(df).groupBy("url").count(), "url",
-                  "left")
-            .groupBy("host")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.coalesce("count", F.lit(0))).alias("n_units"))
-            .collect())
-    }
+    truth: dict[str, list] = {}
+    for r in df.select("url", "text").collect():
+        m = re.search(r"https?://([^/]+)/", r["url"])
+        raw = (r["text"] or "").encode()
+        units = kernel.extract_units(raw)
+        t = truth.setdefault(m.group(1) if m else "",
+                             [0, 0, 0, np.zeros(SKETCH_BITS // 8, np.uint8)])
+        t[0] += 1
+        t[1] += len(units)
+        t[2] += len(raw)
+        for u in units:
+            h = kernel.fnv1a(u) % SKETCH_BITS
+            t[3][h // 8] |= 1 << (h % 8)
     assert set(got) == set(truth)
-    for host, t in truth.items():
-        assert got[host]["n_docs"] == t["n_docs"], host
-        assert got[host]["n_units"] == t["n_units"], host
-        # sketch estimate within 25% of per-host distinct units (small counts)
-        assert got[host]["approx_unique_units"] > 0
+    for host, (n_docs, n_units, n_bytes, bitmap) in truth.items():
+        assert got[host]["n_docs"] == n_docs, host
+        assert got[host]["n_units"] == n_units, host
+        assert got[host]["n_bytes"] == n_bytes, host
+        assert got[host]["approx_unique_units"] == _linear_count(bitmap), host
