@@ -17,6 +17,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+# Most probes brute_force_topk collects to the driver. The probe matrix
+# (n_probes x dim float64) is pickled into every scan task: 4,096 x 64 x 8 B
+# = 2 MiB per task at the test embeddings' dim 64 (24 MiB at dim 768).
+# Callers pass at most 2,000 probes today (the sf0.1 embeddings table).
+MAX_PROBES = 4096
+
 
 def _cosine_expr(a, b):
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -34,8 +40,8 @@ def brute_force_topk(vectors: DataFrame, probes: DataFrame, k: int = 10,
 
     probes is expected small (it was broadcast before r6; now it is collected
     into a (n_probes × dim) matrix — the same "must fit on driver+executors"
-    contract). The scan side stays partitioned. For all-pairs top-k at scale
-    use :func:`lsh_ann_topk`.
+    contract); more than ``MAX_PROBES`` raises ValueError. The scan side
+    stays partitioned. For all-pairs top-k at scale use :func:`lsh_ann_topk`.
 
     r6 shape: ONE ``mapInArrow`` pass scores a whole Arrow batch against every
     probe with batched numpy and emits only each Arrow batch's LOCAL top-k
@@ -60,7 +66,11 @@ def brute_force_topk(vectors: DataFrame, probes: DataFrame, k: int = 10,
 
     from corpus_dedup_spark.functions.layout import fan_out
 
-    prows = probes.select(id_col, vec_col).collect()
+    prows = probes.select(id_col, vec_col).limit(MAX_PROBES + 1).collect()
+    if len(prows) > MAX_PROBES:
+        raise ValueError(
+            f"brute_force_topk: more than MAX_PROBES={MAX_PROBES} probes; "
+            "use lsh_ann_topk for large probe sets")
     kk = int(k)
     # both id columns come from the same id space (probes ⊆ vectors in every
     # caller); emit both with the vectors side's type

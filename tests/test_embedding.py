@@ -30,6 +30,15 @@ def test_brute_force_matches_numpy(spark, vectors):
         assert mine == expected, pid
 
 
+def test_brute_force_probe_cap_raises(spark, vectors, monkeypatch):
+    from corpus_dedup_spark.operators import embedding_dedup
+
+    monkeypatch.setattr(embedding_dedup, "MAX_PROBES", 3)
+    probes = vectors.filter(F.col("vec_id") < 4)
+    with pytest.raises(ValueError, match="MAX_PROBES=3"):
+        brute_force_topk(vectors, probes, k=1)
+
+
 def test_lsh_ann_recall_on_planted_neighbors(spark):
     """ANN must find planted close neighbors (cos ≈ 0.99). Random vectors have no
     angularly-close top-1, so recall is measured on planted structure — the workload
