@@ -218,13 +218,6 @@ def rolling_fingerprint_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def content_fingerprint_expr(text: Column) -> Column:
-    """Fast JVM-side content fingerprint: xxhash64 of the whitespace-normalized text.
-    Use for exact-dup blocking when bit-parity with the reference hash isn't needed."""
-    norm = F.regexp_replace(F.trim(text), "\\s+", " ")
-    return F.xxhash64(norm).alias("fingerprint")
-
-
 def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach the full analysis column set to a document DataFrame.
 
@@ -233,8 +226,7 @@ def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     ref src/block_tree_core.c:162-201), not xxhash64: it is the document-level
     member of the reference's own fingerprint family, and being plain modular
     arithmetic it is value-checkable by an ANSI-SQL oracle end-to-end
-    (SQL_TEXT_PROFILE). ``content_fingerprint_expr`` (xxhash64, JVM-side) stays
-    available for blocking where hash parity doesn't matter."""
+    (SQL_TEXT_PROFILE)."""
     c = F.col(text_col)
     feats = quality_features(c)
     return df.select(

@@ -735,13 +735,6 @@ def rolling_prefix(cps: np.ndarray, base: int, add: int = 0) -> tuple[np.ndarray
     return prefix, pow_
 
 
-def window_hash(prefix: np.ndarray, pow_: np.ndarray, start: int, end: int) -> int:
-    """O(1) window hash ``prefix[e] - prefix[s]*pow[e-s]`` mod 2^64
-    (ref: src/block_tree_core.c:90-97)."""
-    with np.errstate(over="ignore"):
-        return int(prefix[end] - prefix[start] * pow_[end - start])
-
-
 def window_hashes(
     prefix: np.ndarray, pow_: np.ndarray, starts: np.ndarray, lengths: np.ndarray
 ) -> np.ndarray:

@@ -280,19 +280,6 @@ def extract_media_features(media: DataFrame, fake: bool = False) -> DataFrame:
     return pruned.mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
-def media_exact_dup_pairs(features: DataFrame) -> DataFrame:
-    """Exact media dup pairs: group on (content_hash, n_bytes) — never the payload
-    bytes (binary never shuffles)."""
-    g = features.select("media_id", "content_hash", "n_bytes")
-    a = g.withColumnRenamed("media_id", "id_a")
-    b = g.withColumnRenamed("media_id", "id_b")
-    return (
-        a.join(b, ["content_hash", "n_bytes"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-
-
 FRAME_SCHEMA = StructType([
     StructField("media_id", StringType(), False),
     StructField("frame_idx", LongType(), False),
@@ -337,20 +324,3 @@ def sample_frames_decoded(media: DataFrame, every_n: int = 1) -> DataFrame:
 
     pruned = media.filter(F.col("kind") == "video").select("media_id", "payload")
     return pruned.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing from METADATA only (no decode): one row per
-    sampled timestamp. Use :func:`sample_frames_decoded` for real Y4M frames."""
-    return (
-        media.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(F.lit(0),
-                           F.greatest(F.coalesce(F.col("duration_ms"), F.lit(0))
-                                      - 1, F.lit(0)),
-                           F.lit(every_ms))
-            ).alias("frame_ts_ms"),
-        )
-    )

@@ -22,8 +22,7 @@ window state is O(1) per row.
 Skew note: the window partitions by the join key, so one pathological key
 serializes on one task — same exposure as any keyed window. For web-scale
 event streams partition keys are users/hosts with bounded activity; for a
-truly hot key, salt by time-bucket and stitch (the documented salting recipe
-in functions/skew.py applies unchanged).
+truly hot key, salt by time-bucket and stitch.
 """
 
 from __future__ import annotations

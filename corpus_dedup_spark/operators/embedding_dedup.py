@@ -1,5 +1,5 @@
 """Embedding-space similarity: brute-force cosine top-k (baseline) and a random-
-hyperplane-LSH bucketed variant (the scale path), plus embedding-cosine near-dup pairs.
+hyperplane-LSH bucketed variant (the scale path).
 
 Scale story: brute-force is O(N·M) — correct but only for small probe sets or as a
 per-bucket kernel. The LSH variant buckets vectors by sign-pattern of h random
@@ -247,32 +247,4 @@ def lsh_ann_topk(vectors: DataFrame, k: int = 10, n_planes: int = 12,
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("probe_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def embedding_dup_pairs(vectors: DataFrame, threshold: float = 0.95,
-                        n_planes: int = 10, n_tables: int = 4, seed: int = 7,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        dim: int | None = None) -> DataFrame:
-    """Embedding-cosine near-dup pairs (id_a < id_b, cosine ≥ threshold), multi-table
-    LSH-bucketed. P(pair missed) = (1 - (1-θ/π)^n_planes)^n_tables — e.g. cosine 0.99
-    with 10 planes × 4 tables misses < 1%."""
-    b = _bucketed(vectors, n_planes, n_tables, seed, id_col, vec_col, dim)
-    left = b.select("bucket", F.col(id_col).alias("id_a"))
-    right = b.select("bucket", F.col(id_col).alias("id_b"))
-    cand = (
-        left.join(right, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    v = vectors.select(F.col(id_col), F.col(vec_col))
-    return (
-        cand.join(v.select(F.col(id_col).alias("id_a"),
-                           F.col(vec_col).alias("va")), "id_a")
-        .join(v.select(F.col(id_col).alias("id_b"),
-                       F.col(vec_col).alias("vb")), "id_b")
-        .withColumn("cosine", _cosine_expr(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )

@@ -134,16 +134,6 @@ def dedup_units(units: DataFrame, id_col: str = "url") -> DataFrame:
     return dedup_keepers(units, id_col).drop("n_occ")
 
 
-def dedup_stats(units_marked: DataFrame) -> DataFrame:
-    """Global counters — mirrors the reference summary (src/dedup.c:1113-1141)."""
-    return units_marked.agg(
-        F.count("*").alias("total_units"),
-        F.count_if(~F.col("is_dup")).alias("unique_units"),
-        F.count_if(F.col("is_dup")).alias("duplicate_units"),
-        F.sum(F.length("norm_unit")).alias("bytes_processed"),
-    )
-
-
 def dedup_stats_from_keepers(keepers: DataFrame) -> DataFrame:
     """Same counters from the aggregated keeper table (bit-identical values)."""
     return keepers.agg(
@@ -319,9 +309,9 @@ def write_corpus_state(corpus_units: DataFrame, table: str,
     :func:`dedup_against_corpus` is co-located: the bucketed scan reports
     ``HashPartitioning(norm_unit, buckets)``, which satisfies the join's
     required distribution — the historical corpus side gets NO Exchange
-    (``Bucketed: true`` in the scan, verified by tests/test_exact_dedup.py
-    and the PLANS.md audit), only the new batch shuffles, to the bucket
-    count. This is the parquet stand-in for Iceberg ``bucket(norm_unit, N)``
+    (``Bucketed: true`` in the scan, checked by
+    tests/test_plans.py::test_bucketed_anti_join), only the new batch
+    shuffles, to the bucket count. This is the parquet stand-in for Iceberg ``bucket(norm_unit, N)``
     (storage-partitioned join); size ``buckets`` so one bucket ≈ 128-512 MB
     at the target corpus size (10^12 docs ⇒ O(10^5) buckets).
 
@@ -349,9 +339,9 @@ def dedup_against_corpus(new_pages: DataFrame, corpus_units: DataFrame,
     corpus state stored bucketed by norm_unit (:func:`write_corpus_state`;
     Iceberg `bucket(norm_unit, N)` in production) the join is co-located and
     only the new batch shuffles: the bucketed scan carries the partitioning,
-    so the corpus side has NO Exchange (demonstrated: PLANS.md "Bucketed
-    incremental dedup" section + tests/test_exact_dedup.py). The corpus side
-    is pruned to the single key column, so no historical text bytes move.
+    so the corpus side has NO Exchange (checked by
+    tests/test_plans.py::test_bucketed_anti_join). The corpus side is pruned
+    to the single key column, so no historical text bytes move.
     """
     units = explode_units_arrow(new_pages, mode, max_length, id_col=id_col)
     fresh = units.join(

@@ -68,6 +68,23 @@ def table_rows(path: str) -> int:
         if f.endswith(".parquet") and not f.startswith("_"))
 
 
+def units_stage(pages: DataFrame, cfg: DedupConfig,
+                id_col: str = "url") -> DataFrame:
+    """The table :class:`DedupPipeline` writes as its ``units`` checkpoint.
+
+    Map-only: extraction runs in the scan pass and the write is
+    embarrassingly parallel — NO shuffle touches the 26-units/doc occurrence
+    stream here. Running mark_duplicates' window (hash-partition + sort of
+    EVERY occurrence) before this write would be exactly the all-occurrences
+    shuffle SCALE.md's keeper-agg design exists to avoid; dedup happens in the
+    next stage's partial agg. A per-occurrence is_dup listing (duplicates
+    sink) stays derivable from this table via
+    operators.exact_dedup.mark_duplicates without recomputing extraction."""
+    from corpus_dedup_spark.operators.exact_dedup import explode_units_arrow
+
+    return explode_units_arrow(pages, cfg.mode, cfg.max_length, id_col=id_col)
+
+
 class DedupPipeline:
     """End-to-end: pages → exact unit dedup → near-dup LSH edges → clusters."""
 
@@ -244,7 +261,6 @@ class DedupPipeline:
 
     def run(self, pages: DataFrame, id_col: str = "url") -> dict[str, DataFrame]:
         from corpus_dedup_spark.operators.exact_dedup import (dedup_keepers,
-                                                              explode_units_arrow,
                                                               reassemble)
         from corpus_dedup_spark.operators.connected_components import (
             attach_labels, connected_components)
@@ -256,18 +272,8 @@ class DedupPipeline:
         if self.stage_is_complete("units"):
             out["units"] = self._read("units")
         else:
-            # Map-only stage: extraction runs in the scan pass and the write is
-            # embarrassingly parallel — NO shuffle touches the 26-units/doc
-            # occurrence stream here. The old shape ran mark_duplicates' window
-            # (hash-partition + sort of EVERY occurrence) before this write,
-            # which is exactly the all-occurrences shuffle SCALE.md's keeper-agg
-            # design exists to avoid; dedup moved to the next stage's partial
-            # agg. A per-occurrence is_dup listing (duplicates sink) stays
-            # derivable from this table via operators.exact_dedup.mark_duplicates
-            # without recomputing extraction.
-            out["units"] = self._write(
-                explode_units_arrow(pages, self.cfg.mode, self.cfg.max_length,
-                                    id_col=id_col), "units")
+            out["units"] = self._write(units_stage(pages, self.cfg, id_col),
+                                       "units")
 
         if self.stage_is_complete("deduped"):
             out["deduped"] = self._read("deduped")

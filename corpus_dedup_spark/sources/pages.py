@@ -177,23 +177,6 @@ def generate_pages(
     return pages, truth_pairs, clusters
 
 
-def pages_spark(spark, n_docs: int = 1000, seed: int = 42):
-    """Create the pages DataFrame in Spark with the exact input-hint schema."""
-    from pyspark.sql.types import (BinaryType, StringType, StructField,
-                                   StructType, TimestampType)
-
-    pdf, truth_pairs, clusters = generate_pages(n_docs, seed)
-    schema = StructType([
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-        StructField("html", BinaryType(), True),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-    ])
-    df = spark.createDataFrame(pdf, schema=schema)
-    return df, truth_pairs, clusters
-
-
 def documents_as_pages(spark, sf_dir: str):
     """Adapt the driver's documents.parquet to the pages schema (url, warc_ts, html,
     text, lang) so every operator runs on driver-provided data too."""

@@ -86,12 +86,3 @@ def stream_host_stats(spark: SparkSession, input_dir: str, schema) -> DataFrame:
         _update, OUTPUT_SCHEMA, STATE_SCHEMA,
         outputMode="update", timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_host_stats_to_memory(spark: SparkSession, input_dir: str, schema,
-                             query_name: str = "host_stats"):
-    out = stream_host_stats(spark, input_dir, schema)
-    return (
-        out.writeStream.format("memory").queryName(query_name)
-        .outputMode("update").trigger(availableNow=True).start()
-    )

@@ -49,20 +49,3 @@ def stream_unit_dedup(spark: SparkSession, input_dir: str, schema,
     if bounded_state:
         return units.dropDuplicatesWithinWatermark(["norm_unit"])
     return units.dropDuplicates(["norm_unit"])
-
-
-def run_stream_to_memory(spark: SparkSession, input_dir: str, schema,
-                         query_name: str = "stream_dedup",
-                         bounded_state: bool = False, **kwargs):
-    """Test/demo harness: availableNow trigger drains existing files once into an
-    in-memory sink; returns the StreamingQuery. The harness drains a FINITE file
-    set, so exact dedup (bounded_state=False) is the sound harness default."""
-    deduped = stream_unit_dedup(spark, input_dir, schema,
-                                bounded_state=bounded_state, **kwargs)
-    return (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -111,21 +111,3 @@ def stream_near_dup_flags(spark: SparkSession, input_dir: str, schema,
         .filter(F.col("jaccard") >= F.lit(cfg.jaccard_threshold))
     )
     return verified
-
-
-def run_stream_near_dup_to_memory(spark, input_dir, schema, corpus_bands,
-                                  corpus_shingles, cfg,
-                                  query_name: str = "stream_near_dup",
-                                  bounded_state: bool = False, **kwargs):
-    """Test/demo harness: drain existing files once (availableNow) into an
-    in-memory sink; finite file set ⇒ exact pair-dedup is the sound default."""
-    flags = stream_near_dup_flags(spark, input_dir, schema, corpus_bands,
-                                  corpus_shingles, cfg,
-                                  bounded_state=bounded_state, **kwargs)
-    return (
-        flags.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -3,7 +3,7 @@
 import pytest
 
 from corpus_dedup_spark.operators.block_dups import shared_block_pairs
-from corpus_dedup_spark.sources.pages import pages_spark
+from tests.helpers import pages_spark
 
 
 def test_finds_planted_shared_blocks(spark):

@@ -1,16 +1,15 @@
-"""Storage-bucketed corpus state eliminates the state-side shuffle.
+"""Storage-bucketed corpus state gives the same incremental-dedup rows as a
+plain one.
 
-SCALE.md and dedup_against_corpus claim: with the corpus keeper table stored
-bucketed by norm_unit (Iceberg ``bucket(norm_unit, N)`` in production), the
-incremental anti-join is co-located — only the NEW batch shuffles, and no
-historical unit bytes move. The sandbox has no Iceberg, but Spark's native
-bucketed tables exercise the identical planner rule (bucketing-aware scan →
-no Exchange on the bucketed side). These tests pin that plan shape.
+With the corpus keeper table stored bucketed by norm_unit (Iceberg
+``bucket(norm_unit, N)`` in production), the incremental anti-join is
+co-located: only the new batch shuffles (the plan shape is also
+tests/test_plans.py::test_bucketed_anti_join). Spark's native bucketed
+tables stand in for Iceberg here; bucketing is a physical property only.
 """
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _plan(df) -> str:

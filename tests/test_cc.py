@@ -1,6 +1,7 @@
 """Connected components: correctness on known graphs + convergence on chains."""
 
-import pyspark.sql.functions as F
+import random
+
 import pytest
 
 from corpus_dedup_spark.operators.connected_components import (
@@ -70,6 +71,37 @@ def test_distributed_path_matches_driver_path(spark):
     assert set(dist.values()) == {"c0", "k0", "x"}
 
 
+def _random_graph(seed: int) -> list:
+    """Chains, stars and a few random extra edges over shuffled string ids,
+    with duplicate and reversed copies of some edges."""
+    rng = random.Random(seed)
+    ids = [f"v{i:03d}" for i in range(120)]
+    rng.shuffle(ids)
+    edges, at = [], 0
+    while at < len(ids) - 1:
+        size = rng.randint(2, 12)
+        part, at = ids[at:at + size], at + size
+        if rng.random() < 0.5:
+            edges += list(zip(part, part[1:]))                 # chain
+        else:
+            edges += [(part[0], v) for v in part[1:]]         # star
+    edges += [tuple(rng.sample(ids, 2)) for _ in range(6)]
+    noise = rng.sample(edges, len(edges) // 4)
+    return edges + noise + [(b, a) for a, b in noise]
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_star_path_matches_driver_on_random_graphs(spark, seed):
+    """The distributed star loop stops at a star forest whose labels are the
+    driver union-find's, on graphs mixing long chains, stars and repeats."""
+    df = spark.createDataFrame(_random_graph(seed), ["src", "dst"])
+    star = {r["node"]: r["cluster_id"]
+            for r in connected_components(df, driver_max_edges=0).collect()}
+    drv = {r["node"]: r["cluster_id"]
+           for r in connected_components(df).collect()}
+    assert star == drv
+
+
 def test_driver_path_non_string_ids(spark):
     df = spark.createDataFrame([(2, 1), (3, 2), (10, 11)], ["src", "dst"])
     got = {r["node"]: r["cluster_id"] for r in connected_components(df).collect()}
@@ -77,9 +109,9 @@ def test_driver_path_non_string_ids(spark):
 
 
 def test_non_convergence_raises(spark):
-    # one star round cannot reach the fixpoint of a 12-node chain: the loop
+    # one star round leaves a 32-node chain far from a star forest: the loop
     # must refuse to return partial labels
-    edges = [(f"c{i:02d}", f"c{i+1:02d}") for i in range(11)]
+    edges = [(f"c{i:02d}", f"c{i+1:02d}") for i in range(31)]
     df = spark.createDataFrame(edges, ["src", "dst"])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, driver_max_edges=0, max_iter=1)

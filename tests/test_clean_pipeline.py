@@ -11,7 +11,7 @@ from corpus_dedup_spark.functions.urls import canonical_url_expr
 from corpus_dedup_spark.operators.boilerplate import (
     boilerplate_ngram_stats, decontaminate_ngram_hits)
 from corpus_dedup_spark.operators.exact_dedup import run_exact_dedup
-from corpus_dedup_spark.sources.pages import pages_spark
+from tests.helpers import pages_spark
 
 
 def test_clean_corpus_composition(spark):

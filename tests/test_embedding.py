@@ -1,11 +1,10 @@
-"""Embedding similarity: brute-force exactness, LSH-ANN recall, dup pairs."""
+"""Embedding similarity: brute-force exactness and LSH-ANN recall."""
 
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from corpus_dedup_spark.operators.embedding_dedup import (brute_force_topk,
-                                                          embedding_dup_pairs,
                                                           lsh_ann_topk)
 
 
@@ -54,18 +53,6 @@ def test_lsh_ann_recall_on_planted_neighbors(spark):
     got = {r["probe_id"]: r["neighbor_id"] for r in ann}
     hits = sum(got.get(1000 + i) == i for i in range(30))
     assert hits / 30 >= 0.9, f"ANN planted-neighbor recall {hits}/30"
-
-
-def test_embedding_dup_pairs_finds_planted(spark):
-    import pandas as pd
-    rng = np.random.default_rng(3)
-    base = rng.standard_normal((50, 16)).astype(np.float32)
-    dup = base[7] + rng.standard_normal(16).astype(np.float32) * 0.01
-    rows = [(i, base[i].tolist()) for i in range(50)] + [(99, dup.tolist())]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    pairs = embedding_dup_pairs(df, threshold=0.98, n_planes=8,
-                                dim=16).collect()
-    assert any(r["id_a"] == 7 and r["id_b"] == 99 for r in pairs)
 
 
 def test_lsh_ann_recall_matches_theory(spark, sf_dir):

@@ -1,9 +1,7 @@
-"""Smoke the driver contract: entry() + every rows-only query returns a DataFrame."""
-
-import pytest
+"""Smoke the driver contract: entry() runs, and queries() and oracle_sql()
+name the same queries."""
 
 import __spark_entry__ as entry_mod
-from corpus_dedup_spark.plans.queries import ORACLES, QUERIES
 
 
 def test_entry_runs(spark):
@@ -16,13 +14,6 @@ def test_entry_runs(spark):
 def test_contract_shapes():
     q = entry_mod.queries()
     o = entry_mod.oracle_sql()
-    assert set(o) <= set(q)
+    # every query has an oracle: one added without fails here
+    assert set(o) == set(q)
     assert len(q) >= 15
-
-
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    n = df.count()
-    assert n >= 0
-    assert len(df.columns) >= 1

@@ -8,10 +8,10 @@ import pytest
 from corpus_dedup_spark import kernel
 from corpus_dedup_spark.operators import exact_dedup
 from corpus_dedup_spark.operators.exact_dedup import (
-    dedup_stats, explode_units_arrow, mark_duplicates, reassemble,
-    run_exact_dedup, verify_no_duplicates)
-from corpus_dedup_spark.sources.pages import pages_spark
-from scripts.explain_audit import exchanges, plan_of
+    explode_units_arrow, mark_duplicates, reassemble, run_exact_dedup,
+    verify_no_duplicates)
+from tests.helpers import dedup_stats, pages_spark
+from tests.plans import exchanges, plan_of
 
 
 @pytest.fixture(scope="module")
@@ -65,19 +65,6 @@ def test_verify_counts_duplicates_by_content(spark, pages, monkeypatch,
     # count, because Spark holds persisted RDDs by weak reference, so one
     # that an earlier test left unreachable can be dropped meanwhile.
     assert _persisted_rdd_ids(spark) <= persisted
-
-
-def test_verify_fingerprint_exchange_carries_no_unit_bytes(spark, pages):
-    """The always-run phase of verify_no_duplicates shuffles 64-bit
-    fingerprints and counts only: every column into its Exchange is a long
-    (``#<id>L`` in the formatted plan), none is the unit bytes."""
-    units = exact_dedup.explode_units_arrow(pages)
-    plan = plan_of(exact_dedup._repeated_fingerprints(units))
-    inputs = exchanges(plan)
-    assert inputs, plan
-    for _, cols, _ in inputs:
-        assert "norm_unit" not in cols, cols
-        assert all(re.fullmatch(r"\w+#\d+L", c) for c in cols.split(", ")), cols
 
 
 def test_verify_repeat_phase_shuffles_no_unit_bytes_before_join(spark, pages):
@@ -268,8 +255,6 @@ def test_bucketed_corpus_state_join_no_corpus_exchange(spark, tmp_path):
     side exchange-FREE (`Bucketed: true` scan satisfies the required
     distribution); only the new batch shuffles. Results identical to the
     unbucketed join."""
-    import re
-
     from corpus_dedup_spark.operators.exact_dedup import (
         dedup_against_corpus, explode_units_arrow, write_corpus_state)
 

@@ -203,7 +203,8 @@ def test_rolling_hash_window_equals_direct():
         direct = 0
         for c in cps[s:e]:
             direct = (direct * 31 + int(c)) % (1 << 64)
-        assert kernel.window_hash(prefix, pow_, s, e) == direct
+        assert int(kernel.window_hashes(prefix, pow_, np.array([s]),
+                                        np.array([e - s]))[0]) == direct
 
 
 def test_search_hash_cp_plus_one():

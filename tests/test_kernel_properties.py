@@ -96,7 +96,8 @@ def test_window_hash_equals_direct_horner(data, a, b):
     direct = 0
     for c in cps[s:e]:
         direct = (direct * 31 + int(c)) % (1 << 64)
-    assert kernel.window_hash(prefix, pow_, s, e) == direct
+    assert int(kernel.window_hashes(prefix, pow_, np.array([s]),
+                                        np.array([e - s]))[0]) == direct
 
 
 # ---------------------------------------------------------------------------

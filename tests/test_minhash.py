@@ -16,8 +16,8 @@ from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
                                                       edges_from_features,
                                                       near_dup_clusters,
                                                       near_dup_edges)
-from corpus_dedup_spark.sources.pages import pages_spark
-from scripts.explain_audit import exchanges, plan_of
+from tests.helpers import pages_spark
+from tests.plans import exchanges, plan_of
 
 
 @pytest.fixture(scope="module")

@@ -1,11 +1,9 @@
-"""Multimodal plumbing: schema, mapInPandas batching, fingerprint dedup, stubs."""
+"""Multimodal plumbing: schema, mapInPandas batching, content hashes, stubs."""
 
 import pytest
 
 from corpus_dedup_spark.multimodal.ops import (MEDIA_SCHEMA,
-                                               extract_media_features,
-                                               media_exact_dup_pairs,
-                                               sample_frames)
+                                               extract_media_features)
 
 
 @pytest.fixture(scope="module")
@@ -49,18 +47,6 @@ def test_fake_features_deterministic(spark, media):
     assert len(f1["m1"]) == 32
     assert f1["m1"] == f1["m2"]  # identical payload → identical features
     assert f1["m1"] != f1["m3"]
-
-
-def test_media_exact_dup_pairs(spark, media):
-    feats = extract_media_features(media, fake=True)
-    pairs = {(r["id_a"], r["id_b"]) for r in media_exact_dup_pairs(feats).collect()}
-    assert pairs == {("m1", "m2")}
-
-
-def test_sample_frames(spark, media):
-    frames = sample_frames(media, every_ms=1000).collect()
-    got = sorted((r["media_id"], r["frame_ts_ms"]) for r in frames)
-    assert got == [("m5", 0), ("m5", 1000), ("m5", 2000), ("m5", 3000)]
 
 
 # --- real audio (stdlib WAV) and video (Y4M) decode ---------------------------

@@ -11,7 +11,7 @@ from corpus_dedup_spark.config import DedupConfig
 from corpus_dedup_spark.operators.minhash_lsh import (doc_features,
                                                       near_dup_clusters)
 from corpus_dedup_spark.plans.pipeline import STAGES, DedupPipeline
-from corpus_dedup_spark.sources.pages import pages_spark
+from tests.helpers import pages_spark
 
 
 @pytest.fixture()

@@ -5,9 +5,9 @@ import pyspark.sql.functions as F
 from corpus_dedup_spark.config import DedupConfig
 from corpus_dedup_spark.operators.minhash_lsh import (_inter_union_udf,
                                                       doc_features)
-from corpus_dedup_spark.sources.pages import pages_spark
 from corpus_dedup_spark.streaming.stream_near_dup import (
-    corpus_band_index, run_stream_near_dup_to_memory)
+    corpus_band_index, stream_near_dup_flags)
+from tests.helpers import drain_to_memory, pages_spark
 
 
 def _batch_truth(spark, stream_df, corpus_df, cfg):
@@ -48,9 +48,9 @@ def test_stream_flags_planted_corpus_copies(spark, tmp_path):
 
     bands, shingles = corpus_band_index(corpus, cfg)
     bands, shingles = bands.cache(), shingles.cache()
-    q = run_stream_near_dup_to_memory(
+    q = drain_to_memory(stream_near_dup_flags(
         spark, path, stream_df.schema, bands, shingles, cfg,
-        query_name="snd_test")
+        bounded_state=False), "snd_test")
     q.awaitTermination(180)
     got = {(r["url"], r["corpus_id"]): r["jaccard"]
            for r in spark.sql("select * from snd_test").collect()}

@@ -6,8 +6,8 @@ import numpy as np
 import pytest
 
 from corpus_dedup_spark import kernel
-from corpus_dedup_spark.sources.pages import pages_spark
-from corpus_dedup_spark.streaming.stream_dedup import run_stream_to_memory
+from corpus_dedup_spark.streaming.stream_dedup import stream_unit_dedup
+from tests.helpers import drain_to_memory, pages_spark
 
 
 def test_stream_matches_batch_keepset(spark, tmp_path, capsys):
@@ -18,7 +18,8 @@ def test_stream_matches_batch_keepset(spark, tmp_path, capsys):
     path = str(tmp_path / "pages_stream")
     df.write.mode("overwrite").parquet(path)
 
-    q = run_stream_to_memory(spark, path, df.schema, query_name="sd_test")
+    q = drain_to_memory(stream_unit_dedup(spark, path, df.schema,
+                                          bounded_state=False), "sd_test")
     q.awaitTermination(120)
     streamed = spark.sql("select norm_unit from sd_test")
     stream_units = {bytes(r["norm_unit"]) for r in streamed.collect()}
@@ -37,13 +38,14 @@ def test_stateful_host_stats(spark, tmp_path):
     scalar-kernel recount: docs, units, bytes, and the distinct-unit
     estimate of a sketch built from scalar FNV-1a unit hashes."""
     from corpus_dedup_spark.streaming.stateful import (
-        SKETCH_BITS, _linear_count, run_host_stats_to_memory)
+        SKETCH_BITS, _linear_count, stream_host_stats)
 
     df, _, _ = pages_spark(spark, n_docs=80, seed=9)
     path = str(tmp_path / "pages_state")
     df.write.mode("overwrite").parquet(path)
 
-    q = run_host_stats_to_memory(spark, path, df.schema, query_name="hs_test")
+    q = drain_to_memory(stream_host_stats(spark, path, df.schema), "hs_test",
+                        output_mode="update")
     q.awaitTermination(180)
     got = {r["host"]: r for r in spark.sql(
         "select * from hs_test").collect()}

@@ -11,7 +11,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from corpus_dedup_spark import kernel
-from corpus_dedup_spark.sources.pages import pages_spark
+from tests.helpers import pages_spark
 from corpus_dedup_spark.streaming.stream_dedup import stream_unit_dedup
 
 ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."

@@ -3,8 +3,7 @@
 import pyspark.sql.functions as F
 import pytest
 
-from corpus_dedup_spark.functions.text import (content_fingerprint_expr,
-                                               lang_id_expr,
+from corpus_dedup_spark.functions.text import (lang_id_expr,
                                                quality_score_expr,
                                                rolling_fingerprint_udf,
                                                text_profile, token_count_bpe,
@@ -67,10 +66,9 @@ def test_fingerprints_stable_under_whitespace(spark):
     df = spark.createDataFrame(
         [("a", "hello   world\nfoo"), ("b", "hello world foo"), ("c", "different")],
         ["id", "text"])
-    rows = df.select("id", content_fingerprint_expr(F.col("text")),
-                     rolling_fingerprint_udf(F.col("text")).alias("roll")).collect()
+    rows = df.select("id", rolling_fingerprint_udf(F.col("text")).alias("roll")
+                     ).collect()
     by_id = {r["id"]: r for r in rows}
-    assert by_id["a"]["fingerprint"] == by_id["b"]["fingerprint"]
     assert by_id["a"]["roll"] == by_id["b"]["roll"]
     assert by_id["a"]["roll"] != by_id["c"]["roll"]
 
