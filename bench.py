@@ -10,8 +10,8 @@ first-wins dedup → reassembly) plus the near-dup LSH+CC pipeline, over a deter
 synthetic web-pages table sized proportionally to sf (cached under .bench_cache/).
 Also reports docs/s and exact-pair recall as extra keys.
 
-Scaling evidence (N→4N cores): run `python bench.py --cores 8` and `--cores 32`
-on the same input; see BENCH.md.
+Scaling evidence (1→4 executors): run two `--master local-cluster[N,1,2048]`
+commands as the two arms of `scripts/ab.py`; see that script and SCALE.md.
 """
 
 from __future__ import annotations

@@ -11,21 +11,23 @@ window occurs at ≥ 2 corpus positions, and the maximal duplicated spans are th
 unions of overlapping duplicated windows. That makes the operator three shuffles,
 none of which ever materializes anything super-linear:
 
-1. **hash prefilter** (8-byte rows): group the per-position ``xxhash64(window)``
-   values, keep hashes seen ≥ 2 times. At W=40+ almost every window is unique,
-   so the surviving set is tiny and AQE broadcasts it back onto the stream —
-   the full W-byte window text of *unique* positions never crosses the wire.
-2. **content confirm** (survivors only): count per exact window content
-   (hash-prefixed key, same comparator trick as the keeper agg) — a hash
-   collision cannot fabricate a duplicate (quirk Q6: hashes accelerate, content
-   decides).
+1. **hash prefilter** (8-byte rows): group the per-position rolling window
+   hashes (the search hash of ``build_fingerprint_index``, over the raw,
+   unsquashed text), keep hashes seen ≥ 2 times. At W=40+ almost every window
+   is unique, so the surviving set is tiny and AQE broadcasts it back onto the
+   stream — the full W-byte window text of *unique* positions never crosses
+   the wire.
+2. **content confirm** (survivors only): cut each surviving window's text
+   with ``substring`` and count per exact window content (hash-prefixed key,
+   same comparator trick as the keeper agg) — a hash collision cannot
+   fabricate a duplicate (quirk Q6: hashes accelerate, content decides).
 3. **island merge** (duplicated positions only): per-document sort of the
    duplicated start positions; two windows [i,i+W) and [j,j+W) belong to one
    span iff j-i ≤ W, so a running ``sum(pos - lag(pos) > W)`` labels maximal
-   spans — the gaps-and-islands plan, no UDF anywhere in the operator.
+   spans — the gaps-and-islands plan.
 
-Window generation itself is pure JVM (``explode(transform(sequence(...)))``,
-whole-stage codegen) — stride 1 over codepoints, the exact Lee et al. grain.
+Windows are stride 1 over codepoints, the exact Lee et al. grain. The only
+Python in the operator is the vectorized rolling-hash pass of step 1.
 """
 
 from __future__ import annotations
@@ -33,23 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _windows(docs: DataFrame, window: int, id_col: str, text_col: str) -> DataFrame:
-    """(id, pos, win): every codepoint window of length ``window``, 0-based pos."""
-    return (
-        docs.filter(F.length(text_col) >= window)
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, length({text_col}) - {int(window)}), "
-                    f"i -> struct(i AS pos, "
-                    f"substring({text_col}, i + 1, {int(window)}) AS win))"
-                )
-            ).alias("w"),
-        )
-        .select(id_col, F.col("w.pos").alias("pos"), F.col("w.win").alias("win"))
-    )
+from corpus_dedup_spark.operators.search import (build_fingerprint_index,
+                                                 explode_fingerprints)
 
 
 def duplicate_substring_spans(
@@ -57,7 +44,6 @@ def duplicate_substring_spans(
     window: int = 40,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_prefilter: bool = True,
 ) -> DataFrame:
     """Maximal duplicated substring spans of length ≥ ``window`` per document.
 
@@ -68,52 +54,41 @@ def duplicate_substring_spans(
     half-open [span_start, span_end) codepoint offsets; every span has
     span_len ≥ window by construction.
 
-    ``hash_prefilter`` (default on) is the 100 TB lever: per-position hashes
-    come from the O(n) vectorized rolling-hash kernel (the same
-    ``build_fingerprint_index`` pass the search mode persists — ref
+    Per-position hashes come from the O(n) vectorized rolling-hash kernel
+    (the same ``build_fingerprint_index`` pass the search mode persists — ref
     src/search_mode.c:98-149), so window *text* is never materialized for a
-    position whose hash is unique: the JVM explode would copy O(n·W) window
-    bytes per document just to hash them (and the hot-join replay paid it
-    twice — measured 4.0 s at sf0.1/32c vs 1.3 s for the same-shape search
-    index build). The first shuffle carries only 8-byte hashes; text is cut
-    by ``substring`` only for hash-survivor positions, via one join against
-    the docs table. Turn the prefilter off for tiny inputs to skip the extra
-    stage (the fallback is the direct JVM window explode).
+    position whose hash is unique: a JVM window explode would copy O(n·W)
+    window bytes per document just to hash them (measured 4.0 s at sf0.1/32c
+    vs 1.3 s for the same-shape search index build). The first shuffle
+    carries only 8-byte hashes; text is cut by ``substring`` only for
+    hash-survivor positions, via one join against the docs table.
     """
-    if hash_prefilter:
-        from corpus_dedup_spark.operators.search import (
-            build_fingerprint_index, explode_fingerprints)
-
-        # persisted: the posting arrays feed BOTH the hot-hash agg and the
-        # survivor join — without the persist the kernel pass would run twice
-        # (same precedent as minhash_lsh.near_dup_edges' features persist).
-        # r6: the index is cached in its per-document ARRAY form (~n_docs
-        # rows, not ~n_chars rows — the exploded cache was the operator's
-        # single biggest cost); both consumers explode it lazily inside
-        # whole-stage codegen.
-        pidx = build_fingerprint_index(docs.select(id_col, text_col),
-                                       window=window, id_col=id_col,
-                                       text_col=text_col, squash=False).persist()
-        ph = explode_fingerprints(pidx, id_col).withColumnRenamed("whash", "_h")
-        hot = (
-            ph.groupBy("_h")
-            .agg(F.count("*").alias("_c"))
-            .filter(F.col("_c") > 1)
-            .select("_h")
+    # persisted: the posting arrays feed BOTH the hot-hash agg and the
+    # survivor join — without the persist the kernel pass would run twice
+    # (same precedent as minhash_lsh.near_dup_edges' features persist).
+    # r6: the index is cached in its per-document ARRAY form (~n_docs
+    # rows, not ~n_chars rows — the exploded cache was the operator's
+    # single biggest cost); both consumers explode it lazily inside
+    # whole-stage codegen.
+    pidx = build_fingerprint_index(docs.select(id_col, text_col),
+                                   window=window, id_col=id_col,
+                                   text_col=text_col, squash=False).persist()
+    ph = explode_fingerprints(pidx, id_col).withColumnRenamed("whash", "_h")
+    hot = (
+        ph.groupBy("_h")
+        .agg(F.count("*").alias("_c"))
+        .filter(F.col("_c") > 1)
+        .select("_h")
+    )
+    wins = (
+        ph.join(hot, "_h")
+        .join(docs.select(id_col, text_col), id_col)
+        .select(
+            id_col, "pos", "_h",
+            F.expr(f"substring({text_col}, pos + 1, {int(window)})")
+             .alias("win"),
         )
-        wins = (
-            ph.join(hot, "_h")
-            .join(docs.select(id_col, text_col), id_col)
-            .select(
-                id_col, "pos", "_h",
-                F.expr(f"substring({text_col}, pos + 1, {int(window)})")
-                 .alias("win"),
-            )
-        )
-    else:
-        wins = _windows(docs, window, id_col, text_col).withColumn(
-            "_h", F.xxhash64("win")
-        )
+    )
     dup_pos = (
         wins.withColumn("_c", F.count("*").over(Window.partitionBy("_h", "win")))
         .filter(F.col("_c") > 1)

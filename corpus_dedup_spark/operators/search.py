@@ -48,8 +48,7 @@ def build_fingerprint_index(pages: DataFrame, window: int, id_col: str = "url",
     """
     from corpus_dedup_spark.functions.layout import fan_out
 
-    fps = make_window_fingerprints_udf(window) if squash else \
-        _raw_fingerprints_udf(window)
+    fps = make_window_fingerprints_udf(window, squash=squash)
     # layout repair: the rolling-hash UDF lives above the scan; a single-split
     # input (the driver's one-row-group parquet) would otherwise hash the
     # whole corpus in ONE task. No-op when the scan already matches the
@@ -65,30 +64,6 @@ def explode_fingerprints(index: DataFrame, id_col: str = "url") -> DataFrame:
     return index.select(
         id_col, F.posexplode("fps").alias("pos", "whash")
     )
-
-
-def _raw_fingerprints_udf(window: int):
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    @pandas_udf(ArrayType(LongType()))
-    def window_fps(texts: pd.Series) -> pd.Series:
-        out = []
-        empty = np.empty(0, dtype=np.int64)
-        for t in texts:
-            cps = kernel.utf8_decode_buffer((t or "").encode("utf-8"))
-            n = len(cps)
-            if n < window:
-                out.append(empty)
-                continue
-            prefix, pow_ = kernel.rolling_prefix(cps, kernel.SEARCH_HASH_BASE, add=1)
-            with np.errstate(over="ignore"):
-                w = prefix[window:] - prefix[:-window] * pow_[window]
-            out.append(w.view(np.int64))
-        return pd.Series(out)
-
-    # pinned to one evaluation, as in make_window_fingerprints_udf
-    return window_fps.asNondeterministic()
 
 
 def search(index: DataFrame, pages: DataFrame, query: str, id_col: str = "url",

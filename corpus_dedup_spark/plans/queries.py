@@ -285,16 +285,13 @@ FROM documents
 # ---------------------------------------------------------------------------
 
 def q_substring_search(spark, sf_dir):
-    import numpy as np
-
     from corpus_dedup_spark import kernel
     from corpus_dedup_spark.functions.udfs import make_window_match_positions_udf
+    from corpus_dedup_spark.operators.search import query_hash
 
     q = SEARCH_QUERY
-    q_cps = kernel.utf8_decode_buffer(q.encode())
-    qlen = len(q_cps)
-    q_prefix, _ = kernel.rolling_prefix(q_cps, kernel.SEARCH_HASH_BASE, add=1)
-    q_hash = int(np.uint64(q_prefix[qlen]).view(np.int64))
+    qlen = len(kernel.utf8_decode_buffer(q.encode()))
+    q_hash = query_hash(q)
 
     # fan out: the fingerprint UDF runs above the (single-split) scan —
     # serial without layout repair. r6: the hash probe is fused into the

@@ -1,8 +1,8 @@
 """ExactSubstr duplicate-span detection (operators/exact_substr.py).
 
 Planted-truth span boundaries, the island-merge edge cases (touching vs gapped
-windows, self-repetition), hash-prefilter on/off parity, and a naive
-Python-oracle property check on deterministic pseudo-random corpora.
+windows, self-repetition), and a naive Python-oracle property check on
+deterministic pseudo-random and spliced corpora.
 """
 
 import random
@@ -16,9 +16,9 @@ from corpus_dedup_spark.operators.exact_substr import (cut_duplicate_spans,
 W = 8
 
 
-def _spans(spark, docs, window=W, **kw):
+def _spans(spark, docs, window=W):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    rows = duplicate_substring_spans(df, window=window, id_col="doc_id", **kw).collect()
+    rows = duplicate_substring_spans(df, window=window, id_col="doc_id").collect()
     return sorted((r.doc_id, r.span_start, r.span_end, r.span_len) for r in rows)
 
 
@@ -90,16 +90,16 @@ def test_two_spans_merge_when_gap_le_window(spark):
     assert (2, 2, 10, 8) in got and (2, 13, 21, 8) in got
 
 
-def test_hash_prefilter_parity(spark):
+def _spliced_corpus():
+    """Random docs over a 6-letter alphabet plus four docs spliced from two of
+    them each: long cross-document duplicates on top of organic ones."""
     rnd = random.Random(7)
     alpha = "abcdef"
     base = ["".join(rnd.choice(alpha) for _ in range(60)) for _ in range(12)]
     docs = [(i, t) for i, t in enumerate(base)]
     docs += [(100 + i, base[i][10:40] + base[(i + 1) % 12][5:35])
              for i in range(0, 12, 3)]
-    a = _spans(spark, docs, hash_prefilter=True)
-    b = _spans(spark, docs, hash_prefilter=False)
-    assert a == b and a  # identical and non-vacuous
+    return docs
 
 
 def test_matches_naive_oracle_random(spark):
@@ -108,6 +108,9 @@ def test_matches_naive_oracle_random(spark):
     docs = [(i, "".join(rnd.choice(alpha) for _ in range(rnd.randint(0, 50))))
             for i in range(30)]
     assert _spans(spark, docs) == naive_spans(docs, W)
+    spliced = _spliced_corpus()
+    expected = naive_spans(spliced, W)
+    assert expected and _spans(spark, spliced) == expected
 
 
 def test_span_stats_accounting(spark):
@@ -174,3 +177,5 @@ def test_naive_oracle_other_windows(spark, window):
     docs = [(i, "".join(rnd.choice("abc") for _ in range(rnd.randint(0, 40))))
             for i in range(20)]
     assert _spans(spark, docs, window=window) == naive_spans(docs, window)
+    spliced = _spliced_corpus()
+    assert _spans(spark, spliced, window=window) == naive_spans(spliced, window)
